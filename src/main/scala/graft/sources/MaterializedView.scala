@@ -150,7 +150,8 @@ object MaterializedView {
           // a tag-only base bump (new version, zero new data dirs)
           // must advance the watermark, not crash an empty-path read
           if (deltaDirs.isEmpty) Snapshots.readVersion(spark, mvTable, mvV)
-          else foldInto(aggregate(spark.read.parquet(deltaDirs: _*), keys, sums, mins, maxs))
+          else foldInto(aggregate(Snapshots.readDirs(spark, baseTable, curV, deltaDirs),
+            keys, sums, mins, maxs))
         } else if (mins.isEmpty && maxs.isEmpty) {
           // history REWRITTEN under the watermark (DML / merge /
           // compaction): counts and exact-decimal sums are ABELIAN, so
@@ -286,7 +287,7 @@ object MaterializedView {
           // must advance the watermark, not crash an empty-path read
           if (deltaDirs.isEmpty) Snapshots.readVersion(spark, mvTable, mvV)
           else Snapshots.readVersion(spark, mvTable, mvV)
-            .unionByName(agg(spark.read.parquet(deltaDirs: _*)))
+            .unionByName(agg(Snapshots.readDirs(spark, baseTable, curV, deltaDirs)))
             .groupBy(keys.map(col): _*)
             .agg(expr("hll_union_agg(sk)").as("sk"))
         } else {

@@ -20,8 +20,19 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * {{{
   *   table/
   *     data/<version>-<nonce>/part-*.parquet   (immutable)
+  *     cdc/<nonce>/part-*.parquet              (DML change-row sidecars)
   *     meta/v<N>.manifest                      (one data dir per line)
   * }}}
+  *
+  * Besides its data dirs, a manifest carries '#'-prefixed tag lines.
+  * One of them, `#schema <json>`, is the version's committed read
+  * schema: every commit writes it (inherited from the predecessor, or
+  * read once off the footer of the first staged parquet part), and
+  * every read of a committed version applies it, so no read runs
+  * Spark's schema-inference job. Layouts the footer cannot describe
+  * (partitioned sub-directories, non-parquet caches) write no line,
+  * and their reads — like those of manifests written before the line
+  * existed — fall back to inference.
   *
   * Concurrency (optimistic, lock-free): the commit point is the
   * CREATION of `vN.manifest`, done with an atomic hard link —
@@ -96,19 +107,66 @@ object Snapshots {
     * atomic create-exclusive. `tags` are provenance comment lines
     * ('#'-prefixed, ignored by [[manifestDirs]]) committed ATOMICALLY
     * with the version — the exactly-once anchor for streaming ingest.
+    * A claim whose tags carry no schema line records the one its dirs'
+    * footers declare ([[footerSchema]]), so every commit path writes it.
     */
   private def claimManifest(table: String, version: Int, dirs: Seq[String],
       tags: Seq[String] = Nil): Boolean = {
     Files.createDirectories(meta(table))
+    val all =
+      if (tags.exists(_.startsWith(SchemaTagPrefix))) tags
+      else tags ++ footerSchema(dirs).map(st => SchemaTagPrefix + st.json)
     val tmp = meta(table).resolve(s".v$version-${java.util.UUID.randomUUID}.tmp")
     Files.write(tmp,
-      (tags.map("#" + _) ++ dirs).mkString("\n").getBytes(StandardCharsets.UTF_8))
+      (all.map("#" + _) ++ dirs).mkString("\n").getBytes(StandardCharsets.UTF_8))
     try {
       Files.createLink(meta(table).resolve(s"v$version.manifest"), tmp)
       true
     } catch {
       case _: java.nio.file.FileAlreadyExistsException => false
     } finally Files.deleteIfExists(tmp)
+  }
+
+  /** Footer key under which Spark's parquet writer stores the written
+    * Spark schema — the key Spark's own schema inference reads first.
+    */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The read schema Spark would infer for `dirs`, read on the driver
+    * instead of in an inference job: the Spark schema the first data
+    * file in path order (the file inference samples) declares in its
+    * footer, all fields nullable as Spark serves file sources. None —
+    * the commit then writes no schema line and reads keep inferring —
+    * for layouts a footer cannot describe: partition sub-directories
+    * (their columns live in the paths), non-parquet files, or files
+    * whose writer recorded no Spark schema.
+    */
+  private def footerSchema(dirs: Seq[String]): Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.spark.sql.types.{DataType, StructType}
+    def hidden(p: Path) = {
+      val n = p.getFileName.toString
+      n.startsWith("_") || n.startsWith(".")
+    }
+    def declared(f: Path): Option[String] = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        new org.apache.parquet.io.LocalInputFile(f),
+        org.apache.parquet.ParquetReadOptions.builder()
+          .withMetadataFilter(
+            org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+          .build())
+      try Option(r.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
+      finally r.close()
+    }
+    // an unreadable dir or footer is the reads' problem, never the commit's
+    scala.util.Try {
+      val parts = dirs.map(Paths.get(_)).filter(Files.isDirectory(_))
+        .flatMap(d => listDir(d).filterNot(hidden))
+      if (parts.exists(p => Files.isDirectory(p) ||
+          !p.getFileName.toString.endsWith(".parquet"))) None
+      else parts.map(_.toAbsolutePath).sortBy(_.toString).headOption
+        .flatMap(declared).map(DataType.fromJson)
+        .collect { case st: StructType => StructType(st.fields.map(_.copy(nullable = true))) }
+    }.toOption.flatten
   }
 
   private def writeData(df: DataFrame, table: String): String = {
@@ -183,7 +241,8 @@ object Snapshots {
     * so a plain append after an evolution cannot silently revert the
     * table to footer-inferred schema. Content-REPLACING commits
     * (the overwrite family, index builds, initial clustered writes)
-    * pass false: their own data defines the schema afresh.
+    * pass false: their own data defines the schema afresh, read off
+    * its footer at the claim ([[claimManifest]]).
     */
   private def commitLoopDyn(table: String, dirsFor: Int => Seq[String],
       tagsFor: Int => Seq[String],
@@ -311,26 +370,26 @@ object Snapshots {
     * semantics contract. Both forms commit a CDC sidecar (the deleted
     * — for updates, also the replacement — rows) so downstream change
     * feeds read O(changed rows), never the rewritten table twice.
+    * Both commit through [[commitRewrite]]'s head CAS, so a racing
+    * append is re-read and filtered, never dropped.
     */
   def deleteWhere(spark: SparkSession, table: String,
       cond: org.apache.spark.sql.Column): Int = {
     // SQL DELETE semantics: rows where cond is NULL are KEPT (a bare
     // where(!cond) would drop them — NOT NULL is NULL, filtered out).
     // Schema-PRESERVING commit: a DML rewrite keeps the table's
-    // committed schema, so re-carry the head's schema tags — routing
-    // through plain commitOverwrite would silently drop them and
-    // downstream CDC reads would fall back to raw footer sampling.
+    // committed schema, so re-carry the head's schema tags.
     // ONE split write stages kept rows (the new data dir) and deleted
     // rows (the CDC sidecar) together — same job as the pre-sidecar
     // rewrite.
-    val cur = currentVersion(table)
-    val df = read(spark, table)
     val hit = org.apache.spark.sql.functions.coalesce(
       cond, org.apache.spark.sql.functions.lit(false))
-    val (dataDir, delDir) = writeSplit(df.where(!hit), df.where(hit), table)
-    commitLoop(table, _ => Seq(dataDir),
-      tags = schemaMetaTags(table, cur) :+ (CdcDelTag + delDir),
-      inheritSchema = false)
+    commitRewrite(table, "deleteWhere") { cur =>
+      val df = readVersion(spark, table, cur)
+      val (dataDir, delDir) = writeSplit(df.where(!hit), df.where(hit), table)
+      (Seq(dataDir), schemaMetaTags(table, cur) :+ (CdcDelTag + delDir),
+        Seq(dataDir, delDir))
+    }
   }
 
   /** See [[deleteWhere]]: conditional column replacement as a new
@@ -347,24 +406,47 @@ object Snapshots {
       cond: org.apache.spark.sql.Column, column: String,
       value: org.apache.spark.sql.Column): Int = {
     import org.apache.spark.sql.functions.{coalesce, lit, when}
-    val cur = currentVersion(table)
-    val df = read(spark, table)
     def upd(frame: DataFrame) =
       frame.withColumn(column, when(cond, value).otherwise(frame(column)))
-    if (upd(df).schema.map(_.dataType) != df.schema.map(_.dataType)) {
-      // type-coercing update: every row's column changes type — the
-      // whole table is the delta, one rewrite, sidecars add nothing
-      return commitOverwriteTagged(upd(df), table,
-        schemaMetaTags(table, cur))
-    }
     val hit = coalesce(cond, lit(false))
-    val (keptDir, delDir) = writeSplit(df.where(!hit), df.where(hit), table)
-    val insDir = writeData(
-      upd(committedReader(spark, table, cur).parquet(delDir)), table)
-    commitLoop(table, _ => Seq(keptDir, insDir),
-      tags = schemaMetaTags(table, cur) ++
-        Seq(CdcDelTag + delDir, CdcInsTag + insDir),
-      inheritSchema = false)
+    commitRewrite(table, "updateWhere") { cur =>
+      val df = readVersion(spark, table, cur)
+      if (upd(df).schema.map(_.dataType) != df.schema.map(_.dataType)) {
+        // type-coercing update: every row's column changes type — the
+        // whole table is the delta, one rewrite, sidecars add nothing;
+        // the new type is read off the rewrite, the tombstones carry
+        val dir = writeData(upd(df), table)
+        (Seq(dir), droppedMetaTags(table, cur), Seq(dir))
+      } else {
+        val (keptDir, delDir) = writeSplit(df.where(!hit), df.where(hit), table)
+        val insDir = writeData(upd(readDirs(spark, table, cur, Seq(delDir))), table)
+        (Seq(keptDir, insDir), schemaMetaTags(table, cur) ++
+          Seq(CdcDelTag + delDir, CdcInsTag + insDir), Seq(keptDir, delDir, insDir))
+      }
+    }
+  }
+
+  /** Head-CAS commit of a whole-table rewrite: `stage(cur)` stages
+    * content derived from version `cur` and returns (the new manifest's
+    * dirs, its tags, every dir it staged). The exact claim of cur + 1
+    * is the CAS ([[commitExactIf]]); a lost race deletes the staged
+    * dirs and re-derives from the new head, so a commit racing the
+    * rewrite — an append, say — is re-read instead of dropped.
+    */
+  private def commitRewrite(table: String, what: String)(
+      stage: Int => (Seq[String], Seq[String], Seq[String])): Int = {
+    var attempt = 0
+    while (attempt < 20) {
+      attempt += 1
+      val cur = currentVersion(table)
+      require(cur > 0, s"no committed version at $table")
+      val (dirs, tags, staged) = stage(cur)
+      commitExactIf(table, cur, dirs, tags, inheritSchema = false) match {
+        case Some(v) => return v
+        case None => staged.foreach(deleteDataDir)
+      }
+    }
+    sys.error(s"$what on $table lost $attempt head races")
   }
 
   /** FILE-LEVEL selective DML: rewrite ONLY the data directories that
@@ -457,6 +539,14 @@ object Snapshots {
     schemaOf(table, version)
       .map(st => spark.read.schema(st)).getOrElse(spark.read)
 
+  /** Read some of version `version`'s data (or sidecar) dirs in its
+    * committed schema — for callers that scan a subset of a manifest,
+    * such as a fold reading only the dirs appended since its watermark.
+    */
+  private[sources] def readDirs(spark: SparkSession, table: String, version: Int,
+      dirs: Seq[String]): DataFrame =
+    committedReader(spark, table, version).parquet(dirs: _*)
+
   private def probeTouched(reader: org.apache.spark.sql.DataFrameReader,
       dirs: Seq[String], probe: DataFrame => DataFrame): Seq[String] = {
     import org.apache.spark.sql.functions.{col, input_file_name, regexp_replace}
@@ -527,10 +617,13 @@ object Snapshots {
       if (update.isEmpty || coercing) Seq.empty[String]
       else Seq(writeData(
         upd(committedReader(spark, table, cur).parquet(dels: _*)), table))
-    val cdcTags =
-      if (coercing) Seq.empty
+    // a coercing rewrite reads its schema off the files (the pre-update
+    // one would mis-type the rewritten dirs); tombstones carry either way
+    val tags =
+      if (coercing) droppedMetaTags(table, cur)
       else dels.map(CdcDelTag + _) ++ insDirs.map(CdcInsTag + _)
-    val out = commitTransformIf(table, requires = touched, tags = cdcTags)(
+    val out = commitTransformIf(table, requires = touched, tags = tags,
+      inheritSchema = !coercing)(
       prev => prev.filterNot(touched.toSet) ++ kept ++ insDirs)
     // conflict abort: clean the staged rewrites (the mergeTagged /
     // compact convention) so retry loops don't accrete orphan dirs
@@ -864,9 +957,11 @@ object Snapshots {
     * existing data). Concurrent appenders serialize optimistically:
     * the loser of a version race retries on top of the winner's
     * manifest, so both data directories reach the final snapshot.
-    * Assumes `df` matches the table's schema (the common fast path —
-    * no metadata recorded); a batch carrying new columns must go
-    * through [[commitAppendEvolved]], which commits the union schema
+    * Assumes `df` matches the table's schema (the common fast path:
+    * the version re-commits its predecessor's schema line, or, on a
+    * table that has none yet, the one `df`'s written footer declares);
+    * a batch carrying new columns must go through
+    * [[commitAppendEvolved]], which commits the union schema
     * atomically with the version.
     */
   def commitAppend(df: DataFrame, table: String): Int = {
@@ -1176,9 +1271,10 @@ object Snapshots {
   private val SchemaTagPrefix = "schema "
   private val DroppedTagPrefix = "schemadropped "
 
-  /** The schema a version's manifest committed, if its commit was
-    * schema-aware ([[commitAppendEvolved]]). Resolution is one tiny
-    * manifest read — never a parquet-footer sweep.
+  /** The schema a version's manifest committed — every commit records
+    * one unless its layout is one [[footerSchema]] cannot describe, or
+    * the manifest predates the line. Resolution is one tiny manifest
+    * read — never a parquet-footer sweep.
     */
   def schemaOf(table: String, version: Int): Option[org.apache.spark.sql.types.StructType] = {
     val p = meta(table).resolve(s"v$version.manifest")
@@ -1217,6 +1313,13 @@ object Snapshots {
         l.startsWith("#" + DroppedTagPrefix))
       .map(_.stripPrefix("#"))
   }
+
+  /** Only the tombstone line of a version's schema metadata — for a
+    * rewrite that changes a column's type and so must derive the schema
+    * afresh while still refusing re-use of dropped names.
+    */
+  private def droppedMetaTags(table: String, version: Int): Seq[String] =
+    schemaMetaTags(table, version).filter(_.startsWith(DroppedTagPrefix))
 
   private def droppedTagFor(dropped: Set[String]): Seq[String] = {
     dropped.foreach(n => require(!n.contains(","),
@@ -1323,7 +1426,7 @@ object Snapshots {
     * not have stale compacted data grafted back on top.
     */
   def commitTransformIf(table: String, requires: Seq[String],
-      tags: Seq[String] = Nil)(
+      tags: Seq[String] = Nil, inheritSchema: Boolean = true)(
       f: Seq[String] => Seq[String]): Option[Int] = {
     // per attempt: pin ONE version, validate `requires` against ITS
     // manifest, and claim exactly cur+1 with content derived from that
@@ -1338,7 +1441,7 @@ object Snapshots {
       val cur = currentVersion(table)
       val dirs = if (cur == 0) Seq.empty[String] else manifestDirs(table, cur)
       if (!requires.forall(dirs.toSet.contains)) return None
-      commitExactIf(table, cur, f(dirs), tags) match {
+      commitExactIf(table, cur, f(dirs), tags, inheritSchema) match {
         case Some(v) => return Some(v)
         case None => () // claim race: re-pin and re-validate
       }
@@ -1363,16 +1466,14 @@ object Snapshots {
     readVersion(spark, table, currentVersion(table))
 
   /** Time travel: read the exact content of any committed version.
-    * A schema-aware commit's schema ([[schemaOf]]) is applied to the
-    * scan: files predating an evolved column serve null for it, files
-    * carrying since-dropped columns are pruned to the committed schema
-    * — both without rewriting a byte of data.
+    * The committed schema ([[schemaOf]]) is applied to the scan, so
+    * resolving the frame runs no inference job; files predating an
+    * evolved column serve null for it, files carrying since-dropped
+    * columns are pruned to the committed schema — both without
+    * rewriting a byte of data.
     */
   def readVersion(spark: SparkSession, table: String, version: Int): DataFrame =
-    schemaOf(table, version) match {
-      case Some(st) => spark.read.schema(st).parquet(manifestDirs(table, version): _*)
-      case None => spark.read.parquet(manifestDirs(table, version): _*)
-    }
+    readDirs(spark, table, version, manifestDirs(table, version))
 
   // ---- streaming ingest: exactly-once micro-batch commits ----
 
@@ -1888,7 +1989,7 @@ object Snapshots {
     val (clustered, deltas) = manifestDirs(table, cur).partition(isClustered)
     if (deltas.isEmpty) return cur
     val dir = stageDir(table)
-    Sources.writeZOrderedN(spark.read.parquet(deltas: _*), dir, zCols, files = files)
+    Sources.writeZOrderedN(readDirs(spark, table, cur, deltas), dir, zCols, files = files)
     markClustered(dir)
     // racing appenders may have added NEW deltas since we read `cur`:
     // keep any dirs we did not compact. Racing COMPACTORS/overwrites are
@@ -2052,9 +2153,10 @@ object Snapshots {
     */
   def compactFull(spark: SparkSession, table: String, zCols: Seq[String],
       files: Int = 16): Int = {
-    val snap = manifestDirs(table, currentVersion(table))
+    val cur = currentVersion(table)
+    val snap = manifestDirs(table, cur)
     val dir = stageDir(table)
-    Sources.writeZOrderedN(spark.read.parquet(snap: _*), dir, zCols, files = files)
+    Sources.writeZOrderedN(readDirs(spark, table, cur, snap), dir, zCols, files = files)
     markClustered(dir)
     // content-preserving: the change feed may skip this step
     commitTransformIf(table, snap, tags = Seq(CdcNoopTag))(dirs =>
@@ -2115,7 +2217,10 @@ object Snapshots {
   }
 
   /** Drop data directories unreachable from the retained manifests
-    * (keep the last `retain` versions). Returns deleted dir count.
+    * (keep the last `retain` versions), and the CDC sidecar dirs under
+    * `table/cdc/` that no retained manifest names in a change tag — so
+    * rows a DML erased leave the disk with the versions that still
+    * served them. Returns the deleted dir count (data and sidecar).
     *
     * Retention contract: after `vacuum(table, retain)` with current
     * version C, [[readVersion]] is guaranteed only for versions in
@@ -2129,8 +2234,12 @@ object Snapshots {
     */
   def vacuum(table: String, retain: Int = 1, graceMs: Long = 3600000L): Int = {
     val cur = currentVersion(table)
-    val keep = ((cur - retain + 1) to cur).filter(_ >= 1)
-      .flatMap(v => manifestDirs(table, v)).toSet
+    val retained = ((cur - retain + 1) to cur).filter(_ >= 1)
+    val keep = retained.flatMap(v => manifestDirs(table, v)).toSet
+    val keepCdc = retained.flatMap(v => versionTags(table, v)).collect {
+      case t if t.startsWith(CdcInsTag) => t.drop(CdcInsTag.length)
+      case t if t.startsWith(CdcDelTag) => t.drop(CdcDelTag.length)
+    }.toSet
     val dataRoot = Paths.get(table, "data")
     if (!Files.exists(dataRoot)) return 0
     // preserve ingest tags BEFORE retiring the manifests that carry
@@ -2152,19 +2261,23 @@ object Snapshots {
     (1 to cur - retain).foreach { v =>
       Files.deleteIfExists(meta(table).resolve(s"v$v.manifest"))
     }
-    // a data dir outside every retained manifest is EITHER garbage OR
-    // a concurrent commit's staged-but-not-yet-published directory —
+    // a dir outside every retained manifest is EITHER garbage OR a
+    // concurrent commit's staged-but-not-yet-published directory —
     // deleting the latter would let the in-flight commit publish a
     // manifest referencing missing files (its conflict check only
     // covers the dirs it read, not its own staging). A grace window
     // on the dir's mtime disambiguates: anything actively being
     // staged is recent; true garbage has aged past any commit's
-    // lifetime (the Iceberg remove-orphan-files convention).
+    // lifetime (the Iceberg remove-orphan-files convention). Sidecars
+    // are staged the same way, so the same rule holds for them.
     val cutoff = System.currentTimeMillis() - graceMs
-    val doomed = listDir(dataRoot).filterNot(p => keep.contains(p.toString))
-      .filter(p =>
-        try Files.getLastModifiedTime(p).toMillis < cutoff
-        catch { case _: java.io.IOException => false })
+    def sweep(root: Path, keep: Set[String]): Seq[Path] =
+      if (!Files.exists(root)) Nil
+      else listDir(root).filterNot(p => keep.contains(p.toString))
+        .filter(p =>
+          try Files.getLastModifiedTime(p).toMillis < cutoff
+          catch { case _: java.io.IOException => false })
+    val doomed = sweep(dataRoot, keep) ++ sweep(Paths.get(table, "cdc"), keepCdc)
     doomed.foreach(p => deleteDataDir(p.toString))
     doomed.size
   }

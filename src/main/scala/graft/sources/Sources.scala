@@ -178,7 +178,7 @@ object SourceQueries {
       val ver = Snapshots.ensureIndex(path, fp) { out =>
         Sources.writeZOrdered(li, out, "l_partkey", "l_suppkey")
       }
-      s.read.parquet(Snapshots.versionDirs(path, ver): _*)
+      Snapshots.readVersion(s, path, ver)
         .where(col("l_suppkey").between(2, 5))
         .groupBy("l_suppkey")
         .agg(count(lit(1)).as("n"), Portable.dsum(col("l_extendedprice")).as("sum_price"))

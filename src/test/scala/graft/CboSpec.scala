@@ -12,6 +12,11 @@ import org.apache.spark.sql.functions._
 class CboSpec extends SparkSpec {
 
   private def managed(name: String, table: String): Unit = {
+    // an earlier run in this checkout leaves the table's directory in
+    // the warehouse but not in this session's catalog, and saveAsTable
+    // refuses to write over it
+    spark.sql(s"DROP TABLE IF EXISTS $name")
+    graft.sources.Snapshots.deleteRecursively(s"${Roots.scratch}/spark-warehouse/$name")
     Tables.load(spark, sfDir, table).write.mode("overwrite").saveAsTable(name)
     spark.sql(s"ANALYZE TABLE $name COMPUTE STATISTICS FOR ALL COLUMNS")
   }

@@ -419,10 +419,10 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
-  test("served IVF+PQ equals the in-query trainer, prunes codes, and is faster") {
+  test("served IVF+PQ equals the in-query trainer, prunes codes, and runs fewer jobs") {
     val dir = sfDir
-    // first call may build the index; the A/B below times the SERVED
-    // steady state against the in-query trainer in the same session
+    // first call may build the index; the A/B below counts the SERVED
+    // steady state's Spark jobs against the in-query trainer's
     val served = SparkEntry.queries("s_knn_ivfpq")(spark, dir)
     val plan = physicalPlan(served)
     assert("""PartitionFilters: \[cid#\d+ IN \(""".r.findFirstIn(plan).isDefined,
@@ -433,25 +433,23 @@ class PipelineSpec extends SparkSpec {
     assert(rows(served) == rows(trained),
       "serving the persisted artifacts must be bit-identical to training in-query")
     // same-session A/B: serving skips the coarse Lloyd round and the
-    // corpus encode entirely
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    val tServe = time(SparkEntry.queries("s_knn_ivfpq")(spark, dir).collect())
-    val tTrain = time(Similarity.ivfPqInQuery(spark, dir).collect())
-    info(f"ivfpq: served $tServe%.2f s vs in-query trainer $tTrain%.2f s")
-    assert(tServe < tTrain,
-      f"serving must beat in-query training: $tServe%.2f s vs $tTrain%.2f s")
+    // corpus encode entirely, so it launches fewer jobs (a job count,
+    // unlike wall-clock, does not move with the host's load)
+    val jServe = jobsDuring(SparkEntry.queries("s_knn_ivfpq")(spark, dir).collect())
+    val jTrain = jobsDuring(Similarity.ivfPqInQuery(spark, dir).collect())
+    info(s"ivfpq: served $jServe jobs vs in-query trainer $jTrain jobs")
+    assert(jServe < jTrain,
+      s"serving must run fewer jobs than in-query training: $jServe vs $jTrain")
     // the trained-PQ pair: persisted codebooks + codes vs in-query Lloyd
     val pqServed = SparkEntry.queries("s_knn_pq_served")(spark, dir)
     val pqTrained = SparkEntry.queries("s_knn_pq_trained")(spark, dir)
     assert(rows(pqServed) == rows(pqTrained),
       "served trained-PQ must equal the in-query trainer bit-for-bit")
-    val tPqServe = time(SparkEntry.queries("s_knn_pq_served")(spark, dir).collect())
-    val tPqTrain = time(SparkEntry.queries("s_knn_pq_trained")(spark, dir).collect())
-    info(f"trained pq: served $tPqServe%.2f s vs in-query trainer $tPqTrain%.2f s")
-    assert(tPqServe < tPqTrain,
-      f"PQ serving must beat in-query training: $tPqServe%.2f s vs $tPqTrain%.2f s")
+    val jPqServe = jobsDuring(SparkEntry.queries("s_knn_pq_served")(spark, dir).collect())
+    val jPqTrain = jobsDuring(SparkEntry.queries("s_knn_pq_trained")(spark, dir).collect())
+    info(s"trained pq: served $jPqServe jobs vs in-query trainer $jPqTrain jobs")
+    assert(jPqServe < jPqTrain,
+      s"PQ serving must run fewer jobs than in-query training: $jPqServe vs $jPqTrain")
   }
 
   test("IVF+PQ code table maintains under appends: encode only the batch") {
@@ -1486,7 +1484,7 @@ class PipelineSpec extends SparkSpec {
       "incrementally maintained postings must serve identical results")
     // post-compaction layout: every dir in the head version is a
     // clustered run (no unclustered delta left to scan unpruned)
-    val root = "/root/repo/target/invidx/" +
+    val root = s"${Roots.scratch}/invidx/" +
       sfDir.replaceAll("[^A-Za-z0-9]", "_") + "/postings_clustered"
     import graft.sources.Snapshots
     val dirs = Snapshots.versionDirs(root, Snapshots.currentVersion(root))

@@ -348,20 +348,13 @@ class SourcesSpec extends SparkSpec {
       (1 until nDirs).foreach(i =>
         Snapshots.commitAppend(li.where(col("l_orderkey") % nDirs === i), table))
       assert(Snapshots.versionDirs(table, Snapshots.currentVersion(table)).size == nDirs)
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
+      var v = Option.empty[Int]
+      val jobs = jobsDuring {
+        v = Snapshots.deleteWhereSelective(spark, table, col("l_orderkey") === 17)
       }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val v = Snapshots.deleteWhereSelective(spark, table, col("l_orderkey") === 17)
-        Thread.sleep(1000) // listener bus is async; let job-start events drain
-        assert(v.isDefined)
-      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(v.isDefined)
       assert(Snapshots.read(spark, table).where(col("l_orderkey") === 17).count() == 0)
-      jobs.get()
+      jobs
     }
 
     // the O(1) claim itself: doubling the dir count must not grow the
@@ -1214,5 +1207,174 @@ class SourcesSpec extends SparkSpec {
     assert(est(Snapshots.read(spark, mv)) ==
       oneShot(ev.where(col("user_id") % 5 =!= 0)),
       "post-DML recompute diverged from the live corpus")
+  }
+
+  // ---- committed read schema: every commit writes the #schema line ----
+
+  private def nullable(st: org.apache.spark.sql.types.StructType) =
+    org.apache.spark.sql.types.StructType(st.fields.map(_.copy(nullable = true)))
+
+  private def headSchema(t: String) = {
+    import graft.sources.Snapshots
+    Snapshots.schemaOf(t, Snapshots.currentVersion(t))
+  }
+
+  test("every commit records its read schema; reads of it start no job") {
+    import graft.sources.Snapshots
+    val root = s"${Roots.scratch}/schema_line"
+    Snapshots.deleteRecursively(root)
+    val t = s"$root/base"
+    val o = Tables.load(spark, sfDir, "orders")
+      .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
+    val want = nullable(o.schema)
+    def check(what: String, table: String, expect: org.apache.spark.sql.types.StructType) = {
+      assert(headSchema(table).contains(expect), s"$what: ${headSchema(table)}")
+      // the recorded line is what Spark's own inference reads off the footers
+      val inferred = spark.read.parquet(
+        Snapshots.versionDirs(table, Snapshots.currentVersion(table)): _*).schema
+      assert(inferred == expect, s"$what: inference says $inferred")
+      assert(jobsDuring(Snapshots.read(spark, table)) == 0,
+        s"$what: resolving the read must not launch schema inference")
+    }
+    Snapshots.commitOverwrite(o.where(col("o_custkey") % 2 === 0), t)
+    check("commitOverwrite", t, want)
+    Snapshots.commitAppend(o.where(col("o_custkey") % 2 === 1), t)
+    check("commitAppend", t, want)
+    assert(Snapshots.deleteWhereSelective(spark, t, col("o_orderkey") === 1L).isDefined)
+    check("deleteWhereSelective", t, want)
+    assert(Snapshots.updateWhereSelective(spark, t,
+      col("o_orderkey") === 2L, "o_orderstatus", lit("X")).isDefined)
+    check("updateWhereSelective", t, want)
+    val z = s"$root/zbase"
+    Snapshots.commitClustered(o, z, Seq("o_orderkey", "o_custkey"), files = 4)
+    check("commitClustered", z, want)
+    val (idxT, _) = Snapshots.bloomSkipIndex(spark, t, "o_orderkey")
+    check("bloomSkipIndex", idxT, {
+      import org.apache.spark.sql.types._
+      StructType(Seq(StructField("file", StringType), StructField("bloom", BinaryType)))
+    })
+
+    // the point lookup over the built index: one job finds the hit
+    // files, one reads them — neither infers a schema
+    val key = o.select("o_orderkey").where(col("o_custkey") % 2 === 1)
+      .head().getLong(0)
+    assert(Snapshots.pointLookup(spark, t, "o_orderkey", key).count() == 1)
+    var got = Array.empty[org.apache.spark.sql.Row]
+    val jobs = jobsDuring {
+      got = Snapshots.pointLookup(spark, t, "o_orderkey", key).collect()
+    }
+    assert(got.length == 1 && got.head.getLong(0) == key)
+    assert(jobs == 2, s"a lookup over a built bloom index runs 2 jobs, ran $jobs")
+  }
+
+  test("manifests without the schema line read the same schema and rows by inference") {
+    import graft.sources.Snapshots
+    import java.nio.charset.StandardCharsets.UTF_8
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = s"${Roots.scratch}/schema_legacy"
+    Snapshots.deleteRecursively(root)
+    val t = s"$root/tagged"
+    val copy = s"$root/legacy"
+    val n = Tables.load(spark, sfDir, "nation")
+    Snapshots.commitOverwrite(n.where(col("n_regionkey") < 2), t)
+    Snapshots.commitAppend(n.where(col("n_regionkey") >= 2), t)
+    Snapshots.deleteWhere(spark, t, col("n_nationkey") === 3)
+    // a copy of the table as a writer before the schema line left it:
+    // same dirs (re-rooted), no #schema line in any manifest
+    val w = Files.walk(Paths.get(t))
+    try w.iterator().asScala.toList.foreach { p =>
+      val dst = Paths.get(copy).resolve(Paths.get(t).relativize(p))
+      if (Files.isDirectory(p)) Files.createDirectories(dst)
+      else if (p.getFileName.toString.endsWith(".manifest"))
+        Files.write(dst, Files.readAllLines(p, UTF_8).asScala
+          .filterNot(_.startsWith("#schema "))
+          .map(_.replace(t, copy)).mkString("\n").getBytes(UTF_8))
+      else Files.copy(p, dst)
+    } finally w.close()
+    val head = Snapshots.currentVersion(copy)
+    assert(Snapshots.schemaOf(copy, head).isEmpty)
+    assert(headSchema(t).nonEmpty)
+    assert(jobsDuring(Snapshots.read(spark, copy)) >= 1,
+      "an untagged manifest must still resolve its schema by inference")
+    val (a, b) = (Snapshots.read(spark, t), Snapshots.read(spark, copy))
+    assert(a.schema == b.schema)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    assert(rows(b) == rows(a) && b.count() == n.count() - 1)
+  }
+
+  test("a partitioned staged layout writes no schema line and serves its partition column") {
+    import graft.sources.Snapshots
+    val t = s"${Roots.scratch}/schema_partitioned"
+    Snapshots.deleteRecursively(t)
+    val o = Tables.load(spark, sfDir, "orders")
+      .select(col("o_orderkey"), (col("o_orderkey") % 3).as("p"))
+    val v = Snapshots.ensureIndex(t, "parts") { out => Snapshots.writeStaged(o, out, "p") }
+    assert(Snapshots.schemaOf(t, v).isEmpty,
+      "the footers do not hold the partition column, so no line is written")
+    val r = Snapshots.readVersion(spark, t, v)
+    assert(r.columns.toSet == Set("o_orderkey", "p"))
+    assert(r.count() == o.count())
+    assert(r.where(col("p") === 1L).count() == o.where(col("p") === 1L).count())
+  }
+
+  test("vacuum reclaims unreferenced CDC sidecars: no erased key left on disk") {
+    import graft.sources.Snapshots
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val t = s"${Roots.scratch}/vacuum_cdc"
+    Snapshots.deleteRecursively(t)
+    val o = Tables.load(spark, sfDir, "orders").select("o_orderkey", "o_custkey")
+    val erased = 7L
+    Snapshots.commitOverwrite(o.where(col("o_orderkey") % 2 === 0), t)
+    Snapshots.commitAppend(o.where(col("o_orderkey") % 2 === 1), t)
+    val vDel = Snapshots.deleteWhereSelective(spark, t, col("o_custkey") === erased)
+      .getOrElse(fail("selective delete aborted"))
+    def feed() = {
+      val (ins, del) = Snapshots.changesBetween(spark, t, vDel - 1, vDel)
+      (ins.collect().map(_.toSeq).toSet, del.collect().map(_.toSeq).toSet)
+    }
+    val before = feed()
+    assert(before._2.nonEmpty && before._2.forall(_(1) == erased))
+    // the delete's version is retained: its sidecar stays, its feed too
+    Snapshots.vacuum(t, retain = 2, graceMs = 0L)
+    assert(feed() == before, "vacuum changed the feed of a retained span")
+    def filesHoldingErased(): Seq[String] = {
+      val w = Files.walk(Paths.get(t))
+      val parts = try w.iterator().asScala.map(_.toString)
+        .filter(_.endsWith(".parquet")).toList finally w.close()
+      spark.read.parquet(parts: _*).where(col("o_custkey") === erased)
+        .select(input_file_name()).distinct().collect().map(_.getString(0)).toSeq
+    }
+    assert(filesHoldingErased().nonEmpty, "the retained versions still hold the erased rows")
+    // once no retained manifest names the delete, its sidecar goes too
+    Snapshots.commitAppend(o.where(col("o_orderkey") === -1L), t)
+    Snapshots.vacuum(t, retain = 1, graceMs = 0L)
+    assert(filesHoldingErased().isEmpty, "an erased key survived vacuum")
+    assert(Snapshots.read(spark, t).count() ==
+      o.where(col("o_custkey") =!= erased).count())
+  }
+
+  test("whole-table DML racing an append drops none of the appended rows") {
+    import spark.implicits._
+    import graft.sources.Snapshots
+    val t = s"${Roots.scratch}/dml_race"
+    for (round <- 1 to 3) {
+      Snapshots.deleteRecursively(t)
+      Snapshots.commitOverwrite(
+        (1L to 200L).map(k => (k, k % 10, "a")).toDF("k", "g", "s"), t)
+      val added = (1000L * round until 1000L * round + 50).map(k => (k, 1L, "a"))
+      // neither DML predicate matches an appended row
+      graft.Par.run(
+        () => Snapshots.commitAppend(added.toDF("k", "g", "s"), t),
+        () => Snapshots.deleteWhere(spark, t, col("g") === 0L && col("k") < 1000L),
+        () => Snapshots.updateWhere(spark, t, col("k") < 1000L, "s", lit("b")))
+      val got = Snapshots.read(spark, t).select("k", "s").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(added.forall { case (k, _, s) => got.get(k).contains(s) },
+        s"round $round: a racing DML dropped appended rows")
+      assert(got.size == 200 - 20 + 50, s"round $round: ${got.size} rows")
+      assert(got.count(_._2 == "b") == 180, s"round $round: the update was lost")
+    }
   }
 }

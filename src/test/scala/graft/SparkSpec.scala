@@ -16,6 +16,29 @@ trait SparkSpec extends AnyFunSuite {
     val plan = physicalPlan(df)
     assert(plan.contains(marker), s"expected '$marker' in plan:\n$plan")
   }
+
+  /** The number of Spark jobs `f` starts. The listener bus is drained
+    * before the counter attaches (no earlier action's events leak in)
+    * and after `f` returns (none of its own are missed), so the count
+    * is exact without sleeping.
+    */
+  def jobsDuring(f: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    org.apache.spark.GraftTestBus.drain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      f
+      org.apache.spark.GraftTestBus.drain(sc)
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {
