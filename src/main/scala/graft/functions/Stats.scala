@@ -355,7 +355,7 @@ object StatsQueries {
         val nds = cols.map(c => vals.select(col(s"v_$c").as("v"))
           .where(col("v").isNotNull).distinct()
           .agg(count(lit(1)).as(s"n_distinct_$c")))
-        // r16 A/B (r15-verdict item 3, tools/TableProfileAb): the
+        // r16 A/B (r15-verdict item 3, OPTIMIZATION_r16.md §5): the
         // union references `joined` 4×, so the STATIC plan duplicates
         // the aggregate tree (56 scans) — but runtime exchange reuse
         // DOES dedup it (same-window probe: shipped shape converges to

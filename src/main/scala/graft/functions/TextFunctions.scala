@@ -1157,21 +1157,17 @@ object TextFunctions {
     * the LSM/Delta pattern (reference analog: the B+ tree staying
     * consistent under Database.deleteRecord, reference index/
     * BPlusTree.java). CONCURRENT maintainers converge: the fold is a
-    * head-CAS cycle ([[graft.sources.Snapshots.foldThrough]]) — a
-    * racing walk that folded the same span first makes this one a
-    * no-op, never a double-append.
+    * [[graft.sources.Snapshots.foldThrough]].
     */
   def postingsMaintain(s: org.apache.spark.sql.SparkSession,
       baseTable: String, postTable: String): Int = {
     import graft.sources.Snapshots
-    val curV = Snapshots.currentVersion(baseTable)
-    require(curV > 0, s"base table $baseTable has no committed version")
-    Snapshots.foldThrough(postTable, PostThroughPrefix, curV,
-      recomputeWhen = lastV => !Snapshots.versionAvailable(baseTable, lastV))(
-      postingsOf(Snapshots.readVersion(s, baseTable, curV))) { lastV =>
-      val (ins, del) = Snapshots.changesBetween(s, baseTable, lastV, curV)
-      postingsOf(ins).unionByName(
-        postingsOf(del).withColumn("tf", -col("tf")))
+    Snapshots.foldThrough(baseTable, postTable, PostThroughPrefix) { f =>
+      f.replace(postingsOf(Snapshots.readVersion(s, baseTable, f.curV)), netted = true)
+    } { f =>
+      val (ins, del) = Snapshots.changesBetween(s, baseTable, f.lastV, f.curV)
+      f.append(postingsOf(ins).unionByName(
+        postingsOf(del).withColumn("tf", -col("tf"))))
     }
     // size-ratio compaction policy: a long DML sequence must not
     // accrete unbounded tombstone debt (serving is invariant)
@@ -1587,8 +1583,9 @@ object TextFunctions {
   def bm25Maintain(s: org.apache.spark.sql.SparkSession, baseTable: String,
       postT: String, dlT: String, totT: String): Unit = {
     import graft.sources.Snapshots
+    // one base version for all three tables, so one walk folds the set
+    // through the same span
     val curV = Snapshots.currentVersion(baseTable)
-    require(curV > 0, s"base table $baseTable has no committed version")
     def signedTotals(ins: org.apache.spark.sql.DataFrame,
         del: org.apache.spark.sql.DataFrame) =
       docLengths(ins).withColumn("sgn", lit(1L))
@@ -1601,17 +1598,17 @@ object TextFunctions {
     // watermark is behind (from their own lastV — no shared gate, no
     // double-fold); readers of a torn instant pin versions per table,
     // the snapshot-isolation contract. Each per-table fold is a
-    // head-CAS cycle (Snapshots.foldThrough), so two concurrent
-    // registry walks cannot double-append the same span's delta.
+    // Snapshots.foldThrough, so two concurrent registry walks cannot
+    // double-append the same span's delta.
     def fold(table: String,
         bootstrap: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
         delta: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =>
           org.apache.spark.sql.DataFrame): Unit = {
-      Snapshots.foldThrough(table, PostThroughPrefix, curV,
-          recomputeWhen = lastV => !Snapshots.versionAvailable(baseTable, lastV))(
-        bootstrap(Snapshots.readVersion(s, baseTable, curV))) { lastV =>
-        val (ins, del) = Snapshots.changesBetween(s, baseTable, lastV, curV)
-        delta(ins, del)
+      Snapshots.foldThrough(baseTable, table, PostThroughPrefix, Some(curV)) { f =>
+        f.replace(bootstrap(Snapshots.readVersion(s, baseTable, f.curV)), netted = true)
+      } { f =>
+        val (ins, del) = Snapshots.changesBetween(s, baseTable, f.lastV, f.curV)
+        f.append(delta(ins, del))
       }
       ()
     }
@@ -1650,8 +1647,8 @@ object TextFunctions {
     * over exactly the live corpus, so hash equality proves ranking
     * survives deletes without an index rebuild.
     */
-  /** Serve step of [[searchBm25Dml]], shared with the phase profiler
-    * (graft.tools.Bm25DmlAb): fold the tombstone-maintained table set
+  /** Serve step of [[searchBm25Dml]] (its phase profile:
+    * tools/bm25dml_ab_r11.txt): fold the tombstone-maintained table set
     * (net postings in the probed buckets, net doclens, summed scalar
     * partials) and rank.
     */

@@ -785,23 +785,19 @@ object Dedup {
     * reads just the dirs that entered/left the base manifest) and
     * APPENDS one delta dir; the index is never rewritten and the
     * corpus never re-signed. [[serveBandIndex]] nets the tombstones at
-    * read. CONCURRENT maintainers converge: the fold is a head-CAS
-    * cycle ([[graft.sources.Snapshots.foldThrough]]) — a racing walk
-    * that folded the same span first makes this one a no-op, never a
-    * double-append.
+    * read. CONCURRENT maintainers converge: the fold is a
+    * [[graft.sources.Snapshots.foldThrough]].
     */
   def bandIndexMaintain(s: org.apache.spark.sql.SparkSession,
       baseTable: String, idxTable: String): Int = {
     import graft.sources.Snapshots
-    val curV = Snapshots.currentVersion(baseTable)
-    require(curV > 0, s"base table $baseTable has no committed version")
-    Snapshots.foldThrough(idxTable, BandThroughPrefix, curV,
-      recomputeWhen = lastV => !Snapshots.versionAvailable(baseTable, lastV))(
-      bandedSigned(Snapshots.readVersion(s, baseTable, curV))
-        .withColumn("sgn", lit(1))) { lastV =>
-      val (ins, del) = Snapshots.changesBetween(s, baseTable, lastV, curV)
-      bandedSigned(ins).withColumn("sgn", lit(1)).unionByName(
-        bandedSigned(del).withColumn("sgn", lit(-1)))
+    Snapshots.foldThrough(baseTable, idxTable, BandThroughPrefix) { f =>
+      f.replace(bandedSigned(Snapshots.readVersion(s, baseTable, f.curV))
+        .withColumn("sgn", lit(1)), netted = true)
+    } { f =>
+      val (ins, del) = Snapshots.changesBetween(s, baseTable, f.lastV, f.curV)
+      f.append(bandedSigned(ins).withColumn("sgn", lit(1)).unionByName(
+        bandedSigned(del).withColumn("sgn", lit(-1))))
     }
     // size-ratio compaction policy (serving invariant; sgn re-carried
     // so later folds keep appending against the compacted base)
@@ -847,15 +843,13 @@ object Dedup {
   def simhashIndexMaintain(s: org.apache.spark.sql.SparkSession,
       baseTable: String, idxTable: String): Int = {
     import graft.sources.Snapshots
-    val curV = Snapshots.currentVersion(baseTable)
-    require(curV > 0, s"base table $baseTable has no committed version")
-    Snapshots.foldThrough(idxTable, SimhashThroughPrefix, curV,
-      recomputeWhen = lastV => !Snapshots.versionAvailable(baseTable, lastV))(
-      simhashBlocksOf(Snapshots.readVersion(s, baseTable, curV))
-        .withColumn("sgn", lit(1))) { lastV =>
-      val (ins, del) = Snapshots.changesBetween(s, baseTable, lastV, curV)
-      simhashBlocksOf(ins).withColumn("sgn", lit(1)).unionByName(
-        simhashBlocksOf(del).withColumn("sgn", lit(-1)))
+    Snapshots.foldThrough(baseTable, idxTable, SimhashThroughPrefix) { f =>
+      f.replace(simhashBlocksOf(Snapshots.readVersion(s, baseTable, f.curV))
+        .withColumn("sgn", lit(1)), netted = true)
+    } { f =>
+      val (ins, del) = Snapshots.changesBetween(s, baseTable, f.lastV, f.curV)
+      f.append(simhashBlocksOf(ins).withColumn("sgn", lit(1)).unionByName(
+        simhashBlocksOf(del).withColumn("sgn", lit(-1))))
     }
     Snapshots.maybeCompactNet(s, idxTable, SimhashThroughPrefix)(df =>
       simhashNet(df).withColumn("sgn", lit(1)))
@@ -891,15 +885,13 @@ object Dedup {
     import graft.sources.Snapshots
     def fpsOf(docs: DataFrame): DataFrame =
       docs.select(col("doc_id"), md5(col("text")).as("fp"))
-    val curV = Snapshots.currentVersion(baseTable)
-    require(curV > 0, s"base table $baseTable has no committed version")
-    Snapshots.foldThrough(idxTable, FpThroughPrefix, curV,
-      recomputeWhen = lastV => !Snapshots.versionAvailable(baseTable, lastV))(
-      fpsOf(Snapshots.readVersion(s, baseTable, curV))
-        .withColumn("sgn", lit(1))) { lastV =>
-      val (ins, del) = Snapshots.changesBetween(s, baseTable, lastV, curV)
-      fpsOf(ins).withColumn("sgn", lit(1)).unionByName(
-        fpsOf(del).withColumn("sgn", lit(-1)))
+    Snapshots.foldThrough(baseTable, idxTable, FpThroughPrefix) { f =>
+      f.replace(fpsOf(Snapshots.readVersion(s, baseTable, f.curV))
+        .withColumn("sgn", lit(1)), netted = true)
+    } { f =>
+      val (ins, del) = Snapshots.changesBetween(s, baseTable, f.lastV, f.curV)
+      f.append(fpsOf(ins).withColumn("sgn", lit(1)).unionByName(
+        fpsOf(del).withColumn("sgn", lit(-1))))
     }
     Snapshots.maybeCompactNet(s, idxTable, FpThroughPrefix)(df =>
       fpNet(df).withColumn("sgn", lit(1)))

@@ -1604,48 +1604,31 @@ object Events {
     * so the user's boundary set is replaced wholesale: old rows
     * re-derived from the PREVIOUS version appended with sgn = −1, new
     * rows with sgn = +1 — O(affected users' events), never a corpus
-    * pass), and commits exactly-once under the base-version watermark
-    * tag. Serving nets multiplicities per (t, kind) and runs the same
-    * distributed sweep as the batch query.
+    * pass), and commits as a [[graft.sources.Snapshots.foldThrough]]
+    * under the base-version watermark tag (a watermark vacuumed under
+    * the MV re-bootstraps). Serving nets multiplicities per (t, kind)
+    * and runs the same distributed sweep as the batch query.
     *
     * Base table schema: (user_id, event_id, sec).
     */
   def concurrencyRefresh(s: SparkSession, baseTable: String,
       mvTable: String): Unit = {
     import graft.sources.Snapshots
-    val curV = Snapshots.currentVersion(baseTable)
-    require(curV > 0, s"base table $baseTable has no committed version")
-    // CAS retry loop: the delta is derived from the watermark read at a
-    // specific MV head, so the commit must be conditional on that SAME
-    // head — two racing refreshers over the same lastV→curV span would
-    // otherwise both append and double-count boundaries (sgn netting
-    // cannot cancel duplicates). The loser re-reads the watermark; if
-    // the winner already folded the span it no-ops.
-    var committed = false
-    while (!committed) {
-      val mvHead = Snapshots.currentVersion(mvTable)
-      val lastV = Snapshots.tagWatermarkAt(mvTable, ConcThroughPrefix, mvHead)
-      if (lastV >= curV) return
-      val tag = Seq(ConcThroughPrefix + curV)
-      committed =
-        if (lastV == 0)
-          Snapshots.commitOverwriteTaggedIf(
-            sessionPoints(Snapshots.readVersion(s, baseTable, curV))
-              .withColumn("sgn", lit(1L)), mvTable, mvHead, tag).nonEmpty
-        else {
-          val (ins, del) = Snapshots.changesBetween(s, baseTable, lastV, curV)
-          // pinned: the affected-user set feeds BOTH version re-reads, and
-          // the change feed's exceptAll must not re-evaluate per branch
-          val users = ins.select("user_id").unionAll(del.select("user_id"))
-            .distinct().localCheckpoint()
-          def bounds(v: Int) = sessionPoints(
-            Snapshots.readVersion(s, baseTable, v).join(users, Seq("user_id"), "leftsemi"))
-          Snapshots.commitAppendTaggedIf(
-            bounds(curV).withColumn("sgn", lit(1L))
-              .unionByName(bounds(lastV).withColumn("sgn", lit(-1L))),
-            mvTable, mvHead, tag).nonEmpty
-        }
+    Snapshots.foldThrough(baseTable, mvTable, ConcThroughPrefix) { f =>
+      f.replace(sessionPoints(Snapshots.readVersion(s, baseTable, f.curV))
+        .withColumn("sgn", lit(1L)))
+    } { f =>
+      val (ins, del) = Snapshots.changesBetween(s, baseTable, f.lastV, f.curV)
+      // pinned: the affected-user set feeds BOTH version re-reads, and
+      // the change feed's exceptAll must not re-evaluate per branch
+      val users = ins.select("user_id").unionAll(del.select("user_id"))
+        .distinct().localCheckpoint()
+      def bounds(v: Int) = sessionPoints(
+        Snapshots.readVersion(s, baseTable, v).join(users, Seq("user_id"), "leftsemi"))
+      f.append(bounds(f.curV).withColumn("sgn", lit(1L))
+        .unionByName(bounds(f.lastV).withColumn("sgn", lit(-1L))))
     }
+    ()
   }
 
   /** Peak-concurrency report served from the boundary MV — nets the

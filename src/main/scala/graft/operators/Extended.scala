@@ -250,9 +250,10 @@ object Extended {
         // session-width exchange — per-level task latency is the whole
         // cost (r5 verdict item 7). Two levers, both measured:
         //  - run the recursion NARROW and eagerly (checkpoint),
-        //    restoring the session width downstream (r15:
-        //    tools/RecursiveCteAb — recursion 4.7 s at width 32 →
-        //    3.6 s at width 4; AQE coalescing cannot recover it);
+        //    restoring the session width downstream (r15, SURVEY.md;
+        //    earlier A/B in tools/recursive_cte_ab_r10.txt — recursion
+        //    4.7 s at width 32 → 3.6 s at width 4; AQE coalescing
+        //    cannot recover it);
         //  - POINTER HOPPING (r16, verdict item 4): the successor table
         //    carries LEAD-3/LEAD-4 pointers from the SAME one window
         //    pass, the anchor seeds depths 1..4, and each recursion

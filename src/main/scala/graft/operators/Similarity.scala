@@ -748,38 +748,38 @@ object Similarity {
       bandsT: String, graphT: String,
       project: DataFrame => DataFrame = identity): Unit = {
     import graft.sources.Snapshots
+    // ONE pinned base version for both folds and the band width
     val curV = Snapshots.currentVersion(baseTable)
-    require(curV > 0, s"base table $baseTable has no committed version")
     // corpus-adaptive band width, pinned to this root at first build
     // (8 bits at every catalog sf — wider only at corpus scale, where
     // the fixed space's quadratic candidate growth was measured:
     // tools/forget_budget_r15.md)
     val bits = pinnedGraphBits(bandsT,
       project(Snapshots.readVersion(s, baseTable, curV)).count())
-    // TWO head-CAS folds (Snapshots.foldThrough), each table under its
-    // own watermark: the band sidecar first, then the adjacency — the
-    // graph delta reads the NET bands, which the completed first fold
-    // (ours or a racing winner's) guarantees reflect ≥ curV. A racing
-    // walk at a NEWER base version can advance the bands past curV
-    // between the two folds; the adjacency still converges, because
-    // any source whose candidate set differs between the two band
-    // states collides with (or lost an edge to) that newer span's
-    // change set, and the newer walk's own graph fold recomputes
-    // exactly those sources from truly-live bands (asserted by the
-    // composed-race specs in ForgetSpec).
-    Snapshots.foldThrough(bandsT, GraphThroughPrefix, curV,
-        recomputeWhen = lastV => !Snapshots.versionAvailable(baseTable, lastV))(
-      graphBandsOf(project(Snapshots.readVersion(s, baseTable, curV)), bits)
-        .withColumn("sgn", lit(1L))) { lastV =>
-      val (ins0, del0) = Snapshots.changesBetween(s, baseTable, lastV, curV)
-      graphBandsOf(project(ins0), bits).withColumn("sgn", lit(1L))
-        .unionByName(graphBandsOf(project(del0), bits).withColumn("sgn", lit(-1L)))
+    // TWO folds (Snapshots.foldThrough) through the same pinned curV,
+    // each table under its own watermark: the band sidecar first, then
+    // the adjacency — the graph delta reads the NET bands, which the
+    // completed first fold (ours or a racing winner's) guarantees
+    // reflect ≥ curV. A racing walk at a NEWER base version can
+    // advance the bands past curV between the two folds; the adjacency
+    // still converges, because any source whose candidate set differs
+    // between the two band states collides with (or lost an edge to)
+    // that newer span's change set, and the newer walk's own graph fold
+    // recomputes exactly those sources from truly-live bands (asserted
+    // by the composed-race specs in ForgetSpec).
+    Snapshots.foldThrough(baseTable, bandsT, GraphThroughPrefix, Some(curV)) { f =>
+      f.replace(graphBandsOf(project(Snapshots.readVersion(s, baseTable, curV)), bits)
+        .withColumn("sgn", lit(1L)), netted = true)
+    } { f =>
+      val (ins0, del0) = Snapshots.changesBetween(s, baseTable, f.lastV, curV)
+      f.append(graphBandsOf(project(ins0), bits).withColumn("sgn", lit(1L))
+        .unionByName(graphBandsOf(project(del0), bits).withColumn("sgn", lit(-1L))))
     }
-    Snapshots.foldThrough(graphT, GraphThroughPrefix, curV,
-        recomputeWhen = lastV => !Snapshots.versionAvailable(baseTable, lastV))(
-      buildGraph(project(Snapshots.readVersion(s, baseTable, curV)), bits)
-        .withColumn("sgn", lit(1L))) { lastV =>
-      val (ins0, del0) = Snapshots.changesBetween(s, baseTable, lastV, curV)
+    Snapshots.foldThrough(baseTable, graphT, GraphThroughPrefix, Some(curV)) { f =>
+      f.replace(buildGraph(project(Snapshots.readVersion(s, baseTable, curV)), bits)
+        .withColumn("sgn", lit(1L)), netted = true)
+    } { f =>
+      val (ins0, del0) = Snapshots.changesBetween(s, baseTable, f.lastV, curV)
       val ins = project(ins0).localCheckpoint()
       val del = project(del0).localCheckpoint()
       val insBands = graphBandsOf(ins, bits).localCheckpoint()
@@ -813,7 +813,7 @@ object Similarity {
       val negRows = oldGraph
         .join(dropSrcs, oldGraph("g_src") === dropSrcs("vec_id"), "left_semi")
         .withColumn("sgn", lit(-1L))
-      negRows.unionByName(freshAdj.withColumn("sgn", lit(1L)))
+      f.append(negRows.unionByName(freshAdj.withColumn("sgn", lit(1L))))
     }
     // size-ratio compaction policy (serving invariant; sgn re-carried)
     Snapshots.maybeCompactNet(s, bandsT, GraphThroughPrefix)(df =>
@@ -1188,7 +1188,7 @@ object Similarity {
     * and no-op identically in both engines; if it hits the cap, both
     * engines perform exactly cap expansions — so DuckDB statically
     * unrolls the cap and the hash matches at any SF (measured depth:
-    * 6/5/3 expansion rounds at sf0.001/0.01/0.1, tools/BeamConvergence).
+    * 6/5/3 expansion rounds at sf0.001/0.01/0.1, recorded in SURVEY.md).
     */
   def beamUntilConverged(s: SparkSession, dir: String,
       maxRounds: Int = BeamMaxRounds): DataFrame =
@@ -1332,8 +1332,8 @@ object Similarity {
 
   /** Corpus row count keyed by the embeddings FILE FINGERPRINT — the
     * count feeds C into the IVF/IVF+PQ content keys on EVERY serve, so
-    * uncached it costs one Spark job per serve (round-9 IvfAb: 0.15 s
-    * of the ~1.0 s warm s_knn_ivf, the round-8 serve regression).
+    * uncached it costs one Spark job per serve (round-9 serve profile:
+    * 0.15 s of the ~1.0 s warm s_knn_ivf, the round-8 serve regression).
     * Keying the cache by fingerprint keeps it regeneration-safe: new
     * data → new fingerprint → recount; a stale count can never key an
     * index the oracle would derive a different C for.
@@ -1878,16 +1878,13 @@ object Similarity {
     // composition) to the (vec_id, embedding) shape this maintenance
     // consumes; the default is the plain embeddings-table identity
     import graft.sources.Snapshots
-    val curV = Snapshots.currentVersion(baseTable)
-    require(curV > 0, s"base table $baseTable has no committed version")
-    // head-CAS fold (Snapshots.foldThrough): two concurrent registry
-    // walks cannot double-append the same span's assignments. The
-    // quantizer train runs INSIDE the bootstrap thunk, so a fold that
-    // loses its bootstrap race (the winner already trained + assigned)
-    // never re-trains on retry — the watermark re-read no-ops it.
-    Snapshots.foldThrough(listsT, IvfThroughPrefix, curV,
-        recomputeWhen = lastV => !Snapshots.versionAvailable(baseTable, lastV))({
-      val base = project(Snapshots.readVersion(s, baseTable, curV))
+    // a fold (Snapshots.foldThrough): two concurrent registry walks
+    // cannot double-append the same span's assignments. The quantizer
+    // train runs INSIDE the bootstrap step, so a fold that loses its
+    // bootstrap race (the winner already trained + assigned) never
+    // re-trains on retry — the watermark re-read no-ops it.
+    Snapshots.foldThrough(baseTable, listsT, IvfThroughPrefix) { f =>
+      val base = project(Snapshots.readVersion(s, baseTable, f.curV))
       // train ONLY if no quantizer exists yet: a vacuum-triggered
       // recompute (and a lost bootstrap race) re-ASSIGNS the live
       // corpus under the existing FROZEN artifact — re-training here
@@ -1902,15 +1899,16 @@ object Similarity {
             Seq(IvfDriftBasePrefix + driftMean(quantized(base), c)))
           c
         }
-      ivfAssign(quantized(base), cents).drop("m").withColumn("sgn", lit(1))
-    }) { lastV =>
+      f.replace(ivfAssign(quantized(base), cents).drop("m").withColumn("sgn", lit(1)),
+        netted = true)
+    } { f =>
       val cents = Snapshots.read(s, centsT)
-      val (ins0, del0) = Snapshots.changesBetween(s, baseTable, lastV, curV)
+      val (ins0, del0) = Snapshots.changesBetween(s, baseTable, f.lastV, f.curV)
       val (ins, del) = (project(ins0), project(del0))
-      ivfAssign(quantized(ins), cents).drop("m")
+      f.append(ivfAssign(quantized(ins), cents).drop("m")
         .withColumn("sgn", lit(1))
         .unionByName(ivfAssign(quantized(del), cents).drop("m")
-          .withColumn("sgn", lit(-1)))
+          .withColumn("sgn", lit(-1))))
     }
     // size-ratio compaction policy (serving invariant; sgn re-carried)
     Snapshots.maybeCompactNet(s, listsT, IvfThroughPrefix)(df =>

@@ -35,13 +35,11 @@ import org.apache.spark.sql.SparkSession
   * BM25 postings/doclen/totals, MinHash bands, SimHash blocks,
   * exact-dedup fingerprints, IVF lists, the kNN graph.
   *
-  * Concurrency: every built-in family's fold is a head-CAS cycle
-  * ([[Snapshots.foldThrough]] / the MV refresh discipline), so
-  * CONCURRENT registry walks on one base — an erasure stream racing a
-  * re-crawl stream racing an ad-hoc maintainAll — converge to the
-  * sequential serve: a walk that loses a fold race re-reads the
-  * winner's watermark and either no-ops or folds the remaining gap
-  * (race-tested in ForgetSpec). Attachments still follow the
+  * Concurrency: every built-in family's fold commits through the
+  * snapshot commit loop (protocol: [[Snapshots]]), so CONCURRENT
+  * registry walks on one base — an erasure stream racing a re-crawl
+  * stream racing an ad-hoc maintainAll — converge to the sequential
+  * serve (race-tested in ForgetSpec). Attachments still follow the
   * single-driver convention (racing attach calls would need the
   * manifest claim); they are written once at bootstrap.
   */

@@ -70,10 +70,7 @@ object MaterializedView {
     * staleness).
     */
   def refreshedThroughAt(mvTable: String, v: Int): Int =
-    if (v == 0) 0
-    else Snapshots.versionTags(mvTable, v).collectFirst {
-      case t if t.startsWith(TagPrefix) => t.drop(TagPrefix.length).toInt
-    }.getOrElse(0)
+    Snapshots.tagWatermarkAt(mvTable, TagPrefix, v)
 
   /** Stable MV schema: keys, `cnt` long, one exact decimal(38,6)
     * running sum per sum column, plus native-typed min/max columns.
@@ -96,61 +93,37 @@ object MaterializedView {
 
   /** Bring the MV current with the base table's head version. Returns
     * the MV version serving the result (unchanged when already
-    * current). Racing refreshes serialize on a compare-and-swap of the
-    * MV head: the watermark tag AND the MV content are both read from
-    * ONE pinned MV version, and the fold commits only if the head is
-    * still that version ([[Snapshots.commitOverwriteTaggedIf]]) — a
-    * loser re-reads the winner's MV and re-folds, so a delta can never
-    * land on top of content that already folded it (double-counting).
+    * current). A [[Snapshots.foldThrough]] under the `mv_through`
+    * watermark: the watermark AND the folded MV content both come from
+    * ONE pinned MV version, so a racing refresh can never fold a delta
+    * into content that already holds it.
     */
   def refresh(spark: SparkSession, baseTable: String, mvTable: String,
       keys: Seq[String], sums: Seq[String],
-      mins: Seq[String] = Nil, maxs: Seq[String] = Nil): Int = {
-    val curV = Snapshots.currentVersion(baseTable)
-    require(curV > 0, s"base table $baseTable has no committed version")
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      require(attempt <= 20, s"MV refresh of $mvTable lost $attempt head races")
-      // pin one MV version: watermark and content below both resolve
-      // from mvV, never from a re-read head
-      val mvV = Snapshots.currentVersion(mvTable)
-      val lastV =
-        if (mvV == 0) 0
-        else Snapshots.versionTags(mvTable, mvV).collectFirst {
-          case t if t.startsWith(TagPrefix) => t.drop(TagPrefix.length).toInt
-        }.getOrElse(0)
-      // >=: a racing refresher may have folded a NEWER base version first
-      if (lastV >= curV) return mvV
-
-      // a vacuumed watermark version (retention passed under the MV)
-      // must degrade to a full recompute, not fail every refresh
-      // forever on an unresolvable manifest
-      val watermarkGone = lastV > 0 && !Snapshots.versionAvailable(baseTable, lastV)
-      val newDirs = Snapshots.versionDirs(baseTable, curV)
-      val oldDirs = if (lastV == 0 || watermarkGone) Seq.empty
-        else Snapshots.versionDirs(baseTable, lastV)
+      mins: Seq[String] = Nil, maxs: Seq[String] = Nil): Int =
+    Snapshots.foldThrough(baseTable, mvTable, TagPrefix) { f =>
+      // no watermark yet, or one vacuumed under the MV
+      setMode(mvTable, if (f.lastV == 0) "bootstrap" else "recompute-vacuumed")
+      f.replace(aggregate(Snapshots.readVersion(spark, baseTable, f.curV),
+        keys, sums, mins, maxs))
+    } { f =>
+      val newDirs = Snapshots.versionDirs(baseTable, f.curV)
+      val oldDirs = Snapshots.versionDirs(baseTable, f.lastV)
       def merges = sums.map(c => sum(col(s"sum_$c")).cast("decimal(38,6)").as(s"sum_$c")) ++
         mins.map(c => min(col(s"min_$c")).as(s"min_$c")) ++
         maxs.map(c => max(col(s"max_$c")).as(s"max_$c"))
       def foldInto(delta: DataFrame) =
-        Snapshots.readVersion(spark, mvTable, mvV).unionByName(delta)
+        Snapshots.readVersion(spark, mvTable, f.head).unionByName(delta)
           .groupBy(keys.map(col): _*)
           .agg(sum(col("cnt")).cast("long").as("cnt"), merges: _*)
-      val fresh =
-        if (lastV == 0) {
-          setMode(mvTable, "bootstrap")
-          aggregate(Snapshots.readVersion(spark, baseTable, curV), keys, sums, mins, maxs)
-        } else if (watermarkGone) {
-          setMode(mvTable, "recompute-vacuumed")
-          aggregate(Snapshots.readVersion(spark, baseTable, curV), keys, sums, mins, maxs)
-        } else if (oldDirs.toSet.subsetOf(newDirs.toSet)) {
+      f.replace(
+        if (oldDirs.toSet.subsetOf(newDirs.toSet)) {
           setMode(mvTable, "append-fold")
           val deltaDirs = newDirs.filterNot(oldDirs.toSet)
           // a tag-only base bump (new version, zero new data dirs)
           // must advance the watermark, not crash an empty-path read
-          if (deltaDirs.isEmpty) Snapshots.readVersion(spark, mvTable, mvV)
-          else foldInto(aggregate(Snapshots.readDirs(spark, baseTable, curV, deltaDirs),
+          if (deltaDirs.isEmpty) Snapshots.readVersion(spark, mvTable, f.head)
+          else foldInto(aggregate(Snapshots.readDirs(spark, baseTable, f.curV, deltaDirs),
             keys, sums, mins, maxs))
         } else if (mins.isEmpty && maxs.isEmpty) {
           // history REWRITTEN under the watermark (DML / merge /
@@ -161,7 +134,7 @@ object MaterializedView {
           // dropped. (A pure compaction's feed is empty — the fold
           // no-ops where the old path re-scanned everything.)
           setMode(mvTable, "cdc-fold")
-          val (ins, del) = Snapshots.changesBetween(spark, baseTable, lastV, curV)
+          val (ins, del) = Snapshots.changesBetween(spark, baseTable, f.lastV, f.curV)
           val plus = aggregate(ins, keys, sums, Nil, Nil)
           val minus = aggregate(del, keys, sums, Nil, Nil)
             .select(keys.map(col) ++ ((-col("cnt")).as("cnt") +:
@@ -171,15 +144,9 @@ object MaterializedView {
           // min/max are not deletion-invertible: a rewritten history
           // under a min/max MV recomputes from the current snapshot
           setMode(mvTable, "recompute")
-          aggregate(Snapshots.readVersion(spark, baseTable, curV), keys, sums, mins, maxs)
-        }
-      Snapshots.commitOverwriteTaggedIf(fresh, mvTable, mvV, Seq(TagPrefix + curV))
-        .foreach(v => return v)
-      // head moved between our pin and the claim: re-fold from the
-      // winner's MV
+          aggregate(Snapshots.readVersion(spark, baseTable, f.curV), keys, sums, mins, maxs)
+        })
     }
-    -1 // unreachable
-  }
 
   /** Continuously maintained rollup: each micro-batch lands in the
     * base snapshot table EXACTLY-ONCE ([[Snapshots.ingestBatch]]) and
@@ -227,10 +194,7 @@ object MaterializedView {
     * [[refreshedThroughAt]] for why registrations must pin one read.
     */
   def sketchRefreshedThroughAt(mvTable: String, v: Int): Int =
-    if (v == 0) 0
-    else Snapshots.versionTags(mvTable, v).collectFirst {
-      case t if t.startsWith(SkTagPrefix) => t.drop(SkTagPrefix.length).toInt
-    }.getOrElse(0)
+    Snapshots.tagWatermarkAt(mvTable, SkTagPrefix, v)
 
   /** Incrementally maintained MERGEABLE-SKETCH view — the sketch cell
     * of the MV matrix next to count/sum (abelian fold), min/max
@@ -242,8 +206,8 @@ object MaterializedView {
     * recompute's, not merely within error (asserted in SourcesSpec).
     * Deletes are NOT invertible (a register has no memory of who set
     * it): a rewritten history degrades to one full recompute and a
-    * fresh watermark, the min/max convention. Same CAS head discipline
-    * as [[refresh]].
+    * fresh watermark, the min/max convention. A
+    * [[Snapshots.foldThrough]] like [[refresh]].
     *
     * At 100 TB this is the streaming-distinct pattern: per-(day,
     * dimension) user sketches maintained at O(new data) per refresh
@@ -253,53 +217,32 @@ object MaterializedView {
     */
   def sketchRefresh(spark: SparkSession, baseTable: String, mvTable: String,
       keys: Seq[String], idCol: String, lgK: Int = 12): Int = {
-    val curV = Snapshots.currentVersion(baseTable)
-    require(curV > 0, s"base table $baseTable has no committed version")
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      require(attempt <= 20, s"sketch-MV refresh of $mvTable lost $attempt head races")
-      val mvV = Snapshots.currentVersion(mvTable)
-      val lastV =
-        if (mvV == 0) 0
-        else Snapshots.versionTags(mvTable, mvV).collectFirst {
-          case t if t.startsWith(SkTagPrefix) => t.drop(SkTagPrefix.length).toInt
-        }.getOrElse(0)
-      // >=: a racing refresher may have folded a NEWER base version first
-      if (lastV >= curV) return mvV
-      def agg(df: DataFrame) = df.groupBy(keys.map(col): _*)
-        .agg(expr(s"hll_sketch_agg($idCol, $lgK)").as("sk"))
-      val watermarkGone = lastV > 0 && !Snapshots.versionAvailable(baseTable, lastV)
-      val newDirs = Snapshots.versionDirs(baseTable, curV)
-      val oldDirs = if (lastV == 0 || watermarkGone) Seq.empty
-        else Snapshots.versionDirs(baseTable, lastV)
-      val fresh =
-        if (lastV == 0) {
-          setMode(mvTable, "bootstrap")
-          agg(Snapshots.readVersion(spark, baseTable, curV))
-        } else if (watermarkGone) {
-          setMode(mvTable, "recompute-vacuumed")
-          agg(Snapshots.readVersion(spark, baseTable, curV))
-        } else if (oldDirs.toSet.subsetOf(newDirs.toSet)) {
+    def agg(df: DataFrame) = df.groupBy(keys.map(col): _*)
+      .agg(expr(s"hll_sketch_agg($idCol, $lgK)").as("sk"))
+    Snapshots.foldThrough(baseTable, mvTable, SkTagPrefix) { f =>
+      setMode(mvTable, if (f.lastV == 0) "bootstrap" else "recompute-vacuumed")
+      f.replace(agg(Snapshots.readVersion(spark, baseTable, f.curV)))
+    } { f =>
+      val newDirs = Snapshots.versionDirs(baseTable, f.curV)
+      val oldDirs = Snapshots.versionDirs(baseTable, f.lastV)
+      f.replace(
+        if (oldDirs.toSet.subsetOf(newDirs.toSet)) {
           setMode(mvTable, "append-fold")
           val deltaDirs = newDirs.filterNot(oldDirs.toSet)
           // a tag-only base bump (new version, zero new data dirs)
           // must advance the watermark, not crash an empty-path read
-          if (deltaDirs.isEmpty) Snapshots.readVersion(spark, mvTable, mvV)
-          else Snapshots.readVersion(spark, mvTable, mvV)
-            .unionByName(agg(Snapshots.readDirs(spark, baseTable, curV, deltaDirs)))
+          if (deltaDirs.isEmpty) Snapshots.readVersion(spark, mvTable, f.head)
+          else Snapshots.readVersion(spark, mvTable, f.head)
+            .unionByName(agg(Snapshots.readDirs(spark, baseTable, f.curV, deltaDirs)))
             .groupBy(keys.map(col): _*)
             .agg(expr("hll_union_agg(sk)").as("sk"))
         } else {
           // history rewritten under the watermark: registers are not
           // deletion-invertible — recompute from the current snapshot
           setMode(mvTable, "recompute")
-          agg(Snapshots.readVersion(spark, baseTable, curV))
-        }
-      Snapshots.commitOverwriteTaggedIf(fresh, mvTable, mvV, Seq(SkTagPrefix + curV))
-        .foreach(v => return v)
+          agg(Snapshots.readVersion(spark, baseTable, f.curV))
+        })
     }
-    -1 // unreachable
   }
 
   /** Continuously maintained sketch rollup — [[ingestWithRollup]]'s
@@ -343,13 +286,8 @@ object MaterializedView {
   /** [[joinRefreshedThrough]] at a PINNED view version — see
     * [[refreshedThroughAt]] for why registrations must pin one read.
     */
-  def joinRefreshedThroughAt(mvTable: String, v: Int): (Int, Int) = {
-    if (v == 0) return (0, 0)
-    def tagOf(prefix: String) = Snapshots.versionTags(mvTable, v).collectFirst {
-      case t if t.startsWith(prefix) => t.drop(prefix.length).toInt
-    }.getOrElse(0)
-    (tagOf(JTagL), tagOf(JTagR))
-  }
+  def joinRefreshedThroughAt(mvTable: String, v: Int): (Int, Int) =
+    (Snapshots.tagWatermarkAt(mvTable, JTagL, v), Snapshots.tagWatermarkAt(mvTable, JTagR, v))
 
   /** Incrementally maintained JOIN view V = π(cols)(L ⋈_key R) over
     * two [[Snapshots]] base tables — the other half of view
@@ -365,11 +303,10 @@ object MaterializedView {
     * O(Δ·matched) per refresh, never a full re-join. Per-base
     * watermark versions ride as tags on the view's own atomic commits
     * (crash between base DML and refresh loses nothing — the next
-    * refresh folds the gap); appends are HEAD-CAS-checked against the
-    * pinned view version (the [[refresh]]/foldThrough discipline), so
-    * two concurrent refreshers cannot double-fold one span's signed
-    * delta, with a size-ratio compaction trigger ([[joinCompact]])
-    * bounding tombstone debt.
+    * refresh folds the gap); the commit runs the snapshot commit loop
+    * (see [[Snapshots]]) against the pinned view version — a
+    * two-watermark fold, so it stages its own claims — and a size-ratio
+    * compaction trigger ([[joinMaybeCompact]]) bounds tombstone debt.
     *
     * At 100 TB this is how a wide denormalized serving table follows
     * its normalized sources: the delta join shuffles only changed keys
@@ -381,44 +318,33 @@ object MaterializedView {
     val lCur = Snapshots.currentVersion(leftTable)
     val rCur = Snapshots.currentVersion(rightTable)
     require(lCur > 0 && rCur > 0, "both join-view bases need a committed version")
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      require(attempt <= 20, s"join-view refresh of $mvTable lost $attempt head races")
-      // pin ONE view head: both watermark tags and the CAS below
-      // resolve from mvV — a racing refresher that committed first
-      // aborts ours, and the retry re-derives the remaining delta from
-      // the winner's tags (the foldThrough discipline; a blind append
-      // would double-fold the signed expansion, which netting cannot
-      // cancel)
-      val mvV = Snapshots.currentVersion(mvTable)
-      def tagOf(prefix: String) =
-        if (mvV == 0) 0
-        else Snapshots.versionTags(mvTable, mvV).collectFirst {
-          case t if t.startsWith(prefix) => t.drop(prefix.length).toInt
-        }.getOrElse(0)
-      val (lLast, rLast) = (tagOf(JTagL), tagOf(JTagR))
-      if (lLast >= lCur && rLast >= rCur) { setMode(mvTable, "noop"); return mvV }
-      val tags = Seq(JTagL + math.max(lCur, lLast), JTagR + math.max(rCur, rLast))
-      // vacuumed watermark on either base → full bootstrap recompute
-      // (the aggregate-MV convention), never a permanently failing
-      // delta read against a retired manifest
-      val committed =
-        if (lLast == 0 || rLast == 0 ||
-            !Snapshots.versionAvailable(leftTable, lLast) ||
+    val v = Snapshots.headCas(mvTable, "join-view refresh") { mvV =>
+      // both watermark tags resolve from the pinned view head, so a
+      // lost claim re-derives the remaining delta from the winner's
+      // tags (a blind append would double-fold the signed expansion,
+      // which netting cannot cancel)
+      val (lLast, rLast) = joinRefreshedThroughAt(mvTable, mvV)
+      if (lLast >= lCur && rLast >= rCur) {
+        setMode(mvTable, "noop")
+        Snapshots.Resolved(mvV)
+      } else {
+        val lTo = math.max(lCur, lLast)
+        val rTo = math.max(rCur, rLast)
+        val tags = Seq(JTagL + lTo, JTagR + rTo)
+        // vacuumed watermark on either base → full bootstrap recompute
+        // (the aggregate-MV convention), never a permanently failing
+        // delta read against a retired manifest
+        if (!Snapshots.versionAvailable(leftTable, lLast) ||
             !Snapshots.versionAvailable(rightTable, rLast)) {
           setMode(mvTable, "bootstrap")
-          val full = Snapshots.readVersion(spark, leftTable, math.max(lCur, lLast))
-            .join(Snapshots.readVersion(spark, rightTable, math.max(rCur, rLast)), key)
+          val full = Snapshots.readVersion(spark, leftTable, lTo)
+            .join(Snapshots.readVersion(spark, rightTable, rTo), key)
             .withColumn("sgn", lit(1L))
           // all-sgn=1 content: serveJoin's per-row explode(1..1) is the
           // identity, so the bootstrap may serve without re-netting
-          Snapshots.commitOverwriteTaggedIf(full, mvTable, mvV,
-            tags :+ Snapshots.NettedTag)
+          Snapshots.replaceClaim(full, mvTable, tags :+ Snapshots.NettedTag)
         } else {
           setMode(mvTable, "delta-join")
-          val lTo = math.max(lCur, lLast)
-          val rTo = math.max(rCur, rLast)
           val (lIns, lDel) = Snapshots.changesBetween(spark, leftTable, lLast, lTo)
           val (rIns, rDel) = Snapshots.changesBetween(spark, rightTable, rLast, rTo)
           val dL = lIns.withColumn("sl", lit(1L)).unionByName(
@@ -439,14 +365,12 @@ object MaterializedView {
             dL.join(rNew, key).withColumn("sgn", col("sl")).drop("sl")
               .unionByName(
                 lOld.join(dR, key).withColumn("sgn", col("sr")).drop("sr"))
-          Snapshots.commitAppendTaggedIf(delta, mvTable, mvV, tags)
+          Snapshots.appendClaim(delta, mvTable, mvV, tags)
         }
-      committed.foreach { v =>
-        joinMaybeCompact(spark, mvTable)
-        return v
       }
     }
-    -1 // unreachable
+    joinMaybeCompact(spark, mvTable)
+    v
   }
 
   /** Net view of the signed join rows: multiset multiplicity restored
@@ -474,28 +398,23 @@ object MaterializedView {
   /** Size-ratio-triggered major compaction of the signed join view —
     * [[Snapshots.maybeCompactNet]]'s policy, but preserving BOTH
     * per-base watermark tags (which that single-prefix helper cannot
-    * carry): CAS on the head read at fold start, retry on conflict so
-    * a racing maintenance append is never dropped.
+    * carry). A racing maintenance append fails the claim and the retry
+    * re-nets the new head, so it is never dropped.
     */
   private def joinMaybeCompact(spark: SparkSession, mvTable: String,
-      maxDeltaRatio: Double = 0.5): Option[Int] = {
+      maxDeltaRatio: Double = 0.5): Unit = {
     val (base, delta) = Snapshots.compactionDebt(spark, mvTable)
-    if (delta <= maxDeltaRatio * math.max(base, 1L)) return None
-    var out = -1
-    while (out < 0) {
-      val head = Snapshots.currentVersion(mvTable)
-      val tags = Snapshots.versionTags(mvTable, head)
-        .filter(t => t.startsWith(JTagL) || t.startsWith(JTagR))
-      val df = Snapshots.readVersion(spark, mvTable, head)
-      val cols = df.columns.filter(_ != "sgn").toSeq
-      val netted = df.groupBy(cols.map(col): _*).agg(sum(col("sgn")).as("sgn"))
-        .where(col("sgn") > 0)
-      // the compacted content IS the netted view — tag it so serves
-      // skip the re-netting shuffle (see Snapshots.NettedTag)
-      Snapshots.commitOverwriteTaggedIf(netted, mvTable, head,
-          tags :+ Snapshots.NettedTag)
-        .foreach(v => out = v)
-    }
-    Some(out)
+    if (delta > maxDeltaRatio * math.max(base, 1L))
+      Snapshots.headCas(mvTable, "join-view compaction") { head =>
+        val tags = Snapshots.versionTags(mvTable, head)
+          .filter(t => t.startsWith(JTagL) || t.startsWith(JTagR))
+        val df = Snapshots.readVersion(spark, mvTable, head)
+        val cols = df.columns.filter(_ != "sgn").toSeq
+        val netted = df.groupBy(cols.map(col): _*).agg(sum(col("sgn")).as("sgn"))
+          .where(col("sgn") > 0)
+        // the compacted content IS the netted view — tag it so serves
+        // skip the re-netting shuffle (see Snapshots.NettedTag)
+        Snapshots.replaceClaim(netted, mvTable, tags :+ Snapshots.NettedTag)
+      }
   }
 }

@@ -34,17 +34,33 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * and their reads — like those of manifests written before the line
   * existed — fall back to inference.
   *
-  * Concurrency (optimistic, lock-free): the commit point is the
-  * CREATION of `vN.manifest`, done with an atomic hard link —
-  * `link(2)` fails with EEXIST if version N is already claimed,
-  * whereas `rename(2)` silently replaces (two racing committers would
-  * lose a commit, the bug the reference's LockManager exists to
-  * prevent — reference: concurrency/LockManager.java:30 acquireLock).
-  * A committer that loses the race re-resolves the current version
-  * (for appends: re-reads the new predecessor's manifest so the loser
-  * commits ON TOP of the winner) and retries with N+1. No writer ever
-  * blocks another; data directories are written once, outside the
-  * retry loop.
+  * Commit protocol (optimistic, lock-free; the one place it is
+  * stated — every commit, fold and compaction below runs it): the
+  * commit point is the CREATION of `vN.manifest`, done with an atomic
+  * hard link — `link(2)` fails with EEXIST if version N is already
+  * claimed, whereas `rename(2)` silently replaces (two racing
+  * committers would lose a commit, the bug the reference's
+  * LockManager exists to prevent — reference:
+  * concurrency/LockManager.java:30 acquireLock). ONE retry loop,
+  * [[headCas]], wraps that claim; no other code reaches it. Each
+  * attempt pins the head H and runs the caller's step against H,
+  * which either
+  *  - resolves without a commit ([[Resolved]]: already current, the
+  *    batch already committed, a conflict abort), or
+  *  - stages one [[Claim]] of H + 1: its manifest dirs (derived from
+  *    H's content, never from a re-read head), its tags, whether H's
+  *    schema tags are inherited, and the dirs it staged, which are
+  *    deleted when the claim is lost.
+  * The claim of exactly H + 1 IS the compare-and-swap: any commit
+  * since the pin makes it fail, so a step can never stack content on
+  * a head it did not read. A lost claim deletes the claim's staged
+  * dirs, is counted per table ([[drainFoldContention]]: lost claims
+  * and backoff ms), sleeps a bounded jittered exponential backoff
+  * (1..2^attempt ms, at most 100 ms) and re-runs the step against the
+  * new head — up to [[MaxCommitAttempts]] attempts, after which the
+  * commit fails naming the table and the operation. Watermark folds
+  * ([[foldThrough]]) add a per-table admission gate in front of the
+  * loop. No writer ever blocks another.
   *
   * Scale notes: a manifest lists directories, not files, so it stays
   * tiny; commits are O(new data) with no rewrite of prior versions;
@@ -212,88 +228,89 @@ object Snapshots {
     ensureParquetFooter(df, out)
   }
 
+  // ---- the commit protocol: one head-CAS retry loop ----
+
+  /** The attempt cap of [[headCas]], shared by every commit. */
   private val MaxCommitAttempts = 100
 
-  /** Resolve-claim retry loop shared by both commit flavors:
-    * `dirsFor(prevVersion)` recomputes the manifest content against
-    * the CURRENT predecessor on every attempt.
-    */
-  /** `abortIf` is re-evaluated at the top of EVERY attempt (not just
-    * once before the loop): a committer that loses the version race
-    * must re-validate its preconditions against the new predecessor —
-    * e.g. a replayed ingest batch whose twin just committed, or a
-    * compaction whose inputs a racing compactor already replaced.
-    * Returning Some(v) abandons the commit and yields v.
-    */
-  private def commitLoop(table: String, dirsFor: Int => Seq[String],
-      tags: Seq[String] = Nil, abortIf: () => Option[Int] = () => None,
-      inheritSchema: Boolean = true): Int =
-    commitLoopDyn(table, dirsFor, _ => tags, abortIf, inheritSchema)
+  /** What one attempt of [[headCas]] does at the pinned head. */
+  private[graft] sealed trait Attempt
 
-  /** [[commitLoop]] with per-attempt tags: `tagsFor(prev)` recomputes
-    * provenance/metadata lines against the CURRENT predecessor — the
-    * schema-evolving append derives its merged-schema tag from
-    * whatever schema the winning predecessor committed.
-    *
-    * `inheritSchema` (the default): a content-PRESERVING commit
-    * (append, transform/compaction, merge, ingest) that does not carry
-    * its own schema tag re-commits the predecessor's schema metadata,
-    * so a plain append after an evolution cannot silently revert the
-    * table to footer-inferred schema. Content-REPLACING commits
-    * (the overwrite family, index builds, initial clustered writes)
-    * pass false: their own data defines the schema afresh, read off
-    * its footer at the claim ([[claimManifest]]).
+  /** Resolve to `version` without committing: already current, the
+    * batch already committed, or a conflict the caller aborts on.
     */
-  private def commitLoopDyn(table: String, dirsFor: Int => Seq[String],
-      tagsFor: Int => Seq[String],
-      abortIf: () => Option[Int] = () => None,
-      inheritSchema: Boolean = true): Int = {
+  private[graft] final case class Resolved(version: Int) extends Attempt
+
+  /** Stage one claim of head + 1. `dirs` is the new manifest's content,
+    * derived from the pinned head; `tags` its provenance lines;
+    * `staged` the dirs this attempt wrote, deleted when the claim is
+    * lost (data staged once, before the loop, stays out of it and is
+    * re-listed by the next attempt). `inheritSchema` (the default): a
+    * content-PRESERVING commit (append, transform, merge, ingest,
+    * delta fold) without a schema tag of its own re-commits the
+    * head's schema metadata, so a plain append after an evolution
+    * cannot revert the table to footer-inferred reads;
+    * content-REPLACING claims (overwrites, index builds, bootstraps)
+    * pass false and record their own footer schema ([[claimManifest]]).
+    */
+  private[graft] final case class Claim(dirs: Seq[String],
+      tags: Seq[String] = Nil, inheritSchema: Boolean = true,
+      staged: Seq[String] = Nil) extends Attempt
+
+  /** THE commit loop (see the object scaladoc for the protocol): pin
+    * the head, run `step` against it, and claim exactly head + 1 when
+    * it stages a [[Claim]]. A lost claim deletes the staged dirs, is
+    * counted and backed off ([[backOff]]) and re-runs `step` against
+    * the new head; a [[Resolved]] step returns its version. Returns
+    * the committed (or resolved) version; fails after
+    * [[MaxCommitAttempts]] lost claims, naming `what` and the table.
+    */
+  private[sources] def headCas(table: String, what: String)(
+      step: Int => Attempt): Int = {
     var attempt = 0
     while (attempt < MaxCommitAttempts) {
-      abortIf().foreach(v => return v)
-      val prev = currentVersion(table)
-      val v = prev + 1
-      val tags = tagsFor(prev)
-      val all =
-        if (inheritSchema && prev > 0 && !tags.exists(_.startsWith(SchemaTagPrefix)))
-          tags ++ schemaMetaTags(table, prev)
-        else tags
-      if (claimManifest(table, v, dirsFor(prev), all)) return v
       attempt += 1
+      val head = currentVersion(table)
+      step(head) match {
+        case Resolved(v) => return v
+        case Claim(dirs, tags, inheritSchema, staged) =>
+          val all =
+            if (inheritSchema && head > 0 && !tags.exists(_.startsWith(SchemaTagPrefix)))
+              tags ++ schemaMetaTags(table, head)
+            else tags
+          if (claimManifest(table, head + 1, dirs, all)) return head + 1
+          staged.foreach(deleteDataDir)
+          backOff(table, attempt)
+      }
     }
-    sys.error(s"commit to $table failed after $MaxCommitAttempts attempts")
+    sys.error(s"$what on $table lost $MaxCommitAttempts head races")
   }
 
-  /** ONE-SHOT conflict-checked claim — the true compare-and-swap every
-    * head-CAS'd commit rests on: claim exactly `expectHead + 1` with
-    * content derived from `expectHead`, and let the create-exclusive
-    * manifest claim ITSELF be the atomicity point — an already-present
-    * v(expectHead+1).manifest (any racer won) is the conflict signal
-    * (None). The check-then-act alternative (validate the head, then
-    * re-read it to pick the next version) leaves a window where a racer
-    * committing expectHead+1 between the two reads makes this commit
-    * land at expectHead+2 ON TOP of the racer's content despite the
-    * "CAS" — double-folding a watermark delta, or re-publishing rows a
-    * concurrent append carried past a delete probe. Here there is no
-    * second read: either we create expectHead+1 or we conflict.
+  /** The dirs of version `v`, none for the empty table (v = 0). */
+  private def headDirs(table: String, v: Int): Seq[String] =
+    if (v == 0) Seq.empty else manifestDirs(table, v)
+
+  /** A claim replacing the table's content with `df`, staged as one
+    * fresh dir that defines the schema afresh.
     */
-  private def commitExactIf(table: String, expectHead: Int,
-      dirs: Seq[String], tags: Seq[String],
-      inheritSchema: Boolean = true): Option[Int] = {
-    val all =
-      if (inheritSchema && expectHead > 0 &&
-          !tags.exists(_.startsWith(SchemaTagPrefix)))
-        tags ++ schemaMetaTags(table, expectHead)
-      else tags
-    if (claimManifest(table, expectHead + 1, dirs, all)) Some(expectHead + 1)
-    else None
+  private[sources] def replaceClaim(df: DataFrame, table: String,
+      tags: Seq[String] = Nil): Claim = {
+    val dir = writeData(df, table)
+    Claim(Seq(dir), tags, inheritSchema = false, staged = Seq(dir))
+  }
+
+  /** A claim appending `df`, staged as one fresh dir, to version
+    * `head`'s content.
+    */
+  private[sources] def appendClaim(df: DataFrame, table: String, head: Int,
+      tags: Seq[String] = Nil): Claim = {
+    val dir = writeData(df, table)
+    Claim(headDirs(table, head) :+ dir, tags, staged = Seq(dir))
   }
 
   /** Commit a new version whose content REPLACES the table. */
-  def commitOverwrite(df: DataFrame, table: String): Int = {
-    val dir = writeData(df, table)
-    commitLoop(table, _ => Seq(dir), inheritSchema = false)
-  }
+  def commitOverwrite(df: DataFrame, table: String): Int =
+    commitOverwriteTagged(df, table, Nil)
 
   // ---- CDC sidecars: every DML commit records its own row delta ----
 
@@ -340,8 +357,8 @@ object Snapshots {
   /** DML split write: stage the surviving rows as a fresh data dir and
     * the removed/replaced rows as a fresh CDC sidecar dir, as TWO
     * PARALLEL filtered writes over the same source (§2.6 — measured
-    * wall-equal to the single pre-sidecar filtered write in
-    * SplitWriteAb; a one-pass partitionBy(hit) write cost ~+30% from
+    * wall-equal to the single pre-sidecar filtered write, see
+    * OPTIMIZATION_r16.md; a one-pass partitionBy(hit) write cost ~+30% from
     * dynamic-partition sorting and was rejected). Both dirs stay
     * readable when a side is empty ([[ensureParquetFooter]]). Returns
     * (dataDir, cdcDir).
@@ -370,8 +387,8 @@ object Snapshots {
     * semantics contract. Both forms commit a CDC sidecar (the deleted
     * — for updates, also the replacement — rows) so downstream change
     * feeds read O(changed rows), never the rewritten table twice.
-    * Both commit through [[commitRewrite]]'s head CAS, so a racing
-    * append is re-read and filtered, never dropped.
+    * Both commit through [[headCas]], so a racing append is re-read
+    * and filtered, never dropped.
     */
   def deleteWhere(spark: SparkSession, table: String,
       cond: org.apache.spark.sql.Column): Int = {
@@ -384,11 +401,11 @@ object Snapshots {
     // rewrite.
     val hit = org.apache.spark.sql.functions.coalesce(
       cond, org.apache.spark.sql.functions.lit(false))
-    commitRewrite(table, "deleteWhere") { cur =>
+    headCas(table, "deleteWhere") { cur =>
       val df = readVersion(spark, table, cur)
       val (dataDir, delDir) = writeSplit(df.where(!hit), df.where(hit), table)
-      (Seq(dataDir), schemaMetaTags(table, cur) :+ (CdcDelTag + delDir),
-        Seq(dataDir, delDir))
+      Claim(Seq(dataDir), schemaMetaTags(table, cur) :+ (CdcDelTag + delDir),
+        inheritSchema = false, staged = Seq(dataDir, delDir))
     }
   }
 
@@ -409,44 +426,21 @@ object Snapshots {
     def upd(frame: DataFrame) =
       frame.withColumn(column, when(cond, value).otherwise(frame(column)))
     val hit = coalesce(cond, lit(false))
-    commitRewrite(table, "updateWhere") { cur =>
+    headCas(table, "updateWhere") { cur =>
       val df = readVersion(spark, table, cur)
-      if (upd(df).schema.map(_.dataType) != df.schema.map(_.dataType)) {
+      if (upd(df).schema.map(_.dataType) != df.schema.map(_.dataType))
         // type-coercing update: every row's column changes type — the
         // whole table is the delta, one rewrite, sidecars add nothing;
         // the new type is read off the rewrite, the tombstones carry
-        val dir = writeData(upd(df), table)
-        (Seq(dir), droppedMetaTags(table, cur), Seq(dir))
-      } else {
+        replaceClaim(upd(df), table, droppedMetaTags(table, cur))
+      else {
         val (keptDir, delDir) = writeSplit(df.where(!hit), df.where(hit), table)
         val insDir = writeData(upd(readDirs(spark, table, cur, Seq(delDir))), table)
-        (Seq(keptDir, insDir), schemaMetaTags(table, cur) ++
-          Seq(CdcDelTag + delDir, CdcInsTag + insDir), Seq(keptDir, delDir, insDir))
+        Claim(Seq(keptDir, insDir), schemaMetaTags(table, cur) ++
+          Seq(CdcDelTag + delDir, CdcInsTag + insDir), inheritSchema = false,
+          staged = Seq(keptDir, delDir, insDir))
       }
     }
-  }
-
-  /** Head-CAS commit of a whole-table rewrite: `stage(cur)` stages
-    * content derived from version `cur` and returns (the new manifest's
-    * dirs, its tags, every dir it staged). The exact claim of cur + 1
-    * is the CAS ([[commitExactIf]]); a lost race deletes the staged
-    * dirs and re-derives from the new head, so a commit racing the
-    * rewrite — an append, say — is re-read instead of dropped.
-    */
-  private def commitRewrite(table: String, what: String)(
-      stage: Int => (Seq[String], Seq[String], Seq[String])): Int = {
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
-      val cur = currentVersion(table)
-      require(cur > 0, s"no committed version at $table")
-      val (dirs, tags, staged) = stage(cur)
-      commitExactIf(table, cur, dirs, tags, inheritSchema = false) match {
-        case Some(v) => return v
-        case None => staged.foreach(deleteDataDir)
-      }
-    }
-    sys.error(s"$what on $table lost $attempt head races")
   }
 
   /** FILE-LEVEL selective DML: rewrite ONLY the data directories that
@@ -640,14 +634,15 @@ object Snapshots {
     * are rewritten (anti-join against the source keys), untouched dirs
     * carry by reference, and the source lands as one new dir. The
     * commit is conflict-checked as a HEAD compare-and-swap: ANY
-    * concurrent commit aborts the merge (None — re-probe and retry) —
-    * dir-presence alone would not do, because a racing appender (or a
-    * racing merge of the same key into a fresh dir) can introduce
-    * matched keys the probe never saw, and blindly appending the
-    * source would then duplicate them. This is the
+    * concurrent commit makes the merge re-probe against the new head
+    * and retry — dir-presence alone would not do, because a racing
+    * appender (or a racing merge of the same key into a fresh dir) can
+    * introduce matched keys the probe never saw, and blindly appending
+    * the source would then duplicate them. This is the
     * serializable-conflict semantic Delta/Iceberg MERGE enforces.
-    * `source` must be keyed (≤ 1 row per key — a multi-row key makes
-    * "the" replacement ambiguous).
+    * Returns the committed version (always defined). `source` must be
+    * keyed (≤ 1 row per key — a multi-row key makes "the" replacement
+    * ambiguous) and stable across retries.
     *
     * At 100 TB: the probe is one scan whose non-matching files are
     * answered from parquet footers; the rewrite is O(matched dirs) —
@@ -656,7 +651,7 @@ object Snapshots {
     */
   def merge(spark: SparkSession, table: String, source: DataFrame,
       key: String): Option[Int] =
-    mergeTagged(spark, table, source, key, Nil, () => None)
+    Some(mergeTagged(table, source, key, batch = None))
 
   /** Keyed DELETE driven by a KEYS DATAFRAME — the join-expressible
     * (firehose) form of a cascading child erasure: every row whose
@@ -667,105 +662,90 @@ object Snapshots {
     * millions of subjects) without ever leaving the cluster. Join
     * strategy is left to AQE, the [[merge]] convention: a human-scale
     * key set broadcasts, a firehose one shuffles. The commit is a
-    * head CAS like merge's (any concurrent commit aborts the rewrite
-    * — even a pure append can carry newly-matched keys the probe
-    * never saw) with a bounded retry loop, so racing DML serializes.
-    * Returns the version serving the delete (unchanged when no row
-    * matches). `keys` must be stable across retries — pass a
-    * localCheckpoint()ed frame, not a live query over the table being
-    * deleted from.
+    * head CAS like merge's (any concurrent commit re-probes — even a
+    * pure append can carry newly-matched keys the probe never saw),
+    * so racing DML serializes. Returns the version serving the delete
+    * (unchanged when no row matches). `keys` must be stable across
+    * retries — pass a localCheckpoint()ed frame, not a live query over
+    * the table being deleted from.
     */
   def deleteMatching(spark: SparkSession, table: String, key: String,
       keys: DataFrame): Int = {
     import org.apache.spark.sql.functions.col
     val srcKeys = keys.select(col(key)).distinct().localCheckpoint()
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
-      val cur = currentVersion(table)
+    headCas(table, "deleteMatching") { cur =>
       require(cur > 0, s"no committed version at $table")
       val dirs = manifestDirs(table, cur)
-      val reader = committedReader(spark, table, cur)
-      val touched = probeTouched(reader, dirs, _.join(srcKeys, Seq(key), "left_semi"))
-      if (touched.isEmpty) return cur
-      // independent per-dir rewrites overlap (guide §2.6). Each SPLIT
-      // write stages the dir's surviving rows (the replacement data
-      // dir) and its matched rows (the CDC delete sidecar) in ONE job.
-      // Per-thunk readers: DataFrameReader is mutable, not thread-safe.
-      val splits = graft.Par.run(touched.map(d => () => {
-        def src = committedReader(spark, table, cur).parquet(d)
-        writeSplit(src.join(srcKeys, Seq(key), "left_anti"),
-          src.join(srcKeys, Seq(key), "left_semi"), table)
-      }): _*)
-      val staged = splits.map(_._1)
-      val dels = splits.map(_._2)
-      // exact claim of cur+1: the probe is only valid against the
-      // snapshot it ran on, and the claim itself is the CAS — a racer
-      // committing between our probe and this claim makes it fail
-      commitExactIf(table, cur,
-        manifestDirs(table, cur).filterNot(touched.toSet) ++ staged,
-        dels.map(CdcDelTag + _)) match {
-        case Some(v) => return v
-        case None => (staged ++ dels).foreach(deleteDataDir)
+      val touched = probeTouched(committedReader(spark, table, cur), dirs,
+        _.join(srcKeys, Seq(key), "left_semi"))
+      if (touched.isEmpty) Resolved(cur)
+      else {
+        val (staged, dels) = splitByKeys(spark, table, cur, touched, srcKeys, key)().unzip
+        Claim(dirs.filterNot(touched.toSet) ++ staged, dels.map(CdcDelTag + _),
+          staged = staged ++ dels)
       }
     }
-    sys.error(s"deleteMatching on $table lost $attempt head races")
   }
 
-  private def mergeTagged(spark: SparkSession, table: String, source: DataFrame,
-      key: String, tags: Seq[String], extraAbort: () => Option[Int]): Option[Int] = {
+  /** Rewrite each `touched` dir of version `cur` as a SPLIT write —
+    * the rows whose `key` is not in `srcKeys` (the replacement data
+    * dir) and the matched rows (the CDC delete sidecar) in ONE job —
+    * overlapping the per-dir rewrites and any `extra` writes on a
+    * thread pool ([[graft.Par]]). Returns (dataDir, cdcDir) per touched
+    * dir, then the extra writes' results. Per-thunk readers:
+    * DataFrameReader is mutable and not thread-safe.
+    */
+  private def splitByKeys(spark: SparkSession, table: String, cur: Int,
+      touched: Seq[String], srcKeys: DataFrame, key: String)(
+      extra: (() => (String, String))*): Seq[(String, String)] =
+    graft.Par.run(touched.map(d => () => {
+      val src = committedReader(spark, table, cur).parquet(d)
+      writeSplit(src.join(srcKeys, Seq(key), "left_anti"),
+        src.join(srcKeys, Seq(key), "left_semi"), table)
+    }) ++ extra: _*)
+
+  /** The keyed upsert behind [[merge]] and [[mergeBatch]]: per
+    * attempt, probe the pinned head for dirs holding matched keys,
+    * rewrite only those, land the source as one new dir (doubling as
+    * the CDC insert side), and claim head + 1. The claim is the CAS:
+    * the probe is only valid against the exact snapshot it ran on, so
+    * any commit since (even a pure append) re-probes. A `batch` tag
+    * commits atomically with the version and is re-checked per
+    * attempt, so a replayed batch resolves to its own version.
+    */
+  private def mergeTagged(table: String, source: DataFrame, key: String,
+      batch: Option[(String, Long)]): Int = {
     import org.apache.spark.sql.functions.col
-    val cur = currentVersion(table)
-    // cur == 0: first batch bootstraps the table — nothing to probe
-    val dirs = if (cur == 0) Seq.empty else manifestDirs(table, cur)
+    val spark = source.sparkSession
     // join strategy is LEFT TO AQE on purpose: a point-keyed CDC batch
     // broadcasts (the normal case), but a bulk backfill's key set is
     // data-sized and must be allowed to shuffle — pinning a broadcast
     // here would OOM exactly when merge is asked to do the most work
-    val srcKeys = source.select(col(key)).distinct().localCheckpoint()
-    val reader = committedReader(spark, table, cur)
-    val touched =
-      if (dirs.isEmpty) Seq.empty[String]
-      else probeTouched(reader, dirs, _.join(srcKeys, Seq(key), "left_semi"))
-    // independent per-dir rewrites AND the source-batch landing write
-    // overlap (guide §2.6) — the source dir does not depend on any
-    // staged rewrite, so running it serially after them only added
-    // its write latency to the merge wall. Each per-dir SPLIT write
-    // stages the survivors (the replacement data dir) and the REPLACED
-    // rows (the CDC delete sidecar) in ONE job; the source dir itself
-    // doubles as the CDC insert side, so the feed needs no extra copy
-    // of the batch. Per-thunk readers: DataFrameReader is mutable and
-    // not thread-safe.
-    val stagedAll: Seq[(String, String)] = graft.Par.run(
-      touched.map(d => () => {
-        def src = committedReader(spark, table, cur).parquet(d)
-        writeSplit(src.join(srcKeys, Seq(key), "left_anti"),
-          src.join(srcKeys, Seq(key), "left_semi"), table)
-      }) :+
-        (() => (writeData(source, table), "")): _*)
-    val staged = stagedAll.init.map(_._1)
-    val delDirs = stagedAll.init.map(_._2)
-    val srcDir = stagedAll.last._1
-    val cdcTags = (CdcInsTag + srcDir) +: delDirs.map(CdcDelTag + _)
-    // replay check (exactly-once ingest tag) runs once, just before the
-    // claim; a twin committing AFTER this check makes our exact claim
-    // fail (conflict), and the caller's retry re-runs the check
-    extraAbort() match {
-      case Some(v) =>
-        (staged ++ delDirs :+ srcDir).foreach(deleteDataDir)
-        return Some(v)
-      case None => ()
+    lazy val srcKeys = source.select(col(key)).distinct().localCheckpoint()
+    headCas(table, "merge") { cur =>
+      batch.flatMap { case (id, b) => replayedVersion(table, id, b) } match {
+        case Some(v) => Resolved(v)
+        case None =>
+          // cur == 0: first batch bootstraps the table — nothing to probe
+          val dirs = headDirs(table, cur)
+          val touched =
+            if (dirs.isEmpty) Seq.empty[String]
+            else probeTouched(committedReader(spark, table, cur), dirs,
+              _.join(srcKeys, Seq(key), "left_semi"))
+          // the source-batch landing write overlaps the per-dir split
+          // rewrites — it depends on none of them; the source dir
+          // doubles as the CDC insert side, so the feed needs no extra
+          // copy of the batch
+          val all = splitByKeys(spark, table, cur, touched, srcKeys, key)(
+            () => (writeData(source, table), ""))
+          val (staged, delDirs) = all.init.unzip
+          val srcDir = all.last._1
+          Claim(dirs.filterNot(touched.toSet) ++ staged :+ srcDir,
+            batch.map { case (id, b) => ingestTag(id, b) }.toSeq ++
+              ((CdcInsTag + srcDir) +: delDirs.map(CdcDelTag + _)),
+            staged = staged ++ delDirs :+ srcDir)
+      }
     }
-    // head CAS: the probe is only valid against the exact snapshot it
-    // ran on — any commit since (even a pure append) may carry matched
-    // keys it never saw. The exact claim of cur+1 IS the CAS.
-    val out = commitExactIf(table, cur,
-      (if (cur == 0) Seq.empty
-       else manifestDirs(table, cur)).filterNot(touched.toSet) ++
-        staged :+ srcDir,
-      tags ++ cdcTags)
-    if (out.isEmpty) (staged ++ delDirs :+ srcDir).foreach(deleteDataDir)
-    out
   }
 
   /** EXACTLY-ONCE streaming merge — the CDC-apply loop: each
@@ -777,26 +757,8 @@ object Snapshots {
     * A version-race loser recomputes against the winner's snapshot.
     */
   def mergeBatch(df: DataFrame, table: String, key: String,
-      streamId: String, batchId: Long): Int = {
-    if (batchCommitted(table, streamId, batchId))
-      return committedVersion(table, streamId, batchId)
-        .getOrElse(currentVersion(table))
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
-      mergeTagged(df.sparkSession, table, df, key,
-        tags = Seq(ingestTag(streamId, batchId)),
-        extraAbort = () =>
-          if (batchCommitted(table, streamId, batchId))
-            Some(committedVersion(table, streamId, batchId)
-              .getOrElse(currentVersion(table)))
-          else None)
-        .foreach(v => return v)
-      // conflict: a racing writer replaced a touched dir — re-probe
-      // against the new snapshot and retry
-    }
-    sys.error(s"mergeBatch to $table lost $attempt conflicts")
-  }
+      streamId: String, batchId: Long): Int =
+    mergeTagged(table, df, key, Some((streamId, batchId)))
 
   /** Continuous CDC apply: run a stream of keyed changes into the
     * versioned table — one upserted snapshot version per micro-batch,
@@ -915,34 +877,13 @@ object Snapshots {
   }
 
   /** [[commitOverwrite]] carrying provenance tags in the manifest —
-    * e.g. a materialized view's refreshed-through watermark. Tags
-    * commit atomically with the version (same mechanism as streaming
-    * ingest's exactly-once anchor).
+    * e.g. a quantizer's drift baseline. Tags commit atomically with the
+    * version (same mechanism as streaming ingest's exactly-once
+    * anchor).
     */
   def commitOverwriteTagged(df: DataFrame, table: String, tags: Seq[String]): Int = {
     val dir = writeData(df, table)
-    commitLoop(table, _ => Seq(dir), tags = tags, inheritSchema = false)
-  }
-
-  /** Conflict-checked tagged overwrite — compare-and-swap on the table
-    * head: commits `df` as version `expectHead + 1` iff the head is
-    * still `expectHead` at claim time, otherwise aborts (None) and
-    * removes the staged data. The primitive a read-fold-overwrite
-    * cycle (e.g. a materialized-view refresh) needs: the caller reads
-    * state from version `expectHead`, folds, and can only publish if
-    * nothing committed in between — a racing folder must re-read and
-    * re-fold rather than stack its delta on the winner's already-folded
-    * content.
-    */
-  def commitOverwriteTaggedIf(df: DataFrame, table: String, expectHead: Int,
-      tags: Seq[String]): Option[Int] = {
-    val dir = writeData(df, table)
-    // the create-exclusive claim of expectHead+1 IS the CAS — no head
-    // re-read between validation and claim (see [[commitExactIf]])
-    val out = commitExactIf(table, expectHead, Seq(dir), tags,
-      inheritSchema = false)
-    if (out.isEmpty) deleteDataDir(dir)
-    out
+    headCas(table, "overwrite")(_ => Claim(Seq(dir), tags, inheritSchema = false))
   }
 
   /** The provenance tags committed with a version's manifest. */
@@ -966,149 +907,108 @@ object Snapshots {
     */
   def commitAppend(df: DataFrame, table: String): Int = {
     val dir = writeData(df, table)
-    commitLoop(table, prev =>
-      (if (prev == 0) Seq.empty else manifestDirs(table, prev)) :+ dir)
+    headCas(table, "append")(head => Claim(headDirs(table, head) :+ dir))
   }
 
-  /** [[commitAppend]] carrying provenance tags atomically with the
-    * version — e.g. a derived index's maintained-through watermark
-    * (the append-side twin of [[commitOverwriteTagged]]).
+  /** One attempt of a [[foldThrough]] against the derived `table`'s
+    * pinned `head`, whose watermark is `lastV` (0, or a base version
+    * no longer readable, for a bootstrap), folding the base through
+    * `curV`. Its two stagers build the step's [[Claim]]; the fold adds
+    * the watermark tag.
     */
-  def commitAppendTagged(df: DataFrame, table: String, tags: Seq[String]): Int = {
-    val dir = writeData(df, table)
-    commitLoop(table, prev =>
-      (if (prev == 0) Seq.empty else manifestDirs(table, prev)) :+ dir,
-      tags = tags)
+  private[graft] final class Fold private[Snapshots] (val table: String,
+      val head: Int, val lastV: Int, val curV: Int) {
+    /** Stage `df` as the table's whole content; `netted` tags it as
+      * its own serving net ([[NettedTag]]).
+      */
+    def replace(df: DataFrame, netted: Boolean = false): Claim =
+      replaceClaim(df, table, if (netted) Seq(NettedTag) else Nil)
+
+    /** Stage `df` appended to the pinned head's content. */
+    def append(df: DataFrame): Claim = appendClaim(df, table, head)
   }
 
-  /** Conflict-checked tagged APPEND — the append-side twin of
-    * [[commitOverwriteTaggedIf]]: commits `df` on top of the table iff
-    * the head is still `expectHead` at claim time, otherwise aborts
-    * (None) and removes the staged data. The primitive a
-    * read-fold-APPEND maintenance cycle needs (e.g. a signed-delta MV
-    * refresh): the caller derives its delta from the watermark it read
-    * at `expectHead`; if a racing refresher committed the same span
-    * first, blindly appending would double-fold the delta — sign
-    * netting cannot cancel duplicates.
+  /** WATERMARK FOLD — the maintenance cycle of every derived structure
+    * (MVs, sketch and concurrency views, the clustered replica, every
+    * tombstone-folded index): pin the base's head `curV` (or take the
+    * caller's `pinned` version, for a walk folding several tables
+    * through ONE base version), then run [[headCas]] on the derived
+    * `table` with a step that reads the `prefix` watermark AT the
+    * pinned derived head and
+    *  - no-ops when it is ≥ `curV` (a racing fold already covered the
+    *    span — watermarks only move forward),
+    *  - runs `bootstrap` when it is 0 or names a base version no longer
+    *    readable (vacuumed under the structure: one full recompute, not
+    *    a delta read failing forever),
+    *  - runs `delta` otherwise, derived STRICTLY from the pinned
+    *    watermark (a changesBetween span),
+    * and claims the staged content tagged `prefix + curV`. Two walks
+    * that both observe watermark X therefore cannot BOTH fold X→Y: the
+    * loser's claim is lost, its retry re-reads the winner's watermark
+    * and no-ops — sign-netting cannot cancel a double-folded delta, so
+    * the CAS is the correctness line. Returns the version serving the
+    * fold (the winner's, when this fold no-oped).
+    *
+    * Admission control: a per-table fair semaphore bounds how many
+    * folds compete for one head at a time, so a contention storm
+    * queues instead of thrashing staged writes; lost claims back off
+    * and are counted like every commit's (see the object scaladoc).
     */
-  def commitAppendTaggedIf(df: DataFrame, table: String, expectHead: Int,
-      tags: Seq[String]): Option[Int] = {
-    val dir = writeData(df, table)
-    // exact claim of expectHead+1 with dirs pinned to expectHead's
-    // manifest — the claim is the CAS (see [[commitExactIf]])
-    val out = commitExactIf(table, expectHead,
-      (if (expectHead == 0) Seq.empty
-       else manifestDirs(table, expectHead)) :+ dir,
-      tags)
-    if (out.isEmpty) deleteDataDir(dir)
-    out
-  }
-
-  /** Conflict-checked WATERMARK FOLD — the maintenance-cycle primitive
-    * that promotes every derived structure's per-version fold from
-    * single-maintainer-by-convention to head-CAS-checked (the round-13
-    * concurrency promotion; [[graft.sources.MaterializedView.refresh]]
-    * pioneered the discipline): pin the derived table's head, read the
-    * maintained-through watermark AT that head, and publish the
-    * bootstrap (watermark 0) or the delta (derived STRICTLY from the
-    * pinned watermark — a changesBetween span) iff the head is still
-    * the pinned version at claim time. Two concurrent registry walks
-    * that both observe watermark X therefore cannot BOTH append the
-    * X→Y delta: the loser's claim aborts, it re-reads the winner's
-    * head, finds the watermark already at Y, and no-ops — sign-netting
-    * alone cannot cancel a double-folded delta, so the CAS is the
-    * correctness line, not an optimization. A watermark AHEAD of
-    * `curV` (a racing walk folded a newer base version first) also
-    * no-ops: watermarks only move forward, and the newer fold already
-    * covers this one's span. `delta(lastV)` is re-invoked per retry
-    * with the fresh watermark, so a lost race re-derives the remaining
-    * gap instead of replaying a stale delta. Returns the version
-    * serving the fold (the winner's, when this fold no-oped).
-    */
-  def foldThrough(table: String, prefix: String, curV: Int,
-      recomputeWhen: Int => Boolean = _ => false)(
-      bootstrap: => DataFrame)(delta: Int => DataFrame): Int = {
-    // ADMISSION CONTROL (round-14): a contention storm — many
-    // concurrent walks folding one derived table — must degrade
-    // GRACEFULLY, not by retry-spinning each fold toward its attempt
-    // ceiling. Three pieces: (1) a per-table fold budget (fair
-    // semaphore) bounds how many folds even compete for one head at a
-    // time, so the storm queues instead of thrashing staged writes
-    // that conflict-abort; (2) a lost claim backs off with bounded
-    // exponential delay + jitter before re-pinning, de-synchronizing
-    // the survivors; (3) conflicts and backoff time are COUNTED per
-    // table ([[drainFoldContention]]) and surfaced by the bench next
-    // to walk_ms, so contention is a tracked metric, not an invisible
-    // tax. Uncontended folds pay one uncontested tryAcquire — free.
+  private[graft] def foldThrough(base: String, table: String, prefix: String,
+      pinned: Option[Int] = None)(bootstrap: Fold => Claim)(
+      delta: Fold => Claim): Int = {
+    val curV = pinned.getOrElse(currentVersion(base))
+    require(curV > 0, s"base table $base has no committed version")
     val gate = foldGates.computeIfAbsent(table,
       _ => new java.util.concurrent.Semaphore(MaxConcurrentFolds, true))
     gate.acquire()
-    try {
-      var attempt = 0
-      while (attempt < 40) {
-        attempt += 1
-        val head = currentVersion(table)
-        val lastV = tagWatermarkAt(table, prefix, head)
-        if (lastV >= curV) return head
-        val tags = Seq(prefix + curV)
-        // recomputeWhen: the watermark version is unusable for a delta
-        // read (e.g. the base manifest was VACUUMED under the index) —
-        // degrade to one full recompute + a fresh watermark, the MV
-        // refresh convention, instead of failing every fold forever
-        // the bootstrap of every maintained structure is net-shaped by
-        // construction (one grouped row per served entity, no
-        // tombstones) — commit it tagged as netted so serves can skip
-        // the re-netting aggregate until the first delta lands
-        val out =
-          if (lastV == 0 || recomputeWhen(lastV))
-            commitOverwriteTaggedIf(bootstrap, table, head, tags :+ NettedTag)
-          else commitAppendTaggedIf(delta(lastV), table, head, tags)
-        out match {
-          case Some(v) => return v
-          case None => // lost the head race: count, back off, re-derive
-            noteFoldConflict(table, attempt)
-        }
+    try headCas(table, s"fold of $base through v$curV") { head =>
+      val lastV = tagWatermarkAt(table, prefix, head)
+      if (lastV >= curV) Resolved(head)
+      else {
+        val f = new Fold(table, head, lastV, curV)
+        val c = if (versionAvailable(base, lastV)) delta(f) else bootstrap(f)
+        c.copy(tags = (prefix + curV) +: c.tags)
       }
-      sys.error(s"maintenance fold of $table lost $attempt head races")
     } finally gate.release()
   }
 
-  // ---- registry-walk admission control (round-14 verdict item) ----
+  // ---- contention: fold admission, commit backoff and its counters ----
 
   private val MaxConcurrentFolds = 4
   private val foldGates =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.Semaphore]()
-  private val foldConflictCounts =
+  private val lostClaims =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.LongAdder]()
-  private val foldBackoffMs =
+  private val backoffMs =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.LongAdder]()
 
-  /** Record one lost fold race and sleep a bounded exponential backoff
-    * (2^attempt ms, capped at 100 ms, with uniform jitter) so racing
-    * survivors de-synchronize instead of re-colliding in lockstep.
+  /** Record one lost claim on `table` and sleep a bounded exponential
+    * backoff (2^attempt ms, capped at 100 ms, with uniform jitter) so
+    * racing survivors de-synchronize instead of re-colliding in
+    * lockstep.
     */
-  private def noteFoldConflict(table: String, attempt: Int): Unit = {
-    foldConflictCounts.computeIfAbsent(table,
+  private def backOff(table: String, attempt: Int): Unit = {
+    lostClaims.computeIfAbsent(table,
       _ => new java.util.concurrent.atomic.LongAdder()).increment()
     val cap = math.min(100L, 1L << math.min(attempt, 7))
     val sleep = 1L + java.util.concurrent.ThreadLocalRandom.current().nextLong(cap)
-    foldBackoffMs.computeIfAbsent(table,
+    backoffMs.computeIfAbsent(table,
       _ => new java.util.concurrent.atomic.LongAdder()).add(sleep)
     Thread.sleep(sleep)
   }
 
-  /** Drain the per-table fold-contention counters accumulated since
+  /** Drain the per-table commit-contention counters accumulated since
     * the last drain: table → (lost claim races, backoff ms slept).
     * The bench surfaces these next to walk_ms so a contention storm is
     * a tracked regression line, not an invisible retry tax.
     */
   def drainFoldContention(): Map[String, (Long, Long)] = {
-    import scala.jdk.CollectionConverters._
-    val tables = (foldConflictCounts.keySet().asScala ++
-      foldBackoffMs.keySet().asScala).toSeq.distinct
+    val tables = (lostClaims.keySet().asScala ++
+      backoffMs.keySet().asScala).toSeq.distinct
     tables.map { t =>
-      val c = Option(foldConflictCounts.remove(t)).map(_.sum()).getOrElse(0L)
-      val b = Option(foldBackoffMs.remove(t)).map(_.sum()).getOrElse(0L)
+      val c = Option(lostClaims.remove(t)).map(_.sum()).getOrElse(0L)
+      val b = Option(backoffMs.remove(t)).map(_.sum()).getOrElse(0L)
       t -> (c, b)
     }.filter { case (_, (c, b)) => c > 0 || b > 0 }.toMap
   }
@@ -1158,30 +1058,18 @@ object Snapshots {
   }
 
   def compactNet(spark: SparkSession, table: String, watermarkPrefix: String)(
-      net: DataFrame => DataFrame): Int = {
-    // CAS on the head version read at compaction start: a maintenance
-    // append landing between the read and the overwrite would be
-    // dropped from the compacted content (and its newer watermark
-    // regressed) if we blind-published — on conflict, re-read HEAD and
-    // re-fold so the late delta survives
-    var out = -1
-    while (out < 0) {
-      val head = currentVersion(table)
-      val through = tagWatermarkAt(table, watermarkPrefix, head)
-      // content-PRESERVING commit: re-carry the head's committed
-      // schema tags explicitly (commitOverwriteTaggedIf is a
-      // content-replacing primitive and never inherits them — a bare
-      // call would silently revert a schema-tracked table to
-      // footer-inferred reads, re-exposing dropped columns)
-      commitOverwriteTaggedIf(net(readVersion(spark, table, head)), table,
-        head, Seq(watermarkPrefix + through, NettedTag) ++
-          schemaMetaTags(table, head)) match {
-        case Some(v) => out = v
-        case None => ()
-      }
+      net: DataFrame => DataFrame): Int =
+    // content-PRESERVING rewrite of the pinned head: re-carry its
+    // watermark and committed schema tags explicitly (a replace claim
+    // never inherits them — dropping them would re-expose dropped
+    // columns); a maintenance append racing the rewrite makes the
+    // claim fail and the retry re-nets the new head, so the late delta
+    // survives
+    headCas(table, "compaction") { head =>
+      replaceClaim(net(readVersion(spark, table, head)), table,
+        Seq(watermarkPrefix + tagWatermarkAt(table, watermarkPrefix, head), NettedTag) ++
+          schemaMetaTags(table, head))
     }
-    out
-  }
 
   /** Tombstone/delta debt of a derived table: (rows in the base data
     * dir, rows across all later delta dirs). Row counts come from
@@ -1303,7 +1191,7 @@ object Snapshots {
   }
 
   /** A version's schema metadata lines verbatim (schema + tombstones),
-    * for content-preserving commits to re-commit (see commitLoopDyn).
+    * for content-preserving commits to re-commit (see [[Claim]]).
     */
   private def schemaMetaTags(table: String, version: Int): Seq[String] = {
     val p = meta(table).resolve(s"v$version.manifest")
@@ -1371,10 +1259,10 @@ object Snapshots {
           StructType((b.fields ++ fresh).map(_.copy(nullable = true)))
       }
     }
-    commitLoopDyn(table,
-      prev => (if (prev == 0) Seq.empty else manifestDirs(table, prev)) :+ dir,
-      prev => (SchemaTagPrefix + merged(prev).json) +:
+    headCas(table, "evolving append") { prev =>
+      Claim(headDirs(table, prev) :+ dir, (SchemaTagPrefix + merged(prev).json) +:
         droppedTagFor(if (prev == 0) Set.empty else droppedOf(table, prev)))
+    }
   }
 
   /** Metadata-ONLY schema commit — the DROP/reorder-COLUMN analog: the
@@ -1389,22 +1277,21 @@ object Snapshots {
     // table schema would be a lie the engine could miscompile on
     val nullable = org.apache.spark.sql.types.StructType(
       schema.fields.map(_.copy(nullable = true)))
-    commitLoopDyn(table,
-      prev => if (prev == 0) Seq.empty else manifestDirs(table, prev),
-      prev => {
-        val names = nullable.fieldNames.toSet
-        val prevDropped = if (prev == 0) Set.empty[String] else droppedOf(table, prev)
-        val resurrected = names.intersect(prevDropped)
-        require(resurrected.isEmpty,
-          s"columns ${resurrected.mkString(", ")} were dropped from $table; " +
-            "re-adding the name would resurrect stale on-disk values — use a new name")
-        // names leaving the committed schema join the tombstone set
-        // (only trackable once the table is schema-tracked)
-        val nowDropped = prevDropped ++ (if (prev == 0) Set.empty[String]
-          else schemaOf(table, prev).map(_.fieldNames.toSet -- names)
-            .getOrElse(Set.empty[String]))
-        (SchemaTagPrefix + nullable.json) +: droppedTagFor(nowDropped)
-      })
+    headCas(table, "schema commit") { prev =>
+      val names = nullable.fieldNames.toSet
+      val prevDropped = if (prev == 0) Set.empty[String] else droppedOf(table, prev)
+      val resurrected = names.intersect(prevDropped)
+      require(resurrected.isEmpty,
+        s"columns ${resurrected.mkString(", ")} were dropped from $table; " +
+          "re-adding the name would resurrect stale on-disk values — use a new name")
+      // names leaving the committed schema join the tombstone set
+      // (only trackable once the table is schema-tracked)
+      val nowDropped = prevDropped ++ (if (prev == 0) Set.empty[String]
+        else schemaOf(table, prev).map(_.fieldNames.toSet -- names)
+          .getOrElse(Set.empty[String]))
+      Claim(headDirs(table, prev),
+        (SchemaTagPrefix + nullable.json) +: droppedTagFor(nowDropped))
+    }
   }
 
   /** Commit a new version whose directory list is an arbitrary
@@ -1414,8 +1301,7 @@ object Snapshots {
     * races. Returns (version, dirs it replaced).
     */
   def commitTransform(table: String)(f: Seq[String] => Seq[String]): Int =
-    commitLoop(table, prev =>
-      f(if (prev == 0) Seq.empty else manifestDirs(table, prev)))
+    headCas(table, "transform")(prev => Claim(f(headDirs(table, prev))))
 
   /** Conflict-checked transform: aborts (returns None) when any dir in
     * `requires` is no longer part of the predecessor's manifest. Two
@@ -1428,25 +1314,19 @@ object Snapshots {
   def commitTransformIf(table: String, requires: Seq[String],
       tags: Seq[String] = Nil, inheritSchema: Boolean = true)(
       f: Seq[String] => Seq[String]): Option[Int] = {
-    // per attempt: pin ONE version, validate `requires` against ITS
-    // manifest, and claim exactly cur+1 with content derived from that
-    // same manifest — the claim is the CAS, so a racer landing between
-    // validation and claim fails the claim instead of letting stale
-    // staged content graft onto the racer's manifest. A benign race
-    // (requires still present in the new head) retries; a conflicting
-    // one (an input dir left the manifest) aborts with None.
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      attempt += 1
-      val cur = currentVersion(table)
-      val dirs = if (cur == 0) Seq.empty[String] else manifestDirs(table, cur)
-      if (!requires.forall(dirs.toSet.contains)) return None
-      commitExactIf(table, cur, f(dirs), tags, inheritSchema) match {
-        case Some(v) => return Some(v)
-        case None => () // claim race: re-pin and re-validate
-      }
+    // per attempt: validate `requires` against the pinned head's
+    // manifest and derive the claim from that same manifest — a racer
+    // landing between validation and claim fails the claim instead of
+    // letting stale staged content graft onto its manifest. A benign
+    // race (requires still present in the new head) retries; a
+    // conflicting one (an input dir left the manifest) aborts with None.
+    var conflict = false
+    val v = headCas(table, "conditional transform") { cur =>
+      val dirs = headDirs(table, cur)
+      conflict = !requires.forall(dirs.toSet.contains)
+      if (conflict) Resolved(cur) else Claim(f(dirs), tags, inheritSchema)
     }
-    None
+    if (conflict) None else Some(v)
   }
 
   /** The data directories making up a committed version (read-only
@@ -1523,6 +1403,17 @@ object Snapshots {
       .sorted.headOption
   }
 
+  /** The version a replay of (streamId, batchId) resolves to — the
+    * one ITS OWN commit created, or the head when a vacuumed tombstone
+    * is all that remembers the tag — or None if the batch never
+    * committed.
+    */
+  private def replayedVersion(table: String, streamId: String,
+      batchId: Long): Option[Int] =
+    if (!batchCommitted(table, streamId, batchId)) None
+    else Some(committedVersion(table, streamId, batchId)
+      .getOrElse(currentVersion(table)))
+
   /** Commit one micro-batch EXACTLY ONCE: the (streamId, batchId)
     * provenance tag travels inside the atomically-claimed manifest,
     * so a replayed batch (Structured Streaming re-runs foreachBatch
@@ -1530,49 +1421,30 @@ object Snapshots {
     * twice. Returns the (existing or new) committed version.
     */
   def ingestBatch(df: DataFrame, table: String, streamId: String,
-      batchId: Long): Int = {
-    if (batchCommitted(table, streamId, batchId))
-      // resolve the replay to the version ITS OWN commit created (falls
-      // back to the head only when a vacuumed tombstone is all that
-      // remembers the tag)
-      return committedVersion(table, streamId, batchId)
-        .getOrElse(currentVersion(table))
-    val dir = writeData(df, table)
-    ingestExact(table, streamId, batchId, dir)
-  }
+      batchId: Long): Int =
+    replayedVersion(table, streamId, batchId).getOrElse(
+      commitBatch(table, streamId, batchId, writeData(df, table), append = true))
 
-  /** Shared exactly-once claim loop for the ingest-tag family: per
-    * attempt, re-check the (streamId, batchId) tag, pin ONE head, and
-    * claim exactly head+1 — the create-exclusive claim is the CAS, so
+  /** Exactly-once claim of a staged batch dir, appended to the head's
+    * content or (`append` = false) replacing it: every attempt
+    * re-checks the (streamId, batchId) tag against the pinned head, so
     * two concurrent replays of the same batch (a zombie driver racing
-    * its restarted query) can never BOTH commit: the loser's claim
-    * fails, it re-checks, sees the winner's tag, and resolves to the
-    * winner's version. The check-then-act alternative (check the tag,
-    * then re-read the head to pick the next version) left a window
-    * where a twin committing between the two reads let the batch land
-    * twice.
+    * its restarted query) can never BOTH commit — the loser's claim
+    * fails, its retry sees the winner's tag, drops its staged dir and
+    * resolves to the winner's version. A replacing batch defines the
+    * schema afresh: inheriting the head's schema tags would serve the
+    * OLD schema over the new content.
     */
-  private def ingestExact(table: String, streamId: String, batchId: Long,
-      dir: String): Int = {
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      attempt += 1
-      if (batchCommitted(table, streamId, batchId)) {
-        deleteDataDir(dir)
-        return committedVersion(table, streamId, batchId)
-          .getOrElse(currentVersion(table))
-      }
-      val head = currentVersion(table)
-      commitExactIf(table, head,
-        (if (head == 0) Seq.empty else manifestDirs(table, head)) :+ dir,
-        Seq(ingestTag(streamId, batchId))) match {
-        case Some(v) => return v
-        case None => () // claim race: re-check the tag and retry
+  private def commitBatch(table: String, streamId: String, batchId: Long,
+      dir: String, append: Boolean): Int =
+    headCas(table, s"batch ($streamId, $batchId)") { head =>
+      replayedVersion(table, streamId, batchId) match {
+        case Some(v) => deleteDataDir(dir); Resolved(v)
+        case None =>
+          Claim((if (append) headDirs(table, head) else Nil) :+ dir,
+            Seq(ingestTag(streamId, batchId)), inheritSchema = append)
       }
     }
-    sys.error(s"ingest batch ($streamId, $batchId) to $table lost " +
-      s"$MaxCommitAttempts claim races")
-  }
 
   /** [[ingestBatch]] with a CALLER-STAGED data dir — for batches whose
     * on-disk layout matters (e.g. a cid-partitioned append to a
@@ -1582,14 +1454,12 @@ object Snapshots {
     * atomically and is re-checked inside every claim attempt.
     */
   def ingestBatchStaged(table: String, streamId: String, batchId: Long)(
-      stage: String => Unit): Int = {
-    if (batchCommitted(table, streamId, batchId))
-      return committedVersion(table, streamId, batchId)
-        .getOrElse(currentVersion(table))
-    val dir = stageDir(table)
-    stage(dir)
-    ingestExact(table, streamId, batchId, dir)
-  }
+      stage: String => Unit): Int =
+    replayedVersion(table, streamId, batchId).getOrElse {
+      val dir = stageDir(table)
+      stage(dir)
+      commitBatch(table, streamId, batchId, dir, append = true)
+    }
 
   /** EXACTLY-ONCE batched DELETE — the erasure-request stream's commit
     * unit (the DML twin of [[ingestBatch]]): rewrite the snapshot with
@@ -1604,30 +1474,22 @@ object Snapshots {
   def deleteBatch(spark: SparkSession, table: String,
       cond: org.apache.spark.sql.Column, streamId: String,
       batchId: Long): Int = {
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
-      if (batchCommitted(table, streamId, batchId))
-        return committedVersion(table, streamId, batchId)
-          .getOrElse(currentVersion(table))
-      val head = currentVersion(table)
-      val hit = org.apache.spark.sql.functions.coalesce(
-        cond, org.apache.spark.sql.functions.lit(false))
-      val df = readVersion(spark, table, head)
-      // the split write stages the kept rows (the new data dir) and
-      // the deleted rows (the CDC sidecar) — schema-preserving like
-      // [[deleteWhere]]
-      val (dataDir, delDir) = writeSplit(df.where(!hit), df.where(hit), table)
-      commitExactIf(table, head, Seq(dataDir),
-        Seq(ingestTag(streamId, batchId), CdcDelTag + delDir) ++
-          schemaMetaTags(table, head),
-        inheritSchema = false) match {
-        case Some(v) => return v
-        case None => // lost a head race — clean and retry
-          Seq(dataDir, delDir).foreach(deleteDataDir)
+    val hit = org.apache.spark.sql.functions.coalesce(
+      cond, org.apache.spark.sql.functions.lit(false))
+    headCas(table, s"deleteBatch ($streamId, $batchId)") { head =>
+      replayedVersion(table, streamId, batchId) match {
+        case Some(v) => Resolved(v)
+        case None =>
+          val df = readVersion(spark, table, head)
+          // the split write stages the kept rows (the new data dir) and
+          // the deleted rows (the CDC sidecar) — schema-preserving like
+          // [[deleteWhere]]
+          val (dataDir, delDir) = writeSplit(df.where(!hit), df.where(hit), table)
+          Claim(Seq(dataDir), Seq(ingestTag(streamId, batchId), CdcDelTag + delDir) ++
+            schemaMetaTags(table, head), inheritSchema = false,
+            staged = Seq(dataDir, delDir))
       }
     }
-    sys.error(s"deleteBatch to $table lost $attempt head races")
   }
 
   /** [[ingestBatch]]'s OVERWRITE flavor — exactly-once per
@@ -1638,33 +1500,9 @@ object Snapshots {
     * every claim attempt (zombie-replay safe).
     */
   def commitBatchOverwrite(df: DataFrame, table: String, streamId: String,
-      batchId: Long): Int = {
-    if (batchCommitted(table, streamId, batchId))
-      return committedVersion(table, streamId, batchId)
-        .getOrElse(currentVersion(table))
-    val dir = writeData(df, table)
-    // content-REPLACING commit: the batch's own data defines the
-    // schema afresh — inheriting the predecessor's schema tags (the
-    // append-family default) would serve the OLD schema over the new
-    // content (evolved-in columns invisible, dropped ones resurrected).
-    // Same exactly-once exact-claim loop as [[ingestExact]].
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      attempt += 1
-      if (batchCommitted(table, streamId, batchId)) {
-        deleteDataDir(dir)
-        return committedVersion(table, streamId, batchId)
-          .getOrElse(currentVersion(table))
-      }
-      commitExactIf(table, currentVersion(table), Seq(dir),
-        Seq(ingestTag(streamId, batchId)), inheritSchema = false) match {
-        case Some(v) => return v
-        case None => () // claim race: re-check the tag and retry
-      }
-    }
-    sys.error(s"overwrite batch ($streamId, $batchId) to $table lost " +
-      s"$MaxCommitAttempts claim races")
-  }
+      batchId: Long): Int =
+    replayedVersion(table, streamId, batchId).getOrElse(
+      commitBatch(table, streamId, batchId, writeData(df, table), append = false))
 
   /** Continuous ingestion: run a streaming DataFrame into the
     * versioned table — one snapshot version per micro-batch, readers
@@ -1827,8 +1665,8 @@ object Snapshots {
     try taggedVersion(table, tag).getOrElse {
       val dir = stageDir(table)
       stage(dir)
-      val v = commitLoop(table, _ => Seq(dir), tags = Seq(indexTag(tag)),
-        inheritSchema = false)
+      val v = headCas(table, s"index build $tag")(_ =>
+        Claim(Seq(dir), Seq(indexTag(tag)), inheritSchema = false))
       // a new content key means the OLD keys' inputs no longer exist;
       // retain one predecessor for any still-pinned reader and retire
       // the rest, so regenerated inputs replace trained artifacts
@@ -1961,10 +1799,8 @@ object Snapshots {
     */
   def commitClustered(df: DataFrame, table: String, zCols: Seq[String],
       files: Int = 16): Int = {
-    val dir = stageDir(table)
-    Sources.writeZOrderedN(df, dir, zCols, files = files)
-    markClustered(dir)
-    commitLoop(table, _ => Seq(dir), inheritSchema = false)
+    val dir = zOrderedRun(df, table, zCols, files)
+    headCas(table, "clustered overwrite")(_ => Claim(Seq(dir), inheritSchema = false))
   }
 
   /** Append rows WITHOUT clustering them — cheap ingest; the delta
@@ -1984,24 +1820,28 @@ object Snapshots {
     * pre-compaction versions remain readable until vacuumed.
     */
   def compact(spark: SparkSession, table: String, zCols: Seq[String],
-      files: Int = 16): Int = {
-    val cur = currentVersion(table)
-    val (clustered, deltas) = manifestDirs(table, cur).partition(isClustered)
-    if (deltas.isEmpty) return cur
-    val dir = stageDir(table)
-    Sources.writeZOrderedN(readDirs(spark, table, cur, deltas), dir, zCols, files = files)
-    markClustered(dir)
-    // racing appenders may have added NEW deltas since we read `cur`:
-    // keep any dirs we did not compact. Racing COMPACTORS/overwrites are
-    // a conflict, not a merge: if any input delta left the manifest, our
-    // staged dir would duplicate (or resurrect) its rows — abort, drop
-    // the staged dir, and recompact from the new snapshot.
-    // content-preserving: the change feed may skip this step
-    commitTransformIf(table, deltas, tags = Seq(CdcNoopTag))(dirs =>
-      dirs.filterNot(deltas.contains) :+ dir).getOrElse {
-      deleteDataDir(dir)
-      compact(spark, table, zCols, files)
+      files: Int = 16): Int =
+    headCas(table, "compact") { cur =>
+      val dirs = headDirs(table, cur)
+      val deltas = dirs.filterNot(isClustered)
+      if (deltas.isEmpty) Resolved(cur)
+      else {
+        val dir = zOrderedRun(readDirs(spark, table, cur, deltas), table, zCols, files)
+        // dirs a racing appender adds after the pin fail the claim and
+        // are re-read by the retry; content-preserving: the change
+        // feed may skip this step
+        Claim(dirs.filterNot(deltas.contains) :+ dir, Seq(CdcNoopTag),
+          staged = Seq(dir))
+      }
     }
+
+  /** Stage `df` as one fresh Z-ordered run of `files` files on `zCols`. */
+  private def zOrderedRun(df: DataFrame, table: String, zCols: Seq[String],
+      files: Int): String = {
+    val dir = stageDir(table)
+    Sources.writeZOrderedN(df, dir, zCols, files = files)
+    markClustered(dir)
+    dir
   }
 
   private val ZlThroughPrefix = "zl_through "
@@ -2026,90 +1866,54 @@ object Snapshots {
     *    LSM shape [[compact]] maintains: each run is independently
     *    sorted, parquet min/max prunes within every run).
     *
-    * Head-CAS with retry (the foldThrough discipline): concurrent
-    * walks cannot double-fold, and a racing appender aborts the
-    * rewrite rather than losing rows. `key` must identify rows
-    * (the table's primary key), independent of whatever predicate
-    * drove the base DML.
+    * A [[foldThrough]] (zl_through watermark; a vacuumed watermark
+    * degrades to one full re-cluster), so concurrent walks cannot
+    * double-fold and a racing appender re-folds instead of losing rows.
+    * `key` must identify rows (the table's primary key), independent
+    * of whatever predicate drove the base DML.
     */
   def clusteredMaintain(spark: SparkSession, baseTable: String, table: String,
       key: String, zCols: Seq[String], files: Int = 8): Int = {
     import org.apache.spark.sql.functions.col
-    val curV = currentVersion(baseTable)
-    require(curV > 0, s"base table $baseTable has no committed version")
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
-      val head = currentVersion(table)
-      val lastV = tagWatermarkAt(table, ZlThroughPrefix, head)
-      if (lastV >= curV) return head
-      val tags = Seq(ZlThroughPrefix + curV)
-      // a vacuumed watermark degrades to one full re-cluster (the MV
-      // refresh convention), never a permanently failing delta read
-      if (lastV == 0 || !versionAvailable(baseTable, lastV)) {
-        val dir = stageDir(table)
-        Sources.writeZOrderedN(
-          readVersion(spark, baseTable, curV), dir, zCols, files = files)
-        markClustered(dir)
-        // the exact claim of head+1 is the CAS (see [[commitExactIf]])
-        commitExactIf(table, head, Seq(dir), tags,
-          inheritSchema = false) match {
-          case Some(v) => return v
-          case None => deleteDataDir(dir)
-        }
-      } else {
-        val (ins0, del0) = changesBetween(spark, baseTable, lastV, curV)
-        val ins = ins0.localCheckpoint()
-        val delKeys = del0.select(col(key)).distinct().localCheckpoint()
-        val dirs = manifestDirs(table, head)
-        val reader = committedReader(spark, table, head)
-        val touched =
-          if (delKeys.isEmpty) Seq.empty[String]
-          else probeTouched(reader, dirs, _.join(delKeys, Seq(key), "left_semi"))
-        val staged = touched.map { d =>
+    val v = foldThrough(baseTable, table, ZlThroughPrefix) { f =>
+      val dir = zOrderedRun(readVersion(spark, baseTable, f.curV), table, zCols, files)
+      Claim(Seq(dir), inheritSchema = false, staged = Seq(dir))
+    } { f =>
+      val (ins0, del0) = changesBetween(spark, baseTable, f.lastV, f.curV)
+      val ins = ins0.localCheckpoint()
+      val delKeys = del0.select(col(key)).distinct().localCheckpoint()
+      val dirs = manifestDirs(table, f.head)
+      val reader = committedReader(spark, table, f.head)
+      val touched =
+        if (delKeys.isEmpty) Seq.empty[String]
+        else probeTouched(reader, dirs, _.join(delKeys, Seq(key), "left_semi"))
+      val staged = touched.map { d =>
+        val survivors = reader.parquet(d).join(delKeys, Seq(key), "left_anti")
+        // a touched CLUSTERED run RE-CLUSTERS its survivors (the
+        // delta re-cluster path): a plain rewrite would let the join
+        // repartition scatter rows across files and blunt every
+        // file's min/max to the full key range — O(touched run),
+        // never O(table)
+        if (isClustered(d)) zOrderedRun(survivors, table, zCols, files)
+        else {
           val out = stageDir(table)
-          val survivors = reader.parquet(d).join(delKeys, Seq(key), "left_anti")
-          // a touched CLUSTERED run RE-CLUSTERS its survivors (the
-          // delta re-cluster path): a plain rewrite would let the join
-          // repartition scatter rows across files and blunt every
-          // file's min/max to the full key range — O(touched run),
-          // never O(table)
-          if (isClustered(d)) {
-            Sources.writeZOrderedN(survivors, out, zCols, files = files)
-            markClustered(out)
-          } else
-            survivors.write.mode(SaveMode.ErrorIfExists).parquet(out)
+          survivors.write.mode(SaveMode.ErrorIfExists).parquet(out)
           out
         }
-        val insDir: Option[String] =
-          if (ins.isEmpty) None
-          else {
-            val out = stageDir(table)
-            Sources.writeZOrderedN(ins, out, zCols,
-              files = math.max(1, files / 4))
-            markClustered(out)
-            Some(out)
-          }
-        // exact claim of head+1, content pinned to head's manifest —
-        // the claim is the CAS (see [[commitExactIf]])
-        val out = commitExactIf(table, head,
-          manifestDirs(table, head).filterNot(touched.toSet) ++
-            staged ++ insDir.toSeq,
-          tags)
-        if (out.isEmpty) (staged ++ insDir.toSeq).foreach(deleteDataDir)
-        else {
-          val v = out.get
-          // run-count compaction policy (the LSM size-ratio convention
-          // applied to runs): fold churn accretes one clustered insert
-          // run + rewritten survivor runs per DML cycle — past the
-          // bound, major-re-cluster into ONE run so pruned reads never
-          // degrade into a many-run footer sweep
-          clusteredMaybeCompact(spark, table, zCols, files)
-          return v
-        }
       }
+      val insDir =
+        if (ins.isEmpty) None
+        else Some(zOrderedRun(ins, table, zCols, math.max(1, files / 4)))
+      Claim(dirs.filterNot(touched.toSet) ++ staged ++ insDir,
+        staged = staged ++ insDir)
     }
-    sys.error(s"clustered maintenance of $table lost $attempt head races")
+    // run-count compaction policy (the LSM size-ratio convention
+    // applied to runs): fold churn accretes one clustered insert run +
+    // rewritten survivor runs per DML cycle — past the bound,
+    // major-re-cluster into ONE run so pruned reads never degrade into
+    // a many-run footer sweep
+    clusteredMaybeCompact(spark, table, zCols, files)
+    v
   }
 
   /** Bounded MAJOR re-cluster of a [[clusteredMaintain]] replica: when
@@ -2122,25 +1926,15 @@ object Snapshots {
     */
   private def clusteredMaybeCompact(spark: SparkSession, table: String,
       zCols: Seq[String], files: Int, maxRuns: Int = 8): Unit = {
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
-      val head = currentVersion(table)
-      if (head == 0 || manifestDirs(table, head).size <= maxRuns) return
-      val through = tagWatermarkAt(table, ZlThroughPrefix, head)
-      val dir = stageDir(table)
-      Sources.writeZOrderedN(readVersion(spark, table, head), dir, zCols,
-        files = files)
-      markClustered(dir)
-      // exact claim of head+1 — the claim is the CAS
-      commitExactIf(table, head, Seq(dir),
-        Seq(ZlThroughPrefix + through) ++ schemaMetaTags(table, head),
-        inheritSchema = false) match {
-        case Some(_) => return
-        case None => deleteDataDir(dir)
+    headCas(table, "clustered compaction") { head =>
+      if (head == 0 || manifestDirs(table, head).size <= maxRuns) Resolved(head)
+      else {
+        val dir = zOrderedRun(readVersion(spark, table, head), table, zCols, files)
+        Claim(Seq(dir), Seq(ZlThroughPrefix + tagWatermarkAt(table, ZlThroughPrefix, head)) ++
+          schemaMetaTags(table, head), inheritSchema = false, staged = Seq(dir))
       }
     }
-    sys.error(s"clustered compaction of $table lost $attempt head races")
+    ()
   }
 
   /** MAJOR compaction: merge EVERY current dir — clustered runs and
@@ -2148,24 +1942,16 @@ object Snapshots {
     * [[compact]]: minor compactions bound the run count cheaply;
     * an occasional major pass restores the single-run layout whose
     * per-file min/max boxes are globally tight). O(table) by design,
-    * so schedule it like any table rewrite. Dirs that race in after
-    * our snapshot read survive untouched.
+    * so schedule it like any table rewrite. A commit racing the
+    * rewrite fails its claim, and the retry re-compacts the new head.
     */
   def compactFull(spark: SparkSession, table: String, zCols: Seq[String],
-      files: Int = 16): Int = {
-    val cur = currentVersion(table)
-    val snap = manifestDirs(table, cur)
-    val dir = stageDir(table)
-    Sources.writeZOrderedN(readDirs(spark, table, cur, snap), dir, zCols, files = files)
-    markClustered(dir)
-    // content-preserving: the change feed may skip this step
-    commitTransformIf(table, snap, tags = Seq(CdcNoopTag))(dirs =>
-      dir +: dirs.filterNot(snap.contains))
-      .getOrElse {
-        deleteDataDir(dir)
-        compactFull(spark, table, zCols, files)
-      }
-  }
+      files: Int = 16): Int =
+    headCas(table, "full compaction") { cur =>
+      val dir = zOrderedRun(readVersion(spark, table, cur), table, zCols, files)
+      // content-preserving: the change feed may skip this step
+      Claim(Seq(dir), Seq(CdcNoopTag), staged = Seq(dir))
+    }
 
   private def deleteDataDir(dir: String): Unit = deleteRecursively(dir)
 

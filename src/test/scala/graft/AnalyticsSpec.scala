@@ -108,7 +108,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("semantic-dedup drift trigger: shifted corpus fires re-train; verdicts recover one-shot parity") {
     import graft.sources.Snapshots
-    val root = "/root/repo/target/semdrift_spec"
+    val root = s"${Roots.scratch}/semdrift_spec"
     Snapshots.deleteRecursively(root)
     val (centsT, memT) = (s"$root/cents", s"$root/members")
     val e = Tables.load(spark, sfDir, "embeddings")
@@ -1547,7 +1547,7 @@ class AnalyticsSpec extends SparkSpec {
     assert(got == plain)
     val n = Tables.load(spark, sfDir, "nation")
     val fp = graft.sources.Snapshots.fileFingerprint(s"$sfDir/nation.parquet")
-    val path = "/root/repo/target/csvsink/" + sfDir.replaceAll("[^A-Za-z0-9]", "_")
+    val path = s"${Roots.scratch}/csvsink/" + sfDir.replaceAll("[^A-Za-z0-9]", "_")
     val ver = graft.sources.Snapshots.ensureIndex(path, fp) { out =>
       n.write.option("header", "true").csv(out)
     }

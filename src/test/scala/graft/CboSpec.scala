@@ -180,7 +180,7 @@ class CboSpec extends SparkSpec {
     import graft.functions.Portable
     import graft.plans.MvRewrite
     import graft.sources.{MaterializedView, Snapshots}
-    val root = "/root/repo/target/cbo-spec/mv_rw"
+    val root = s"${Roots.scratch}/cbo-spec/mv_rw"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
     }
@@ -250,7 +250,7 @@ class CboSpec extends SparkSpec {
   test("MV rewrite serves min/max/avg shapes, including the lattice") {
     import graft.plans.MvRewrite
     import graft.sources.{MaterializedView, Snapshots}
-    val root = "/root/repo/target/cbo-spec/mv_minmax"
+    val root = s"${Roots.scratch}/cbo-spec/mv_minmax"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
     }
@@ -353,7 +353,7 @@ class CboSpec extends SparkSpec {
     import spark.implicits._
     // a real datasource: a LocalRelation filter would be folded away
     // by ConvertToLocalRelation before any plan survives to inspect
-    val path = "/root/repo/target/cbo-spec/lev_pairs"
+    val path = s"${Roots.scratch}/cbo-spec/lev_pairs"
     Seq(("kitten", "sitting"), ("abc", "abcdefghij"), ("same", "same"))
       .toDF("a", "b").write.mode("overwrite").parquet(path)
     val df = spark.read.parquet(path).where(expr("levenshtein(a, b) <= 3"))
@@ -376,7 +376,7 @@ class CboSpec extends SparkSpec {
   test("SKETCH-MV lattice rewrite: optimizer routing, answer-invariance, staleness refusal") {
     import graft.plans.MvRewrite
     import graft.sources.{MaterializedView, Snapshots}
-    val root = "/root/repo/target/cbo-spec/mv_sketch"
+    val root = s"${Roots.scratch}/cbo-spec/mv_sketch"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
     }
@@ -454,7 +454,7 @@ class CboSpec extends SparkSpec {
   test("JOIN-view rewrite: optimizer routing, bag answer-invariance, two-sided staleness refusal") {
     import graft.plans.MvRewrite
     import graft.sources.{MaterializedView, Snapshots}
-    val root = "/root/repo/target/cbo-spec/mv_join"
+    val root = s"${Roots.scratch}/cbo-spec/mv_join"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
     }
@@ -514,7 +514,7 @@ class CboSpec extends SparkSpec {
     import graft.functions.Portable
     import graft.plans.MvRewrite
     import graft.sources.{MaterializedView, Snapshots}
-    val root = "/root/repo/target/cbo-spec/mv_persist"
+    val root = s"${Roots.scratch}/cbo-spec/mv_persist"
     Snapshots.deleteRecursively(root)
     val base = s"$root/base"; val mv = s"$root/mv"
     val li = Tables.load(spark, sfDir, "lineitem")
@@ -589,7 +589,7 @@ class CboSpec extends SparkSpec {
   test("mvrewrite lifecycle: deregister drops the def + catalog line; defs persist absolute paths") {
     import graft.plans.MvRewrite
     import graft.sources.{MaterializedView, Snapshots}
-    val root = "/root/repo/target/cbo-spec/mv_lifecycle"
+    val root = s"${Roots.scratch}/cbo-spec/mv_lifecycle"
     Snapshots.deleteRecursively(root)
     val base = s"$root/base"; val mv = s"$root/mv"
     val li = Tables.load(spark, sfDir, "lineitem")
@@ -636,7 +636,7 @@ class CboSpec extends SparkSpec {
   test("JOIN-view cost gate: a churn-bloated view refuses routing; compaction re-admits it") {
     import graft.plans.MvRewrite
     import graft.sources.{MaterializedView, Snapshots}
-    val root = "/root/repo/target/cbo-spec/mv_join_gate"
+    val root = s"${Roots.scratch}/cbo-spec/mv_join_gate"
     Snapshots.deleteRecursively(root)
     val (oT, lT, vT) = (s"$root/orders", s"$root/lineitem", s"$root/view")
     // 100 orders x 4 lineitems: view net rows (400) stay close to the

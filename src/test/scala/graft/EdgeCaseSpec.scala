@@ -44,7 +44,7 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("catalog queries do not throw on an EMPTY corpus") {
-    val dst = "/root/repo/target/edgecase/empty"
+    val dst = s"${Roots.scratch}/edgecase/empty"
     writeScaled(dst, 0)
     sweep(dst) { q =>
       try {
@@ -67,7 +67,7 @@ class EdgeCaseSpec extends SparkSpec {
     // millicents) with 0, 1, 2 and 3 prior touches respectively; the
     // 3-touch user's middle touch is a 'view' between two 'click's.
     import spark.implicits._
-    val dst = "/root/repo/target/edgecase/ushape"
+    val dst = s"${Roots.scratch}/edgecase/ushape"
     graft.sources.Snapshots.deleteRecursively(dst)
     val base = java.sql.Timestamp.valueOf("2024-01-10 12:00:00")
     def at(offsetSec: Long) = new java.sql.Timestamp(base.getTime + offsetSec * 1000)
@@ -109,7 +109,7 @@ class EdgeCaseSpec extends SparkSpec {
     // where the unguarded pivot nulled every encoding while the DuckDB
     // oracle returned zero rows (engine divergence, advice r8 #2)
     import spark.implicits._
-    val dst = "/root/repo/target/edgecase/bpe_norule"
+    val dst = s"${Roots.scratch}/edgecase/bpe_norule"
     graft.sources.Snapshots.deleteRecursively(dst)
     Tables.names.foreach { t =>
       val src = spark.read.parquet(s"$sfDir/$t.parquet")
@@ -132,7 +132,7 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("catalog queries do not throw on a SINGLE-ROW corpus") {
-    val dst = "/root/repo/target/edgecase/one"
+    val dst = s"${Roots.scratch}/edgecase/one"
     writeScaled(dst, 1)
     sweep(dst) { q =>
       try { SparkEntry.queries(q)(spark, dst).collect(); None }

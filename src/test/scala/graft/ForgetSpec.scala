@@ -13,7 +13,7 @@ import graft.sources.{IndexRegistry, Snapshots}
   */
 class ForgetSpec extends SparkSpec {
 
-  private val tmp = "/root/repo/target/forget-spec"
+  private val tmp = s"${Roots.scratch}/forget-spec"
 
   test("attach is idempotent and rejects divergent roots") {
     Forget.registerBuiltins()
@@ -532,9 +532,9 @@ class ForgetSpec extends SparkSpec {
     ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
     def launch(mode: String): Process =
       new ProcessBuilder((Seq("java", "-Xmx3g") ++ addOpens ++ Seq(
-        "-cp", "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*",
+        "-cp", s"${Roots.repo}/target/scala-2.13/classes:/opt/spark/jars/*",
         "graft.tools.WalkRaceProbe", mode, baseT)): _*)
-        .directory(new java.io.File("/root/repo"))
+        .directory(new java.io.File(Roots.repo))
         .redirectErrorStream(true).start()
     val procs = Seq("forget", "recrawl", "walk").map(m => m -> launch(m))
     val results = procs.map { case (m, p) =>
@@ -560,55 +560,95 @@ class ForgetSpec extends SparkSpec {
       "cross-process racing walks diverged from the sequential serve")
   }
 
-  test("contention storm: 8 racing folds converge under admission control, contention surfaced") {
-    import scala.concurrent.Future
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val root = s"$tmp/storm"
-    Snapshots.deleteRecursively(root)
-    val baseT = s"$root/base"; val idxT = s"$root/idx"
-    Snapshots.commitOverwrite(spark.range(0, 50).toDF("id"), baseT)
-    Snapshots.drainFoldContention() // isolate this test's counters
-    // 8 walkers, each repeatedly appending a disjoint batch to the
-    // base and folding the derived table through its own head — the
-    // storm shape the admission control exists for: folds queue at the
-    // per-table budget and back off on lost claims instead of
-    // retry-spinning toward the attempt ceiling (which would surface
-    // here as a sys.error failing the future)
-    val threads = 8; val rounds = 3
-    def fold(curV: Int): Unit = {
-      Snapshots.foldThrough(idxT, "storm_through ", curV)(
-        Snapshots.readVersion(spark, baseT, curV)) { lastV =>
-        val (ins, _) = Snapshots.changesBetween(spark, baseT, lastV, curV)
-        ins
-      }
-      ()
-    }
-    val racers = (1 to threads).map { t =>
-      Future {
-        (1 to rounds).foreach { r =>
-          Snapshots.commitAppend(
-            spark.range(1000L * t + 100L * r, 1000L * t + 100L * r + 10)
-              .toDF("id"), baseT)
-          fold(Snapshots.currentVersion(baseT))
+  // ---- contention storm, per watermark maintainer: every one of them
+  // commits through the one head-CAS loop, so each must converge under
+  // a storm AND surface its lost claims ----
+
+  /** A derived-table maintainer under storm: `maintain(base, table)`
+    * folds the base into the table; `serve(table)` reads what it
+    * serves, as sorted row strings (a multiset).
+    */
+  private case class StormMaintainer(name: String,
+      maintain: (String, String) => Unit, serve: String => Seq[String])
+
+  private def rowStrings(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  private val stormMaintainers = Seq(
+    StormMaintainer("foldThrough",
+      (baseT, t) => {
+        Snapshots.foldThrough(baseT, t, "storm_through ") { f =>
+          f.replace(Snapshots.readVersion(spark, baseT, f.curV), netted = true)
+        } { f =>
+          f.append(Snapshots.changesBetween(spark, baseT, f.lastV, f.curV)._1)
         }
-        0
+        ()
+      },
+      t => rowStrings(Snapshots.read(spark, t).select("id"))),
+    StormMaintainer("MaterializedView.refresh",
+      (baseT, t) => {
+        graft.sources.MaterializedView.refresh(spark, baseT, t, Seq("g"), Seq("v")); ()
+      },
+      t => rowStrings(Snapshots.read(spark, t))),
+    StormMaintainer("clusteredMaintain",
+      (baseT, t) => {
+        Snapshots.clusteredMaintain(spark, baseT, t, "id", Seq("id"), files = 2); ()
+      },
+      t => rowStrings(Snapshots.read(spark, t))),
+    StormMaintainer("Events.concurrencyRefresh",
+      (baseT, t) => graft.operators.Events.concurrencyRefresh(spark, baseT, t),
+      t => rowStrings(graft.operators.Events.concurrencyServe(spark, t))))
+
+  // one base row shape every maintainer reads: `id` keys the replica,
+  // (g, v) the rollup, (user_id, event_id, sec) the session boundaries
+  private def stormRows(lo: Long, hi: Long): DataFrame =
+    spark.range(lo, hi).select(col("id"), (col("id") % 5).as("g"),
+      col("id").as("v"), (col("id") % 7).as("user_id"),
+      col("id").as("event_id"), (col("id") * 600).as("sec"))
+
+  stormMaintainers.foreach { m =>
+    val title = "contention storm: 8 racing folds converge under admission control, contention surfaced"
+    test(if (m.name == "foldThrough") title else s"$title: ${m.name}") {
+      import scala.concurrent.Future
+      implicit val ec: scala.concurrent.ExecutionContext =
+        scala.concurrent.ExecutionContext.global
+      val root = s"$tmp/storm_${m.name.replace('.', '_')}"
+      Snapshots.deleteRecursively(root)
+      val baseT = s"$root/base"; val idxT = s"$root/idx"; val refT = s"$root/ref"
+      Snapshots.commitOverwrite(stormRows(0, 50), baseT)
+      Snapshots.drainFoldContention() // isolate this test's counters
+      // 8 walkers, each repeatedly appending a disjoint batch to the
+      // base and maintaining the derived table through its own head —
+      // the storm shape the admission control exists for: folds queue
+      // at the per-table budget and back off on lost claims instead of
+      // retry-spinning toward the attempt cap (which would surface here
+      // as a failed future)
+      val threads = 8; val rounds = 3
+      val racers = (1 to threads).map { t =>
+        Future {
+          (1 to rounds).foreach { r =>
+            Snapshots.commitAppend(
+              stormRows(1000L * t + 100L * r, 1000L * t + 100L * r + 10), baseT)
+            m.maintain(baseT, idxT)
+          }
+          0
+        }
       }
+      settleAll(racers)
+      // fold any trailing gap (a walker may have pinned a head older
+      // than the last racing append), then compare with a sequential
+      // rebuild over the final base
+      m.maintain(baseT, idxT)
+      val cont = Snapshots.drainFoldContention()
+      m.maintain(baseT, refT)
+      assert(m.serve(idxT) == m.serve(refT),
+        s"${m.name}: racing folds diverged from a sequential rebuild")
+      // the storm must be a TRACKED event, not an invisible retry tax:
+      // at least one lost claim race was counted and backed off
+      val (conflicts, backoff) = cont.getOrElse(idxT, (0L, 0L))
+      assert(conflicts > 0 && backoff > 0,
+        s"${m.name}: expected surfaced fold contention on $idxT, got $cont")
     }
-    settleAll(racers)
-    // fold any trailing gap (a walker may have pinned a head older
-    // than the last racing append), then compare content
-    fold(Snapshots.currentVersion(baseT))
-    def ids(t: String) = Snapshots.read(spark, t)
-      .select("id").collect().map(_.getLong(0)).toSet
-    assert(ids(idxT) == ids(baseT),
-      "racing folds under admission control diverged from the base")
-    // the storm must be a TRACKED event, not an invisible retry tax:
-    // at least one lost claim race was counted and backed off
-    val cont = Snapshots.drainFoldContention()
-    val (conflicts, backoff) = cont.getOrElse(idxT, (0L, 0L))
-    assert(conflicts > 0 && backoff > 0,
-      s"expected surfaced fold contention on $idxT, got $cont")
   }
 
   test("persisted divergent-roots duplicate lines fail the walk loudly, never silently mask") {

@@ -15,7 +15,7 @@ package graft
 class MultiFileSpec extends SparkSpec {
 
   test("every catalog query is layout-invariant under multi-file repartitioned testdata") {
-    val dst = "/root/repo/target/multifile/sf0_001"
+    val dst = s"${Roots.scratch}/multifile/sf0_001"
     graft.sources.Snapshots.deleteRecursively(dst)
     Tables.names.foreach { t =>
       spark.read.parquet(s"$sfDir/$t.parquet").repartition(4)

@@ -113,7 +113,7 @@ class PipelineSpec extends SparkSpec {
 
   test("incremental dedup over the persisted band index equals a full recompute") {
     import graft.sources.Snapshots
-    val table = "/root/repo/target/pipeline-spec/mh_index"
+    val table = s"${Roots.scratch}/pipeline-spec/mh_index"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
     }
@@ -216,7 +216,7 @@ class PipelineSpec extends SparkSpec {
   test("IVF lists stay current under appends via the clustered snapshot path") {
     import graft.sources.Snapshots
     import org.apache.spark.sql.execution.FileSourceScanExec
-    val table = "/root/repo/target/pipeline-spec/ivf_clustered"
+    val table = s"${Roots.scratch}/pipeline-spec/ivf_clustered"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
     }
@@ -454,7 +454,7 @@ class PipelineSpec extends SparkSpec {
 
   test("IVF+PQ code table maintains under appends: encode only the batch") {
     import graft.sources.Snapshots
-    val root = "/root/repo/target/pipeline-spec/pq_ingest"
+    val root = s"${Roots.scratch}/pipeline-spec/pq_ingest"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
     }
@@ -504,7 +504,7 @@ class PipelineSpec extends SparkSpec {
 
   test("index builds are claim-elected: two racing builders, one build") {
     import graft.sources.Snapshots
-    val table = "/root/repo/target/pipeline-spec/idx_race"
+    val table = s"${Roots.scratch}/pipeline-spec/idx_race"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
     }
@@ -542,7 +542,7 @@ class PipelineSpec extends SparkSpec {
     import graft.sources.Snapshots
     import java.nio.file.{Files, Paths}
     import java.nio.file.attribute.FileTime
-    val table = "/root/repo/target/pipeline-spec/idx_stale"
+    val table = s"${Roots.scratch}/pipeline-spec/idx_stale"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
     }
@@ -571,7 +571,7 @@ class PipelineSpec extends SparkSpec {
 
   test("live winner building LONGER than timeoutMs keeps its claim (heartbeat)") {
     import graft.sources.Snapshots
-    val table = "/root/repo/target/pipeline-spec/idx_heartbeat"
+    val table = s"${Roots.scratch}/pipeline-spec/idx_heartbeat"
     Snapshots.deleteRecursively(table)
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     import scala.concurrent.{Await, Future}
@@ -607,7 +607,7 @@ class PipelineSpec extends SparkSpec {
   test("IVF drift: shifted batch raises the metric, re-train trigger recovers") {
     import graft.sources.Snapshots
     import org.apache.spark.sql.expressions.Window
-    val root = "/root/repo/target/pipeline-spec/ivf_drift"
+    val root = s"${Roots.scratch}/pipeline-spec/ivf_drift"
     Snapshots.deleteRecursively(root)
     val (baseT, centsT, listsT) = (s"$root/vecs", s"$root/cents", s"$root/lists")
     val e = Tables.load(spark, sfDir, "embeddings").select("vec_id", "embedding")
@@ -691,7 +691,7 @@ class PipelineSpec extends SparkSpec {
   test("size-ratio compaction policy bounds tombstone debt over a long DML sequence") {
     import graft.sources.Snapshots
     import graft.functions.TextFunctions
-    val root = "/root/repo/target/pipeline-spec/compact_policy"
+    val root = s"${Roots.scratch}/pipeline-spec/compact_policy"
     Snapshots.deleteRecursively(root)
     val (baseT, postT) = (s"$root/docs", s"$root/postings")
     val d = Tables.load(spark, sfDir, "documents")
@@ -733,7 +733,7 @@ class PipelineSpec extends SparkSpec {
   test("delete-aware postings maintenance: fold ≡ full rebuild, commits stay O(batch)") {
     import graft.sources.Snapshots
     import graft.functions.TextFunctions
-    val root = "/root/repo/target/pipeline-spec/postings_dml"
+    val root = s"${Roots.scratch}/pipeline-spec/postings_dml"
     Snapshots.deleteRecursively(root)
     val (baseT, postT) = (s"$root/docs", s"$root/postings")
     val d = Tables.load(spark, "/root/testdata/sf0.001", "documents")
@@ -786,7 +786,7 @@ class PipelineSpec extends SparkSpec {
   test("delete-aware postings maintenance absorbs keyed MERGE updates") {
     import graft.sources.Snapshots
     import graft.functions.TextFunctions
-    val root = "/root/repo/target/pipeline-spec/postings_merge"
+    val root = s"${Roots.scratch}/pipeline-spec/postings_merge"
     Snapshots.deleteRecursively(root)
     val (baseT, postT) = (s"$root/docs", s"$root/postings")
     val d = Tables.load(spark, "/root/testdata/sf0.001", "documents")
@@ -848,7 +848,7 @@ class PipelineSpec extends SparkSpec {
   test("delete-aware band-index maintenance: tombstone fold ≡ re-signed rebuild") {
     import graft.sources.Snapshots
     import graft.operators.Dedup
-    val root = "/root/repo/target/pipeline-spec/band_dml"
+    val root = s"${Roots.scratch}/pipeline-spec/band_dml"
     Snapshots.deleteRecursively(root)
     val (baseT, idxT) = (s"$root/docs", s"$root/bandidx")
     val d = Tables.load(spark, "/root/testdata/sf0.001", "documents")
@@ -878,7 +878,7 @@ class PipelineSpec extends SparkSpec {
   test("bm25 maintenance: two DML cycles, per-table watermarks, idempotent") {
     import graft.sources.Snapshots
     import graft.functions.TextFunctions
-    val root = "/root/repo/target/pipeline-spec/bm25_cycles"
+    val root = s"${Roots.scratch}/pipeline-spec/bm25_cycles"
     Snapshots.deleteRecursively(root)
     val (baseT, postT, dlT, totT) =
       (s"$root/docs", s"$root/postings", s"$root/doclen", s"$root/totals")
@@ -923,7 +923,7 @@ class PipelineSpec extends SparkSpec {
   test("delete-aware IVF lists: compaction is serving-invariant") {
     import graft.sources.Snapshots
     import graft.operators.Similarity
-    val root = "/root/repo/target/pipeline-spec/ivf_dml_compact"
+    val root = s"${Roots.scratch}/pipeline-spec/ivf_dml_compact"
     Snapshots.deleteRecursively(root)
     val (baseT, centsT, listsT) = (s"$root/vecs", s"$root/cents", s"$root/lists")
     val e = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
@@ -952,7 +952,7 @@ class PipelineSpec extends SparkSpec {
     import graft.sources.Snapshots
     import java.nio.file.{Files, Paths}
     import java.nio.file.attribute.FileTime
-    val p = Paths.get("/root/repo/target/pipeline-spec/fp_probe")
+    val p = Paths.get(s"${Roots.scratch}/pipeline-spec/fp_probe")
     Files.createDirectories(p.getParent)
     Files.write(p, "one".getBytes)
     Files.setLastModifiedTime(p, FileTime.fromMillis(1000000L))
@@ -1054,7 +1054,7 @@ class PipelineSpec extends SparkSpec {
       .withColumn("nrm", Similarity.dotL(col("q"), col("q")))
     val assigned = Similarity.ivfAssign(v, centroids)
       .select("vec_id", "cid")
-    val path = "/root/repo/target/ivf-lists"
+    val path = s"${Roots.scratch}/ivf-lists"
     Sources.writePartitioned(assigned, path, "cid")
     // probing one list reads only that partition directory
     val probe = spark.read.parquet(path).where(col("cid") === centroids.head().getLong(0))
@@ -1641,7 +1641,7 @@ class PipelineSpec extends SparkSpec {
   test("incremental semantic dedup over two batches ≡ frozen-quantizer one-shot") {
     import graft.operators.Similarity
     import graft.sources.Snapshots
-    val root = "/root/repo/target/pipeline-spec/semdedup_multi"
+    val root = s"${Roots.scratch}/pipeline-spec/semdedup_multi"
     Snapshots.deleteRecursively(root)
     val (centsT, memT) = (s"$root/cents", s"$root/members")
     // corpus = real embeddings + one EXACT clone planted in batch 2

@@ -6,7 +6,7 @@ import graft.sources.Sources
 /** Source/sink round-trips and physical-design layouts. */
 class SourcesSpec extends SparkSpec {
 
-  private val tmp = "/root/repo/target/sources-spec"
+  private val tmp = s"${Roots.scratch}/sources-spec"
 
   test("csv round-trip preserves rows and values") {
     val orig = Tables.load(spark, sfDir, "nation")
@@ -234,7 +234,7 @@ class SourcesSpec extends SparkSpec {
 
   test("versioned DML: update/delete commit new versions, old versions intact") {
     import graft.sources.Snapshots
-    val table = "/root/repo/target/sources-spec/dml_tbl"
+    val table = s"${Roots.scratch}/sources-spec/dml_tbl"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
     }
@@ -259,7 +259,7 @@ class SourcesSpec extends SparkSpec {
 
   test("selective DML rewrites only the touched dirs, untouched carry by reference") {
     import graft.sources.Snapshots
-    val table = "/root/repo/target/sources-spec/seldml_tbl"
+    val table = s"${Roots.scratch}/sources-spec/seldml_tbl"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
     }
@@ -304,7 +304,7 @@ class SourcesSpec extends SparkSpec {
 
   test("manifest diff scans only changed dirs and nets out rewrite churn") {
     import graft.sources.Snapshots
-    val t = "/root/repo/target/sources-spec/diff_tbl"
+    val t = s"${Roots.scratch}/sources-spec/diff_tbl"
     Snapshots.deleteRecursively(t)
     val li = Tables.load(spark, sfDir, "lineitem")
       .select("l_orderkey", "l_quantity", "l_returnflag")
@@ -342,7 +342,7 @@ class SourcesSpec extends SparkSpec {
     // build a table of `nDirs` disjoint-range dirs, run a 1-dir point
     // delete, return the Spark job count the DML needed
     def jobsForDirCount(nDirs: Int): Int = {
-      val table = s"/root/repo/target/sources-spec/seldml_jobs_$nDirs"
+      val table = s"${Roots.scratch}/sources-spec/seldml_jobs_$nDirs"
       rm(new java.io.File(table))
       Snapshots.commitOverwrite(li.where(col("l_orderkey") % nDirs === 0), table)
       (1 until nDirs).foreach(i =>
@@ -368,7 +368,7 @@ class SourcesSpec extends SparkSpec {
 
   test("materialized view: delta refresh equals recompute, idempotent, rewrite-safe") {
     import graft.sources.{MaterializedView, Snapshots}
-    val root = "/root/repo/target/sources-spec/mv_test"
+    val root = s"${Roots.scratch}/sources-spec/mv_test"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
     }
@@ -433,7 +433,7 @@ class SourcesSpec extends SparkSpec {
 
   test("selective DML probes through PARTITIONED data dirs") {
     import graft.sources.{Snapshots, Sources}
-    val table = "/root/repo/target/sources-spec/seldml_part"
+    val table = s"${Roots.scratch}/sources-spec/seldml_part"
     Snapshots.deleteRecursively(table)
     val o = Tables.load(spark, sfDir, "orders")
       .select("o_orderkey", "o_custkey")
@@ -455,7 +455,7 @@ class SourcesSpec extends SparkSpec {
 
   test("keyed merge: touched dirs rewrite, others carry by reference, replays no-op") {
     import graft.sources.Snapshots
-    val table = "/root/repo/target/sources-spec/merge_tbl"
+    val table = s"${Roots.scratch}/sources-spec/merge_tbl"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
     }
@@ -528,7 +528,7 @@ class SourcesSpec extends SparkSpec {
 
   test("racing MV refreshes never double-count a delta") {
     import graft.sources.{MaterializedView, Snapshots}
-    val root = "/root/repo/target/sources-spec/mv_race"
+    val root = s"${Roots.scratch}/sources-spec/mv_race"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
     }
@@ -1128,6 +1128,19 @@ class SourcesSpec extends SparkSpec {
     val v = Snapshots.currentVersion(mvT)
     Events.concurrencyRefresh(spark, baseT, mvT)
     assert(Snapshots.currentVersion(mvT) == v, "replay must not commit")
+
+    // vacuum PAST the watermark: the base moves on, retention retires
+    // the version the MV folded through, and the next refresh must
+    // re-bootstrap instead of reading a vacuumed manifest
+    Snapshots.deleteWhere(spark, baseT, pmod(col("user_id"), lit(7)) === 1)
+    Snapshots.vacuum(baseT, retain = 1, graceMs = 0)
+    Snapshots.commitAppend(ev.where(pmod(col("user_id"), lit(7)) === 0), baseT)
+    Events.concurrencyRefresh(spark, baseT, mvT)
+    val refMv2 = s"$root/refmv2"
+    Events.concurrencyRefresh(spark, baseT, refMv2)
+    assert(rep(Events.concurrencyServe(spark, mvT)) ==
+      rep(Events.concurrencyServe(spark, refMv2)),
+      "MV refreshed past a vacuumed watermark diverged from a rebuild")
   }
 
   test("q_partition_prune reads exactly one yr= directory") {

@@ -40,11 +40,11 @@ class SpillSpec extends SparkSpec {
     // persisted DML roots are freshly rebuilt either way
     val ref = queries.map(q => q -> hash(SparkEntry.queries(q)(spark, sf))).toMap
     val cmd = Seq("java", s"-Xmx$heap") ++ jdk17AddOpens ++ Seq(
-      "-cp", "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*",
+      "-cp", s"${Roots.repo}/target/scala-2.13/classes:/opt/spark/jars/*",
       "graft.tools.SpillProbe", sf, queries.mkString(","))
     val buf = new StringBuilder
     val proc = new ProcessBuilder(cmd: _*)
-      .directory(new java.io.File("/root/repo"))
+      .directory(new java.io.File(Roots.repo))
       .redirectErrorStream(true).start()
     val out = new java.io.BufferedReader(
       new java.io.InputStreamReader(proc.getInputStream))

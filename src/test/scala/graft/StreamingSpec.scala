@@ -201,7 +201,7 @@ class StreamingSpec extends SparkSpec {
     import graft.sources.Snapshots
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val table = "/root/repo/target/sources-spec/ingest_tbl"
+    val table = s"${Roots.scratch}/sources-spec/ingest_tbl"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
     }
@@ -332,7 +332,7 @@ class StreamingSpec extends SparkSpec {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ckpt = "/root/repo/target/streaming-spec/ttl_ckpt"
+    val ckpt = s"${Roots.scratch}/streaming-spec/ttl_ckpt"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
     }
@@ -378,8 +378,8 @@ class StreamingSpec extends SparkSpec {
     import graft.sources.Snapshots
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val idxT = "/root/repo/target/streaming-spec/inc_idx"
-    val resT = "/root/repo/target/streaming-spec/inc_res"
+    val idxT = s"${Roots.scratch}/streaming-spec/inc_idx"
+    val resT = s"${Roots.scratch}/streaming-spec/inc_res"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
     }
@@ -434,8 +434,8 @@ class StreamingSpec extends SparkSpec {
     import graft.sources.Snapshots
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val idxT = "/root/repo/target/streaming-spec/exact_idx"
-    val resT = "/root/repo/target/streaming-spec/exact_res"
+    val idxT = s"${Roots.scratch}/streaming-spec/exact_idx"
+    val resT = s"${Roots.scratch}/streaming-spec/exact_res"
     Seq(idxT, resT).foreach(Snapshots.deleteRecursively)
 
     val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
@@ -499,7 +499,7 @@ class StreamingSpec extends SparkSpec {
     import graft.sources.{MaterializedView, Snapshots}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = "/root/repo/target/streaming-spec/mv_roll"
+    val root = s"${Roots.scratch}/streaming-spec/mv_roll"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
     }
@@ -547,7 +547,7 @@ class StreamingSpec extends SparkSpec {
     import graft.sources.{MaterializedView, Snapshots}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = "/root/repo/target/streaming-spec/mv_roll_auto"
+    val root = s"${Roots.scratch}/streaming-spec/mv_roll_auto"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
     }
@@ -602,7 +602,7 @@ class StreamingSpec extends SparkSpec {
     import graft.sources.Snapshots
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = "/root/repo/target/streaming-spec/graph_ingest"
+    val root = s"${Roots.scratch}/streaming-spec/graph_ingest"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
     }
@@ -646,7 +646,7 @@ class StreamingSpec extends SparkSpec {
     import graft.sources.Snapshots
     import graft.functions.TextFunctions
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val postT = "/root/repo/target/streamtest/postings"
+    val postT = s"${Roots.scratch}/streamtest/postings"
     Snapshots.deleteRecursively(postT)
     val docs = Tables.load(spark, sfDir, "documents")
       .select("doc_id", "text").collect()
@@ -681,7 +681,7 @@ class StreamingSpec extends SparkSpec {
     import graft.sources.Snapshots
     import graft.functions.TextFunctions
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = "/root/repo/target/streamtest/merge_postings"
+    val root = s"${Roots.scratch}/streamtest/merge_postings"
     Snapshots.deleteRecursively(root)
     val (baseT, postT) = (s"$root/docs", s"$root/postings")
     val docs = Tables.load(spark, sfDir, "documents")
@@ -782,7 +782,7 @@ class StreamingSpec extends SparkSpec {
     import graft.sources.Snapshots
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val skT = "/root/repo/target/streaming-spec/hll_daily"
+    val skT = s"${Roots.scratch}/streaming-spec/hll_daily"
     Snapshots.deleteRecursively(skT)
 
     val ev = graft.operators.Events.loadEvents(spark, sfDir)
@@ -834,7 +834,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.Dedup
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = "/root/repo/target/streaming-spec/simhash"
+    val root = s"${Roots.scratch}/streaming-spec/simhash"
     Snapshots.deleteRecursively(root)
     val (idxT, resT) = (s"$root/idx", s"$root/res")
 
@@ -898,7 +898,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.Events
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = "/root/repo/target/streaming-spec/concmv"
+    val root = s"${Roots.scratch}/streaming-spec/concmv"
     Snapshots.deleteRecursively(root)
     val (baseT, mvT) = (s"$root/base", s"$root/mv")
     val rows = Tables.load(spark, sfDir, "events")
@@ -940,7 +940,7 @@ class StreamingSpec extends SparkSpec {
     import graft.functions.TextFunctions
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = "/root/repo/target/streaming-spec/bm25"
+    val root = s"${Roots.scratch}/streaming-spec/bm25"
     Snapshots.deleteRecursively(root)
     val (baseT, postT, dlT, totT) =
       (s"$root/docs", s"$root/postings", s"$root/doclen", s"$root/totals")
@@ -1001,7 +1001,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     graft.operators.Forget.registerBuiltins()
-    val root = "/root/repo/target/streaming-spec/forget"
+    val root = s"${Roots.scratch}/streaming-spec/forget"
     Snapshots.deleteRecursively(root)
     val baseT = s"$root/docs"
     val (postT, dlT, totT) =
@@ -1097,7 +1097,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     graft.operators.Forget.registerBuiltins()
-    val root = "/root/repo/target/streaming-spec/recrawl"
+    val root = s"${Roots.scratch}/streaming-spec/recrawl"
     Snapshots.deleteRecursively(root)
     val baseT = s"$root/docs"
     val (postT, dlT, totT) = (s"$root/postings", s"$root/doclen", s"$root/totals")
@@ -1156,7 +1156,7 @@ class StreamingSpec extends SparkSpec {
     import graft.sources.{MaterializedView, Snapshots}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = "/root/repo/target/streaming-spec/sketchmv"
+    val root = s"${Roots.scratch}/streaming-spec/sketchmv"
     Snapshots.deleteRecursively(root)
     val (baseT, mvT) = (s"$root/base", s"$root/mv")
     val ev = graft.operators.Events.events(spark, sfDir)

@@ -1,11 +1,12 @@
-"""Gate: no hardcoded filesystem-root literals in src/main outside
-graft.Roots (Core.scala). Every persisted table/index/sink path must
-build from Roots.scratch / Roots.repo so a deployment repoints one
+"""Gate: no hardcoded filesystem-root literals in src/main or src/test
+outside graft.Roots (Core.scala). Every persisted table/index/sink path
+must build from Roots.scratch / Roots.repo so a deployment repoints one
 env-overridable object (SPARK_GRAFT_REPO_ROOT / SPARK_GRAFT_SCRATCH)
-instead of auditing 45 call sites.
+instead of auditing 45 call sites, and so each forked test suite keeps
+to the scratch root its group sets.
 
-Exit 0 iff the only occurrence of "/root/repo" under src/main is the
-Roots default itself.
+Exit 0 iff the only fixed checkout-root literal under src/main and
+src/test is the Roots default itself.
 """
 import pathlib
 import re
@@ -17,13 +18,15 @@ ALLOWED = re.compile(
 
 def main() -> int:
     bad = []
-    for f in sorted(pathlib.Path("src/main").rglob("*.scala")):
+    files = [f for d in ("src/main", "src/test")
+             for f in sorted(pathlib.Path(d).rglob("*.scala"))]
+    for f in files:
         for i, line in enumerate(f.read_text().splitlines(), 1):
             if "/root/repo" in line and not ALLOWED.search(line):
                 bad.append(f"{f}:{i}: {line.strip()}")
     for b in bad:
         print(f"HARDCODED root literal: {b}")
-    print(f"== {len(bad)} stray root literals in src/main")
+    print(f"== {len(bad)} stray root literals in src/main and src/test")
     return 1 if bad else 0
 
 
