@@ -1140,6 +1140,28 @@ object TextFunctions {
 
   private val PostThroughPrefix = "post_through "
 
+  /** The postings table's [[graft.sources.SignedIndex]]: weight `tf`
+    * per (term, doc, bucket).
+    */
+  private[graft] val Postings =
+    graft.sources.SignedIndex(PostThroughPrefix, Seq("term", "doc_id", "b"), "tf")
+
+  /** The BM25 doclen sidecar's [[graft.sources.SignedIndex]]: weight
+    * `dl` per doc. A zero-length doc's bootstrap row (dl = 0) is not
+    * live; the serve's weight > 0 filter drops it in both forms.
+    */
+  private[graft] val Doclen = graft.sources.SignedIndex(PostThroughPrefix, Seq("doc_id"), "dl")
+
+  /** The BM25 corpus scalars: signed (np, totalp) partial rows with no
+    * key, summed at read. They fold and compact like a
+    * [[graft.sources.SignedIndex]] but keep their own net, the sum of
+    * both columns.
+    */
+  private val Totals = new graft.sources.SignedIndex(Seq(PostThroughPrefix), Nil, "np") {
+    override def net(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+      df.agg(sum(col("np")).cast("long").as("np"), sum(col("totalp")).cast("long").as("totalp"))
+  }
+
   /** DELETE-AWARE incremental maintenance of a postings table over a
     * VERSIONED documents snapshot table — what happens to the search
     * index when the base corpus shrinks (deleteWhere / merge), the
@@ -1152,28 +1174,13 @@ object TextFunctions {
     * manifest (with selective DML that is the touched dirs, not the
     * table), and the commit APPENDS one tombstone-delta dir under the
     * maintained-through watermark tag. Serving nets tombstones per
-    * (term, doc) AFTER bucket pruning ([[servePostingsNet]]), so a
+    * (term, doc) AFTER bucket pruning ([[servePostingsNetAt]]), so a
     * deleted doc vanishes without the index ever being rewritten —
-    * the LSM/Delta pattern (reference analog: the B+ tree staying
-    * consistent under Database.deleteRecord, reference index/
-    * BPlusTree.java). CONCURRENT maintainers converge: the fold is a
-    * [[graft.sources.Snapshots.foldThrough]].
+    * the LSM/Delta pattern. Fold, serve and compaction: [[Postings]].
     */
   def postingsMaintain(s: org.apache.spark.sql.SparkSession,
-      baseTable: String, postTable: String): Int = {
-    import graft.sources.Snapshots
-    Snapshots.foldThrough(baseTable, postTable, PostThroughPrefix) { f =>
-      f.replace(postingsOf(Snapshots.readVersion(s, baseTable, f.curV)), netted = true)
-    } { f =>
-      val (ins, del) = Snapshots.changesBetween(s, baseTable, f.lastV, f.curV)
-      f.append(postingsOf(ins).unionByName(
-        postingsOf(del).withColumn("tf", -col("tf"))))
-    }
-    // size-ratio compaction policy: a long DML sequence must not
-    // accrete unbounded tombstone debt (serving is invariant)
-    Snapshots.maybeCompactNet(s, postTable, PostThroughPrefix)(servePostingsNet)
-    Snapshots.currentVersion(postTable)
-  }
+      baseTable: String, postTable: String): Int =
+    Postings.fold(s, baseTable, postTable)(postingsOf)
 
   /** Streaming CDC-apply with search-index maintenance in the loop:
     * each micro-batch of keyed doc upserts lands in the base snapshot
@@ -1196,52 +1203,14 @@ object TextFunctions {
         ()
       }
 
-  /** Major compaction of a tombstone-folded postings table
-    * ([[graft.sources.Snapshots.compactNet]] instantiated with the
-    * postings net): nets all tombstones into one clean version,
-    * watermark carried forward — serving is unchanged, the table
-    * shrinks back to live rows. The band index, BM25 sidecars, and
-    * IVF lists compact identically with their own net aggregates.
-    */
-  def postingsCompact(s: org.apache.spark.sql.SparkSession, postT: String): Int =
-    graft.sources.Snapshots.compactNet(s, postT, PostThroughPrefix)(servePostingsNet)
-
-  /** Net view of a tombstone-folded postings frame: tf sums per
-    * (term, doc, bucket); rows netting to ≤ 0 (deleted docs) vanish.
-    * Compose the bucket filter BEFORE this aggregate — the net is then
-    * computed over the pruned buckets only, O(matched postings).
-    */
-  private[graft] def servePostingsNet(post: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    post.groupBy("term", "doc_id", "b")
-      .agg(sum(col("tf")).cast("long").as("tf"))
-      .where(col("tf") > 0)
-
-  /** [[servePostingsNet]] from the postings TABLE head, bucket-pruned
-    * when `pruned` — skips the netting aggregate when the head is
-    * committed-as-netted (bootstrap or compaction; per-(term,doc) tf
-    * is ≥ 1 by construction there, so the passthrough is net's output
-    * exactly).
+  /** Live postings from the postings TABLE head ([[Postings]]),
+    * bucket-pruned ahead of the net when `pruned` — the net is then
+    * computed over the probed buckets only, O(matched postings).
     */
   private[graft] def servePostingsNetAt(s: org.apache.spark.sql.SparkSession,
-      postT: String, pruned: Boolean = true): org.apache.spark.sql.DataFrame = {
-    def prune(df: org.apache.spark.sql.DataFrame) =
-      if (pruned) df.where(col("b").isin(searchBuckets: _*)) else df
-    graft.sources.Snapshots.serveNetted(s, postT)(
-      df => servePostingsNet(prune(df)))(prune)
-  }
-
-  /** Netted doclen serve from the TABLE head — the bucket-free doclen
-    * sibling of [[servePostingsNetAt]]. The netted passthrough still
-    * applies the dl > 0 filter: a zero-length doc's bootstrap row has
-    * dl = 0, which the net aggregate drops.
-    */
-  private[graft] def serveDoclenNetAt(s: org.apache.spark.sql.SparkSession,
-      dlT: String): org.apache.spark.sql.DataFrame =
-    graft.sources.Snapshots.serveNetted(s, dlT)(
-      _.groupBy("doc_id").agg(sum(col("dl")).cast("long").as("dl"))
-        .where(col("dl") > 0))(
-      _.select("doc_id", "dl").where(col("dl") > 0))
+      postT: String, pruned: Boolean = true): org.apache.spark.sql.DataFrame =
+    Postings.serve(s, postT,
+      df => if (pruned) df.where(col("b").isin(searchBuckets: _*)) else df)
 
   /** Catalog twin of the delete-aware path: bootstrap 90% of the
     * corpus into a snapshot table and build its postings; DELETE the
@@ -1597,45 +1566,19 @@ object TextFunctions {
     // next maintenance pass, which re-folds exactly the tables whose
     // watermark is behind (from their own lastV — no shared gate, no
     // double-fold); readers of a torn instant pin versions per table,
-    // the snapshot-isolation contract. Each per-table fold is a
-    // Snapshots.foldThrough, so two concurrent registry walks cannot
-    // double-append the same span's delta.
-    def fold(table: String,
-        bootstrap: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-        delta: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =>
-          org.apache.spark.sql.DataFrame): Unit = {
-      Snapshots.foldThrough(baseTable, table, PostThroughPrefix, Some(curV)) { f =>
-        f.replace(bootstrap(Snapshots.readVersion(s, baseTable, f.curV)), netted = true)
-      } { f =>
-        val (ins, del) = Snapshots.changesBetween(s, baseTable, f.lastV, f.curV)
-        f.append(delta(ins, del))
-      }
-      ()
-    }
-    // the three sidecar folds are INDEPENDENT per-table chains (each
-    // under its own watermark) — run them from a driver thread pool so
-    // their jobs overlap (guide §2.6); each chain keeps its own fold →
+    // the snapshot-isolation contract. The three are INDEPENDENT
+    // per-table chains, so they run from a driver thread pool and their
+    // jobs overlap (guide §2.6); each chain keeps its own fold →
     // compaction order, so per-table version sequences are unchanged
     graft.Par.run(
-      () => {
-        fold(postT, postingsOf,
-          (ins, del) => postingsOf(ins).unionByName(
-            postingsOf(del).withColumn("tf", -col("tf"))))
-        Snapshots.maybeCompactNet(s, postT, PostThroughPrefix)(servePostingsNet)
-      },
-      () => {
-        fold(dlT, docLengths,
-          (ins, del) => docLengths(ins).unionByName(
-            docLengths(del).withColumn("dl", -col("dl"))))
-        Snapshots.maybeCompactNet(s, dlT, PostThroughPrefix)(df =>
-          df.groupBy("doc_id").agg(sum(col("dl")).cast("long").as("dl"))
-            .where(col("dl") > 0))
-      },
-      () => {
-        fold(totT, base => signedTotals(base, base.limit(0)), signedTotals)
-        Snapshots.maybeCompactNet(s, totT, PostThroughPrefix)(df =>
-          df.agg(sum(col("np")).cast("long").as("np"),
-            sum(col("totalp")).cast("long").as("totalp")))
+      () => Postings.fold(s, baseTable, postT, Some(curV))(postingsOf),
+      () => Doclen.fold(s, baseTable, dlT, Some(curV))(docLengths),
+      () => Totals.foldWith(s, baseTable, totT, Some(curV)) { f =>
+        val base = Snapshots.readVersion(s, baseTable, f.curV)
+        signedTotals(base, base.limit(0))
+      } { f =>
+        val (ins, del) = Snapshots.changesBetween(s, baseTable, f.lastV, f.curV)
+        signedTotals(ins, del)
       })
     ()
   }
@@ -1658,7 +1601,7 @@ object TextFunctions {
     val tot = Snapshots.read(s, totT)
       .agg(sum(col("np")).cast("long").as("n"),
         sum(col("totalp")).cast("long").as("total"))
-    bm25Serve(s, servePostingsNetAt(s, postT), serveDoclenNetAt(s, dlT), tot)
+    bm25Serve(s, servePostingsNetAt(s, postT), Doclen.serve(s, dlT), tot)
   }
 
   val searchBm25Dml: QueryDef = QueryDef(

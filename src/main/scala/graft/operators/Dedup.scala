@@ -773,7 +773,11 @@ object Dedup {
   def buildBandIndex(docs: DataFrame, table: String): Int =
     graft.sources.Snapshots.commitOverwrite(bandedSigned(docs), table)
 
-  private val BandThroughPrefix = "band_through "
+  /** The persisted band index's [[graft.sources.SignedIndex]]: one
+    * `sgn` row per (doc, band) signature row.
+    */
+  private[graft] val BandIndex = graft.sources.SignedIndex("band_through ",
+    Seq("doc_id", "band", "bucket", "shingles"), "sgn")
 
   /** DELETE-AWARE incremental maintenance of a persisted band index
     * over a VERSIONED documents snapshot table — the near-dup twin of
@@ -781,80 +785,37 @@ object Dedup {
     * signature rows are a set keyed by (doc_id, band, bucket,
     * shingles), so a departed doc folds in as sgn = −1 tombstone rows
     * and an inserted one as sgn = +1 — one maintenance pass signs ONLY
-    * the changed docs ([[graft.sources.Snapshots.changesBetween]]
-    * reads just the dirs that entered/left the base manifest) and
-    * APPENDS one delta dir; the index is never rewritten and the
-    * corpus never re-signed. [[serveBandIndex]] nets the tombstones at
-    * read. CONCURRENT maintainers converge: the fold is a
-    * [[graft.sources.Snapshots.foldThrough]].
+    * the changed docs and APPENDS one delta dir; the index is never
+    * rewritten and the corpus never re-signed. Fold, serve and
+    * compaction: [[BandIndex]].
     */
   def bandIndexMaintain(s: org.apache.spark.sql.SparkSession,
-      baseTable: String, idxTable: String): Int = {
-    import graft.sources.Snapshots
-    Snapshots.foldThrough(baseTable, idxTable, BandThroughPrefix) { f =>
-      f.replace(bandedSigned(Snapshots.readVersion(s, baseTable, f.curV))
-        .withColumn("sgn", lit(1)), netted = true)
-    } { f =>
-      val (ins, del) = Snapshots.changesBetween(s, baseTable, f.lastV, f.curV)
-      f.append(bandedSigned(ins).withColumn("sgn", lit(1)).unionByName(
-        bandedSigned(del).withColumn("sgn", lit(-1))))
-    }
-    // size-ratio compaction policy (serving invariant; sgn re-carried
-    // so later folds keep appending against the compacted base)
-    Snapshots.maybeCompactNet(s, idxTable, BandThroughPrefix)(df =>
-      bandNet(df).withColumn("sgn", lit(1)))
-    Snapshots.currentVersion(idxTable)
-  }
+      baseTable: String, idxTable: String): Int =
+    BandIndex.fold(s, baseTable, idxTable)(bandedSigned(_).withColumn("sgn", lit(1)))
 
-  /** Net view of a tombstone-folded band index: identical signature
-    * rows cancel by summed sign, so a deleted doc's bands vanish and a
-    * re-inserted doc's reappear; output schema matches
+  /** Net view of a tombstone-folded band index: a deleted doc's bands
+    * vanish and a re-inserted doc's reappear; output schema matches
     * [[bandedSigned]], so it drops into [[batchDedupStats]] unchanged.
     */
   def serveBandIndex(s: org.apache.spark.sql.SparkSession, idxTable: String): DataFrame =
-    graft.sources.Snapshots.serveNetted(s, idxTable)(bandNet)(
-      _.select("doc_id", "shingles", "band", "bucket"))
+    BandIndex.serve(s, idxTable).select("doc_id", "shingles", "band", "bucket")
 
-  private def bandNet(df: DataFrame): DataFrame =
-    df.groupBy("doc_id", "band", "bucket", "shingles")
-      .agg(sum(col("sgn")).as("net")).where(col("net") > 0)
-      .select("doc_id", "shingles", "band", "bucket")
-
-  /** Major compaction of the tombstone-folded band index
-    * ([[graft.sources.Snapshots.compactNet]] with the band net; the
-    * [[graft.functions.TextFunctions.postingsCompact]] convention).
-    * The netted rows re-carry sgn = 1 so maintenance keeps appending
-    * deltas against the compacted base.
+  /** The SimHash block index's [[graft.sources.SignedIndex]]: one `sgn`
+    * row per (doc, block) pigeonhole row.
     */
-  def bandIndexCompact(s: org.apache.spark.sql.SparkSession, idxTable: String): Int =
-    graft.sources.Snapshots.compactNet(s, idxTable, BandThroughPrefix)(df =>
-      bandNet(df).withColumn("sgn", lit(1)))
-
-  private val SimhashThroughPrefix = "simhash_through "
+  private[graft] val SimhashIndex = graft.sources.SignedIndex("simhash_through ",
+    Seq("doc_id", "simhash", "block", "blockval"), "sgn")
 
   /** DELETE-AWARE maintenance of the SimHash block index — the
     * [[bandIndexMaintain]] convention on the pigeonhole rows: a doc's
     * (doc_id, simhash, block, blockval) set is determined by its text,
     * so departed docs fold as sgn = −1 tombstones and inserted ones as
-    * +1, one O(changed docs) append per base version.
-    * [[serveSimhashIndex]] nets at read; hash-proven against a
-    * live-corpus recompute by `q_forget_capstone`.
+    * +1, one O(changed docs) append per base version; hash-proven
+    * against a live-corpus recompute by `q_forget_capstone`.
     */
   def simhashIndexMaintain(s: org.apache.spark.sql.SparkSession,
-      baseTable: String, idxTable: String): Int = {
-    import graft.sources.Snapshots
-    Snapshots.foldThrough(baseTable, idxTable, SimhashThroughPrefix) { f =>
-      f.replace(simhashBlocksOf(Snapshots.readVersion(s, baseTable, f.curV))
-        .withColumn("sgn", lit(1)), netted = true)
-    } { f =>
-      val (ins, del) = Snapshots.changesBetween(s, baseTable, f.lastV, f.curV)
-      f.append(simhashBlocksOf(ins).withColumn("sgn", lit(1)).unionByName(
-        simhashBlocksOf(del).withColumn("sgn", lit(-1))))
-    }
-    Snapshots.maybeCompactNet(s, idxTable, SimhashThroughPrefix)(df =>
-      simhashNet(df).withColumn("sgn", lit(1)))
-    Snapshots.currentVersion(idxTable)
-  }
+      baseTable: String, idxTable: String): Int =
+    SimhashIndex.fold(s, baseTable, idxTable)(simhashBlocksOf(_).withColumn("sgn", lit(1)))
 
   /** Net view of the tombstone-folded SimHash block index — the live
     * corpus's pigeonhole rows, schema-compatible with
@@ -862,15 +823,13 @@ object Dedup {
     */
   def serveSimhashIndex(s: org.apache.spark.sql.SparkSession,
       idxTable: String): DataFrame =
-    graft.sources.Snapshots.serveNetted(s, idxTable)(simhashNet)(
-      _.select("doc_id", "simhash", "block", "blockval"))
+    SimhashIndex.serve(s, idxTable).select("doc_id", "simhash", "block", "blockval")
 
-  private def simhashNet(df: DataFrame): DataFrame =
-    df.groupBy("doc_id", "simhash", "block", "blockval")
-      .agg(sum(col("sgn")).as("net")).where(col("net") > 0)
-      .select("doc_id", "simhash", "block", "blockval")
-
-  private val FpThroughPrefix = "fp_through "
+  /** The exact-dedup fingerprint index's
+    * [[graft.sources.SignedIndex]]: signed (doc_id, fp) membership rows.
+    */
+  private[graft] val FingerprintIndex =
+    graft.sources.SignedIndex("fp_through ", Seq("doc_id", "fp"), "sgn")
 
   /** DELETE-AWARE maintenance of the exact-dedup fingerprint index:
     * signed (doc_id, fp) rows — NOT the folded fp→min(canonical) map,
@@ -881,22 +840,9 @@ object Dedup {
     * so canonical promotion falls out of the aggregate.
     */
   def fingerprintIndexMaintain(s: org.apache.spark.sql.SparkSession,
-      baseTable: String, idxTable: String): Int = {
-    import graft.sources.Snapshots
-    def fpsOf(docs: DataFrame): DataFrame =
-      docs.select(col("doc_id"), md5(col("text")).as("fp"))
-    Snapshots.foldThrough(baseTable, idxTable, FpThroughPrefix) { f =>
-      f.replace(fpsOf(Snapshots.readVersion(s, baseTable, f.curV))
-        .withColumn("sgn", lit(1)), netted = true)
-    } { f =>
-      val (ins, del) = Snapshots.changesBetween(s, baseTable, f.lastV, f.curV)
-      f.append(fpsOf(ins).withColumn("sgn", lit(1)).unionByName(
-        fpsOf(del).withColumn("sgn", lit(-1))))
-    }
-    Snapshots.maybeCompactNet(s, idxTable, FpThroughPrefix)(df =>
-      fpNet(df).withColumn("sgn", lit(1)))
-    Snapshots.currentVersion(idxTable)
-  }
+      baseTable: String, idxTable: String): Int =
+    FingerprintIndex.fold(s, baseTable, idxTable)(
+      _.select(col("doc_id"), md5(col("text")).as("fp"), lit(1).as("sgn")))
 
   /** fp → canonical (min live doc_id) from the tombstone-folded
     * fingerprint index — equals `d_dedup_exact`'s canonical map over
@@ -904,14 +850,8 @@ object Dedup {
     */
   def serveFingerprintIndex(s: org.apache.spark.sql.SparkSession,
       idxTable: String): DataFrame =
-    graft.sources.Snapshots.serveNetted(s, idxTable)(fpNet)(
-      _.select("doc_id", "fp"))
+    FingerprintIndex.serve(s, idxTable)
       .groupBy("fp").agg(min(col("doc_id")).as("canonical_id"))
-
-  private def fpNet(df: DataFrame): DataFrame =
-    df.groupBy("doc_id", "fp")
-      .agg(sum(col("sgn")).as("net")).where(col("net") > 0)
-      .select("doc_id", "fp")
 
   /** DuckDB CTE chain re-deriving the minhash BAND-INDEX rows
     * (doc_id, band, bucket) from a restricted documents corpus — the

@@ -212,7 +212,7 @@ object Forget {
     */
   private[graft] def bm25ServeChecksums(s: SparkSession, root: String): DataFrame = {
     val post = TextFunctions.servePostingsNetAt(s, s"$root/postings", pruned = false)
-    val dl = TextFunctions.serveDoclenNetAt(s, s"$root/doclen")
+    val dl = TextFunctions.Doclen.serve(s, s"$root/doclen")
     val tot = Snapshots.read(s, s"$root/totals")
       .agg(coalesce(sum(col("np")), lit(0L)).cast("long").as("n"),
         coalesce(sum(col("totalp")), lit(0L)).cast("long").as("total"))
@@ -875,7 +875,7 @@ object Forget {
         df.where(cond).agg(count(lit(1)).as("refs"))
           .select(lit(name).as("family"), col("refs"))
       val post = TextFunctions.servePostingsNetAt(s, s"$root/postings", pruned = false)
-      val dl = TextFunctions.serveDoclenNetAt(s, s"$root/doclen")
+      val dl = TextFunctions.Doclen.serve(s, s"$root/doclen")
       val bands = Dedup.serveBandIndex(s, s"$root/bands")
       val blocks = Dedup.serveSimhashIndex(s, s"$root/simhash")
       val fps = Dedup.serveFingerprintIndex(s, s"$root/fps")

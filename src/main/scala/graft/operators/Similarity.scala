@@ -703,15 +703,13 @@ object Similarity {
     new String(Files.readAllBytes(f), "UTF-8").trim.toInt
   }
 
-  private def graphBandsNet(df: DataFrame): DataFrame =
-    df.groupBy("vec_id", "band", "bucket")
-      .agg(sum(col("sgn")).as("net")).where(col("net") > 0)
-      .select("vec_id", "band", "bucket")
-
-  private def graphNet(df: DataFrame): DataFrame =
-    df.groupBy("g_src", "g_dst", "g_sim")
-      .agg(sum(col("sgn")).as("net")).where(col("net") > 0)
-      .select("g_src", "g_dst", "g_sim")
+  /** The kNN graph's band sidecar and adjacency as
+    * [[graft.sources.SignedIndex]]es, both under the graph watermark.
+    */
+  private[graft] val KnnBands = graft.sources.SignedIndex(GraphThroughPrefix,
+    Seq("vec_id", "band", "bucket"), "sgn")
+  private[graft] val KnnGraph = graft.sources.SignedIndex(GraphThroughPrefix,
+    Seq("g_src", "g_dst", "g_sim"), "sgn")
 
   /** DELETE-AWARE maintenance of the persisted kNN graph (and its
     * banded-vector sidecar) over a VERSIONED base table — the missing
@@ -767,26 +765,20 @@ object Similarity {
     // that newer span's change set, and the newer walk's own graph fold
     // recomputes exactly those sources from truly-live bands (asserted
     // by the composed-race specs in ForgetSpec).
-    Snapshots.foldThrough(baseTable, bandsT, GraphThroughPrefix, Some(curV)) { f =>
-      f.replace(graphBandsOf(project(Snapshots.readVersion(s, baseTable, curV)), bits)
-        .withColumn("sgn", lit(1L)), netted = true)
-    } { f =>
-      val (ins0, del0) = Snapshots.changesBetween(s, baseTable, f.lastV, curV)
-      f.append(graphBandsOf(project(ins0), bits).withColumn("sgn", lit(1L))
-        .unionByName(graphBandsOf(project(del0), bits).withColumn("sgn", lit(-1L))))
-    }
-    Snapshots.foldThrough(baseTable, graphT, GraphThroughPrefix, Some(curV)) { f =>
-      f.replace(buildGraph(project(Snapshots.readVersion(s, baseTable, curV)), bits)
-        .withColumn("sgn", lit(1L)), netted = true)
+    KnnBands.fold(s, baseTable, bandsT, Some(curV))(
+      vecs => graphBandsOf(project(vecs), bits).withColumn("sgn", lit(1L)))
+    KnnGraph.foldWith(s, baseTable, graphT, Some(curV)) { _ =>
+      buildGraph(project(Snapshots.readVersion(s, baseTable, curV)), bits)
+        .withColumn("sgn", lit(1L))
     } { f =>
       val (ins0, del0) = Snapshots.changesBetween(s, baseTable, f.lastV, curV)
       val ins = project(ins0).localCheckpoint()
       val del = project(del0).localCheckpoint()
       val insBands = graphBandsOf(ins, bits).localCheckpoint()
-      val liveBands = graphBandsNet(Snapshots.read(s, bandsT)).localCheckpoint()
+      val liveBands = KnnBands.net(Snapshots.read(s, bandsT)).drop("sgn").localCheckpoint()
       val deleted = del.select("vec_id").distinct()
       val inserted = ins.select("vec_id").distinct()
-      val oldGraph = graphNet(Snapshots.read(s, graphT)).localCheckpoint()
+      val oldGraph = KnnGraph.net(Snapshots.read(s, graphT)).drop("sgn").localCheckpoint()
       val affectedByDel = oldGraph
         .join(deleted, oldGraph("g_dst") === deleted("vec_id"), "left_semi")
         .select(col("g_src").as("vec_id"))
@@ -813,13 +805,8 @@ object Similarity {
       val negRows = oldGraph
         .join(dropSrcs, oldGraph("g_src") === dropSrcs("vec_id"), "left_semi")
         .withColumn("sgn", lit(-1L))
-      f.append(negRows.unionByName(freshAdj.withColumn("sgn", lit(1L))))
+      negRows.unionByName(freshAdj.withColumn("sgn", lit(1L)))
     }
-    // size-ratio compaction policy (serving invariant; sgn re-carried)
-    Snapshots.maybeCompactNet(s, bandsT, GraphThroughPrefix)(df =>
-      graphBandsNet(df).withColumn("sgn", lit(1L)))
-    Snapshots.maybeCompactNet(s, graphT, GraphThroughPrefix)(df =>
-      graphNet(df).withColumn("sgn", lit(1L)))
     ()
   }
 
@@ -828,8 +815,7 @@ object Similarity {
     * [[buildGraph]] of the live base.
     */
   def serveKnnGraph(s: SparkSession, graphT: String): DataFrame =
-    graft.sources.Snapshots.serveNetted(s, graphT)(graphNet)(
-      _.select("g_src", "g_dst", "g_sim"))
+    KnnGraph.serve(s, graphT).select("g_src", "g_dst", "g_sim")
 
   /** DuckDB CTE chain rebuilding the kNN-graph adjacency from a
     * restricted embeddings corpus — the live-corpus oracle of
@@ -1856,6 +1842,12 @@ object Similarity {
 
   private val IvfThroughPrefix = "ivf_through "
 
+  /** The IVF inverted lists' [[graft.sources.SignedIndex]]: one `sgn`
+    * row per vector's (vec_id, q, nrm, cid) assignment.
+    */
+  private[graft] val IvfLists = graft.sources.SignedIndex(IvfThroughPrefix,
+    Seq("vec_id", "q", "nrm", "cid"), "sgn")
+
   /** DELETE-AWARE maintenance of IVF inverted lists under a FROZEN
     * coarse quantizer — the ANN-side twin of the search family's
     * tombstone maintenance: quantizers are frozen artifacts between
@@ -1864,9 +1856,8 @@ object Similarity {
     * frozen centroids — a departed vector's row folds in as sgn = −1
     * and cancels its bootstrap row EXACTLY, an inserted one assigns
     * against the same centroids with sgn = +1. One maintenance pass =
-    * one change-feed read ([[graft.sources.Snapshots.changesBetween]],
-    * only the dirs that entered/left the base manifest) + one O(changed
-    * vectors) append; [[serveIvfLists]] nets at read, so the served
+    * one change-feed read + one O(changed vectors) append
+    * ([[IvfLists]]); [[serveIvfLists]] nets at read, so the served
     * lists equal a fresh assignment of the LIVE corpus under the
     * frozen quantizer — never a rebuild, never a re-train.
     */
@@ -1878,12 +1869,12 @@ object Similarity {
     // composition) to the (vec_id, embedding) shape this maintenance
     // consumes; the default is the plain embeddings-table identity
     import graft.sources.Snapshots
-    // a fold (Snapshots.foldThrough): two concurrent registry walks
-    // cannot double-append the same span's assignments. The quantizer
-    // train runs INSIDE the bootstrap step, so a fold that loses its
-    // bootstrap race (the winner already trained + assigned) never
-    // re-trains on retry — the watermark re-read no-ops it.
-    Snapshots.foldThrough(baseTable, listsT, IvfThroughPrefix) { f =>
+    // a fold: two concurrent registry walks cannot double-append the
+    // same span's assignments. The quantizer train runs INSIDE the
+    // bootstrap step, so a fold that loses its bootstrap race (the
+    // winner already trained + assigned) never re-trains on retry —
+    // the watermark re-read no-ops it.
+    IvfLists.foldWith(s, baseTable, listsT) { f =>
       val base = project(Snapshots.readVersion(s, baseTable, f.curV))
       // train ONLY if no quantizer exists yet: a vacuum-triggered
       // recompute (and a lost bootstrap race) re-ASSIGNS the live
@@ -1899,21 +1890,12 @@ object Similarity {
             Seq(IvfDriftBasePrefix + driftMean(quantized(base), c)))
           c
         }
-      f.replace(ivfAssign(quantized(base), cents).drop("m").withColumn("sgn", lit(1)),
-        netted = true)
+      ivfAssign(quantized(base), cents).drop("m").withColumn("sgn", lit(1))
     } { f =>
       val cents = Snapshots.read(s, centsT)
-      val (ins0, del0) = Snapshots.changesBetween(s, baseTable, f.lastV, f.curV)
-      val (ins, del) = (project(ins0), project(del0))
-      f.append(ivfAssign(quantized(ins), cents).drop("m")
-        .withColumn("sgn", lit(1))
-        .unionByName(ivfAssign(quantized(del), cents).drop("m")
-          .withColumn("sgn", lit(-1))))
+      IvfLists.delta(s, baseTable, f)(vecs =>
+        ivfAssign(quantized(project(vecs)), cents).drop("m").withColumn("sgn", lit(1)))
     }
-    // size-ratio compaction policy (serving invariant; sgn re-carried)
-    Snapshots.maybeCompactNet(s, listsT, IvfThroughPrefix)(df =>
-      ivfNet(df).select(col("vec_id"), col("q"), col("nrm"), col("cid"))
-        .withColumn("sgn", lit(1)))
     ()
   }
 
@@ -1999,8 +1981,7 @@ object Similarity {
       val newCents = ivfTrain(baseDf, cCountOf(baseDf.count()), rounds)
       Snapshots.commitOverwriteTagged(newCents, centsT,
         Seq(IvfDriftBasePrefix + driftMean(live, newCents)))
-      Snapshots.commitOverwriteTagged(
-        ivfAssign(live, newCents).drop("m").withColumn("sgn", lit(1)),
+      IvfLists.replace(ivfAssign(live, newCents).drop("m").withColumn("sgn", lit(1)),
         listsT, Seq(IvfThroughPrefix + curV))
       ()
     }
@@ -2012,23 +1993,7 @@ object Similarity {
     * under the frozen quantizer.
     */
   def serveIvfLists(s: SparkSession, listsT: String): DataFrame =
-    graft.sources.Snapshots.serveNetted(s, listsT)(df =>
-      ivfNet(df).select("vec_id", "q", "nrm", "cid"))(
-      _.select("vec_id", "q", "nrm", "cid"))
-
-  private def ivfNet(df: DataFrame): DataFrame =
-    df.groupBy("vec_id", "q", "nrm", "cid")
-      .agg(sum(col("sgn")).as("net")).where(col("net") > 0)
-
-  /** Major compaction of the tombstone-folded IVF lists (the
-    * [[graft.sources.Snapshots.compactNet]] convention): nets
-    * cancelled assignments into one clean version, sgn re-carried so
-    * later DML folds keep appending against the compacted base.
-    */
-  def ivfListsCompact(s: SparkSession, listsT: String): Int =
-    graft.sources.Snapshots.compactNet(s, listsT, IvfThroughPrefix)(df =>
-      ivfNet(df).select(col("vec_id"), col("q"), col("nrm"), col("cid"))
-        .withColumn("sgn", lit(1)))
+    IvfLists.serve(s, listsT).select("vec_id", "q", "nrm", "cid")
 
   /** Catalog twin: IVF ANN over a corpus that suffered real DML — the
     * `t_search_dml` scenario on the vector side: bootstrap 90% of the

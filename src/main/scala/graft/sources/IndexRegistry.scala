@@ -25,9 +25,11 @@ import org.apache.spark.sql.SparkSession
   * The flagship composition is [[forgetWhere]]: ONE erasure predicate
   * (the GDPR right-to-be-forgotten request) deletes from the base
   * snapshot and folds the change feed through EVERY attached family in
-  * a single pass. Each family's fold is O(changed rows) by its own
-  * contract (tombstone-delta appends, never index rewrites), so the
-  * erasure costs O(erased data × families), never O(corpus).
+  * a single pass. Each built-in family's tables are [[SignedIndex]]es
+  * (fold, net, serve and compaction contract stated there): a fold
+  * appends O(changed rows) of signed deltas and never rewrites an
+  * index, so the erasure costs O(erased data × families), never
+  * O(corpus).
   *
   * Reference analog: Database.deleteRecord propagating a record
   * mutation into every access path (table heap + every B+ tree index);

@@ -276,6 +276,12 @@ object MaterializedView {
   private val JTagL = "mvj_left_through "
   private val JTagR = "mvj_right_through "
 
+  /** The join view's [[SignedIndex]]: a bag of view rows (every column
+    * but `sgn` is the key, the net weight its multiplicity) under the
+    * two per-base watermarks.
+    */
+  private[graft] val JoinView = new SignedIndex(Seq(JTagL, JTagR), Nil, "sgn")
+
   /** The (left base, right base) versions the JOIN view at `mvTable`
     * currently reflects ((0, 0) if the view does not exist) — read by
     * the optimizer-rule pin ([[graft.plans.MvRewrite.registerJoin]]).
@@ -305,8 +311,8 @@ object MaterializedView {
     * (crash between base DML and refresh loses nothing — the next
     * refresh folds the gap); the commit runs the snapshot commit loop
     * (see [[Snapshots]]) against the pinned view version — a
-    * two-watermark fold, so it stages its own claims — and a size-ratio
-    * compaction trigger ([[joinMaybeCompact]]) bounds tombstone debt.
+    * two-watermark fold, so it stages its own claims. Netted bootstrap,
+    * serve and compaction: [[JoinView]].
     *
     * At 100 TB this is how a wide denormalized serving table follows
     * its normalized sources: the delta join shuffles only changed keys
@@ -340,9 +346,7 @@ object MaterializedView {
           val full = Snapshots.readVersion(spark, leftTable, lTo)
             .join(Snapshots.readVersion(spark, rightTable, rTo), key)
             .withColumn("sgn", lit(1L))
-          // all-sgn=1 content: serveJoin's per-row explode(1..1) is the
-          // identity, so the bootstrap may serve without re-netting
-          Snapshots.replaceClaim(full, mvTable, tags :+ Snapshots.NettedTag)
+          JoinView.nettedClaim(full, mvTable, tags)
         } else {
           setMode(mvTable, "delta-join")
           val (lIns, lDel) = Snapshots.changesBetween(spark, leftTable, lLast, lTo)
@@ -369,52 +373,17 @@ object MaterializedView {
         }
       }
     }
-    joinMaybeCompact(spark, mvTable)
+    JoinView.maybeCompact(spark, mvTable)
     v
   }
 
   /** Net view of the signed join rows: multiset multiplicity restored
-    * by expanding each surviving row `net` times (a join view is a
-    * BAG — two identical right rows yield two identical view rows).
+    * by expanding each live row `sgn` times (a join view is a BAG — two
+    * identical right rows yield two identical view rows) with the
+    * streaming generator, never an O(multiplicity) sequence array.
     */
   def serveJoin(spark: SparkSession, mvTable: String): DataFrame = {
-    // pin ONE version for the netted check and the read (a refresh
-    // landing in between must not pair a stale tag with new content)
-    val v = Snapshots.currentVersion(mvTable)
-    val df = Snapshots.readVersion(spark, mvTable, v)
-    val cols = df.columns.filter(_ != "sgn").toSeq
-    if (Snapshots.nettedAt(mvTable, v))
-      // compacted head: content IS the netted view (one row per
-      // distinct value, sgn = its bag multiplicity) — skip the
-      // re-netting shuffle, expand multiplicity with the streaming
-      // generator (never an O(multiplicity) sequence array)
-      Snapshots.replicateRows(df, col("sgn"), cols)
-    else
-      Snapshots.replicateRows(
-        df.groupBy(cols.map(col): _*).agg(sum(col("sgn")).as("net")),
-        col("net"), cols)
-  }
-
-  /** Size-ratio-triggered major compaction of the signed join view —
-    * [[Snapshots.maybeCompactNet]]'s policy, but preserving BOTH
-    * per-base watermark tags (which that single-prefix helper cannot
-    * carry). A racing maintenance append fails the claim and the retry
-    * re-nets the new head, so it is never dropped.
-    */
-  private def joinMaybeCompact(spark: SparkSession, mvTable: String,
-      maxDeltaRatio: Double = 0.5): Unit = {
-    val (base, delta) = Snapshots.compactionDebt(spark, mvTable)
-    if (delta > maxDeltaRatio * math.max(base, 1L))
-      Snapshots.headCas(mvTable, "join-view compaction") { head =>
-        val tags = Snapshots.versionTags(mvTable, head)
-          .filter(t => t.startsWith(JTagL) || t.startsWith(JTagR))
-        val df = Snapshots.readVersion(spark, mvTable, head)
-        val cols = df.columns.filter(_ != "sgn").toSeq
-        val netted = df.groupBy(cols.map(col): _*).agg(sum(col("sgn")).as("sgn"))
-          .where(col("sgn") > 0)
-        // the compacted content IS the netted view — tag it so serves
-        // skip the re-netting shuffle (see Snapshots.NettedTag)
-        Snapshots.replaceClaim(netted, mvTable, tags :+ Snapshots.NettedTag)
-      }
+    val df = JoinView.serve(spark, mvTable)
+    Snapshots.replicateRows(df, col("sgn"), df.columns.filter(_ != "sgn").toSeq)
   }
 }

@@ -918,11 +918,8 @@ object Snapshots {
     */
   private[graft] final class Fold private[Snapshots] (val table: String,
       val head: Int, val lastV: Int, val curV: Int) {
-    /** Stage `df` as the table's whole content; `netted` tags it as
-      * its own serving net ([[NettedTag]]).
-      */
-    def replace(df: DataFrame, netted: Boolean = false): Claim =
-      replaceClaim(df, table, if (netted) Seq(NettedTag) else Nil)
+    /** Stage `df` as the table's whole content. */
+    def replace(df: DataFrame): Claim = replaceClaim(df, table)
 
     /** Stage `df` appended to the pinned head's content. */
     def append(df: DataFrame): Claim = appendClaim(df, table, head)
@@ -1013,66 +1010,9 @@ object Snapshots {
     }.filter { case (_, (c, b)) => c > 0 || b > 0 }.toMap
   }
 
-  /** MAJOR compaction of a tombstone-folded derived table: rewrite the
-    * netted view (`net` — the structure's serving aggregate, e.g.
-    * postings tf-netting) as ONE clean version, carrying the
-    * maintained-through watermark tag forward unchanged. The lifecycle
-    * piece of the tombstone-delta design: minor cost stays O(batch)
-    * per DML fold, and this bounds the accumulated tombstone debt the
-    * way an LSM major compaction bounds its runs — run it when the
-    * delta-dir count or tombstone fraction crosses a threshold.
-    * Readers pinned to pre-compaction versions are undisturbed
-    * (snapshot isolation), and a post-compaction maintenance pass
-    * still no-ops at the same watermark.
-    */
-  /** Tag marking a version whose content IS the output of its serving
-    * net function (written by [[compactNet]] and the join-view
-    * compaction): a serve against such a head may skip the re-netting
-    * aggregate outright — re-netting already-netted rows is the
-    * identity — saving one full-table shuffle per serve. Any later
-    * maintenance append commits a new (untagged) version, so the
-    * shortcut can never see a stale claim.
-    */
-  private[graft] val NettedTag = "cdcnetted"
-
-  /** Whether `version`'s content is committed-as-netted (see
-    * [[NettedTag]]). Callers must pin ONE version for the check and
-    * the read.
-    */
-  def nettedAt(table: String, version: Int): Boolean =
-    version > 0 && versionTags(table, version).contains(NettedTag)
-
-  /** Serve a tombstone-folded derived table: apply the serving `net`
-    * aggregate UNLESS the pinned head was committed-as-netted (a
-    * bootstrap or compaction — see [[NettedTag]]), in which case
-    * `alreadyNetted` (typically a bare projection) serves the rows
-    * directly, skipping the re-netting shuffle. Version pinned once
-    * for the tag check and the read.
-    */
-  def serveNetted(spark: SparkSession, table: String)(
-      net: DataFrame => DataFrame)(
-      alreadyNetted: DataFrame => DataFrame): DataFrame = {
-    val v = currentVersion(table)
-    val df = readVersion(spark, table, v)
-    if (nettedAt(table, v)) alreadyNetted(df) else net(df)
-  }
-
-  def compactNet(spark: SparkSession, table: String, watermarkPrefix: String)(
-      net: DataFrame => DataFrame): Int =
-    // content-PRESERVING rewrite of the pinned head: re-carry its
-    // watermark and committed schema tags explicitly (a replace claim
-    // never inherits them — dropping them would re-expose dropped
-    // columns); a maintenance append racing the rewrite makes the
-    // claim fail and the retry re-nets the new head, so the late delta
-    // survives
-    headCas(table, "compaction") { head =>
-      replaceClaim(net(readVersion(spark, table, head)), table,
-        Seq(watermarkPrefix + tagWatermarkAt(table, watermarkPrefix, head), NettedTag) ++
-          schemaMetaTags(table, head))
-    }
-
   /** Tombstone/delta debt of a derived table: (rows in the base data
-    * dir, rows across all later delta dirs). Row counts come from
+    * dir, rows across all later delta dirs) — what [[SignedIndex]]'s
+    * compaction policy weighs. Row counts come from
     * parquet metadata (a zero-column count scan reads footers, not
     * data pages), so this probe is cheap enough to run after every
     * maintenance fold. The manifest orders dirs oldest-first, and a
@@ -1117,23 +1057,6 @@ object Snapshots {
     }.sum
   }
 
-  /** Size-ratio compaction POLICY over [[compactNet]] — the LSM
-    * convention: major-compact when accumulated delta rows exceed
-    * `maxDeltaRatio` of the base, so a long DML sequence cannot
-    * accrete unbounded tombstones no matter how long it runs. Wired
-    * into every maintenance entry point (postings/BM25/band-index/IVF
-    * lists); the post-maintenance invariant is delta ≤ ratio·base.
-    * Returns the compacted version, or None when under threshold.
-    */
-  def maybeCompactNet(spark: SparkSession, table: String,
-      watermarkPrefix: String, maxDeltaRatio: Double = 0.5)(
-      net: DataFrame => DataFrame): Option[Int] = {
-    val (base, delta) = compactionDebt(spark, table)
-    if (delta > maxDeltaRatio * math.max(base, 1L))
-      Some(compactNet(spark, table, watermarkPrefix)(net))
-    else None
-  }
-
   /** The base version recorded by a `prefix`-tagged watermark at
     * `table`'s HEAD version (0 when the table is empty or the head
     * carries no such tag) — the shared convention of every
@@ -1145,7 +1068,7 @@ object Snapshots {
 
   /** [[tagWatermark]] pinned to an explicit version — for callers that
     * must read the watermark of the SAME head they later CAS against
-    * ([[compactNet]]), instead of racing a second head lookup.
+    * (a fold, a compaction), instead of racing a second head lookup.
     */
   def tagWatermarkAt(table: String, prefix: String, v: Int): Int = {
     if (v == 0) 0
@@ -1193,7 +1116,7 @@ object Snapshots {
   /** A version's schema metadata lines verbatim (schema + tombstones),
     * for content-preserving commits to re-commit (see [[Claim]]).
     */
-  private def schemaMetaTags(table: String, version: Int): Seq[String] = {
+  private[sources] def schemaMetaTags(table: String, version: Int): Seq[String] = {
     val p = meta(table).resolve(s"v$version.manifest")
     if (!Files.exists(p)) return Nil
     Files.readAllLines(p, StandardCharsets.UTF_8).asScala.toSeq
@@ -1919,7 +1842,7 @@ object Snapshots {
   /** Bounded MAJOR re-cluster of a [[clusteredMaintain]] replica: when
     * more than `maxRuns` runs have accreted, rewrite the whole replica
     * into ONE Z-ordered dir, carrying the maintained-through watermark
-    * forward ([[compactNet]]'s contract with a clustered writer —
+    * forward ([[SignedIndex.compact]]'s contract with a clustered writer —
     * plain [[compactFull]] would DROP the watermark tag and force the
     * next walk into a full re-bootstrap). Head-CAS with retry: a
     * racing maintenance fold is never overwritten.

@@ -136,7 +136,7 @@ class ForgetSpec extends SparkSpec {
     def erased(df: DataFrame, idCol: String): Long =
       df.where(pmod(col(idCol), lit(7)) === 0).count()
     assert(erased(Snapshots.read(spark, baseT), "doc_id") == 0, "base")
-    assert(erased(graft.functions.TextFunctions.servePostingsNet(
+    assert(erased(graft.functions.TextFunctions.Postings.net(
       Snapshots.read(spark, s"$root/postings")), "doc_id") == 0, "postings")
     assert(erased(Snapshots.read(spark, s"$root/doclen").groupBy("doc_id")
       .agg(sum(col("dl")).as("dl")).where(col("dl") > 0), "doc_id") == 0, "doclen")
@@ -578,7 +578,7 @@ class ForgetSpec extends SparkSpec {
     StormMaintainer("foldThrough",
       (baseT, t) => {
         Snapshots.foldThrough(baseT, t, "storm_through ") { f =>
-          f.replace(Snapshots.readVersion(spark, baseT, f.curV), netted = true)
+          f.replace(Snapshots.readVersion(spark, baseT, f.curV))
         } { f =>
           f.append(Snapshots.changesBetween(spark, baseT, f.lastV, f.curV)._1)
         }
@@ -676,9 +676,9 @@ class ForgetSpec extends SparkSpec {
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
     val (baseT, root) = Forget.bootstrap(spark, sfDir, tag = "_cmprace")
-    // compactors hammer two attached index roots while the erasure's
-    // registry walk folds deltas into the SAME tables: compactNet is a
-    // head CAS and the folds are foldThrough CAS cycles, so every
+    // compactors hammer four attached index roots while the erasure's
+    // registry walk folds deltas into the SAME tables: a compaction is
+    // a head CAS and the folds are foldThrough CAS cycles, so every
     // interleaving must keep each table's netted content — a lost fold
     // (compactor overwrote a freshly-appended delta) or a lost
     // compaction (fold head moved mid-rewrite) would both surface as a
@@ -686,8 +686,10 @@ class ForgetSpec extends SparkSpec {
     val racers = Seq(
       Future {
         (1 to 3).foreach { _ =>
-          graft.operators.Dedup.bandIndexCompact(spark, s"$root/bands")
-          graft.functions.TextFunctions.postingsCompact(spark, s"$root/postings")
+          Dedup.BandIndex.compact(spark, s"$root/bands")
+          graft.functions.TextFunctions.Postings.compact(spark, s"$root/postings")
+          Similarity.IvfLists.compact(spark, s"$root/ivf_lists")
+          Similarity.KnnGraph.compact(spark, s"$root/knn_graph")
         }
         0
       },

@@ -719,7 +719,7 @@ class PipelineSpec extends SparkSpec {
         s"cycle $i: delta $delta rows exceeds the policy bound (base $base)")
       if (delta == 0) compactions += 1
       // serving invariant THROUGHOUT, not just at the end
-      assert(rows(TextFunctions.servePostingsNet(Snapshots.read(spark, postT))) ==
+      assert(rows(TextFunctions.Postings.net(Snapshots.read(spark, postT))) ==
         rows(TextFunctions.postingsOf(Snapshots.read(spark, baseT))),
         s"cycle $i: maintained serving diverged from a full rebuild")
     }
@@ -761,7 +761,7 @@ class PipelineSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("term", "doc_id", "tf").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val served = rows(TextFunctions.servePostingsNet(Snapshots.read(spark, postT)))
+    val served = rows(TextFunctions.Postings.net(Snapshots.read(spark, postT)))
     val rebuilt = rows(TextFunctions.postingsOf(Snapshots.read(spark, baseT)))
     assert(served == rebuilt, "net-served postings must equal a full rebuild")
     // and the DML really removed something (the equivalence is not
@@ -773,10 +773,10 @@ class PipelineSpec extends SparkSpec {
     // serving unchanged, physical rows shrink to the live set, the
     // watermark carries forward so maintenance still no-ops
     val physBefore = Snapshots.read(spark, postT).count()
-    TextFunctions.postingsCompact(spark, postT)
+    TextFunctions.Postings.compact(spark, postT)
     assert(Snapshots.read(spark, postT).count() < physBefore,
       "compaction must shed tombstone + cancelled rows")
-    assert(rows(TextFunctions.servePostingsNet(Snapshots.read(spark, postT))) == rebuilt,
+    assert(rows(TextFunctions.Postings.net(Snapshots.read(spark, postT))) == rebuilt,
       "serving must be unchanged by compaction")
     val vHead = Snapshots.currentVersion(postT)
     assert(TextFunctions.postingsMaintain(spark, baseT, postT) == vHead,
@@ -804,7 +804,7 @@ class PipelineSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("term", "doc_id", "tf").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val served = rows(TextFunctions.servePostingsNet(Snapshots.read(spark, postT)))
+    val served = rows(TextFunctions.Postings.net(Snapshots.read(spark, postT)))
     val rebuilt = rows(TextFunctions.postingsOf(Snapshots.read(spark, baseT)))
     assert(served == rebuilt,
       "after MERGE, net postings must equal a full rebuild of the merged corpus")
@@ -868,7 +868,7 @@ class PipelineSpec extends SparkSpec {
     // major compaction: tombstones net away, serving unchanged,
     // maintenance still no-ops at the carried watermark
     val physBefore = Snapshots.read(spark, idxT).count()
-    Dedup.bandIndexCompact(spark, idxT)
+    Dedup.BandIndex.compact(spark, idxT)
     assert(Snapshots.read(spark, idxT).count() < physBefore)
     assert(rows(Dedup.serveBandIndex(spark, idxT)) == rebuilt)
     val vHead = Snapshots.currentVersion(idxT)
@@ -912,7 +912,7 @@ class PipelineSpec extends SparkSpec {
     assert((tot.getLong(0), tot.getLong(1)) ==
       (dlWant.size.toLong, dlWant.toSeq.map(_._2).sum),
       "summed scalar partials must equal live corpus count/total")
-    val postNet = TextFunctions.servePostingsNet(Snapshots.read(spark, postT))
+    val postNet = TextFunctions.Postings.net(Snapshots.read(spark, postT))
       .select("term", "doc_id", "tf")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     val postWant = TextFunctions.postingsOf(live).select("term", "doc_id", "tf")
@@ -938,7 +938,7 @@ class PipelineSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val before = served
     val physBefore = Snapshots.read(spark, listsT).count()
-    Similarity.ivfListsCompact(spark, listsT)
+    Similarity.IvfLists.compact(spark, listsT)
     assert(Snapshots.read(spark, listsT).count() < physBefore,
       "compaction must shed cancelled assignment rows")
     assert(served == before, "serving must be unchanged by compaction")

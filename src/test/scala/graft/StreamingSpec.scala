@@ -688,7 +688,7 @@ class StreamingSpec extends SparkSpec {
       .select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1)))
     def netRows = TextFunctions
-      .servePostingsNet(Snapshots.read(spark, postT))
+      .Postings.net(Snapshots.read(spark, postT))
       .select("term", "doc_id", "tf")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     def rebuildRows = TextFunctions
