@@ -588,10 +588,27 @@ object StatsQueries {
             FROM $t""".stripMargin
       }.mkString(" UNION ALL ")))
 
+  /** Per-partition (part_id, n_rows, chk) checksum stats of lineitem
+    * rows, partitioned by l_orderkey mod 8.
+    */
+  private def lineitemPartStats(df: DataFrame): DataFrame = {
+    val ser = checksumTables.find(_._1 == "lineitem").get._2
+    df.groupBy(pmod(col("l_orderkey"), lit(8L)).as("part_id"))
+      .agg(count(lit(1)).as("n_rows"),
+        (sum(sparkH(ser).cast("decimal(38,0)")) % lit(ChecksumMod)).cast("long").as("chk"))
+  }
+
+  /** The persisted checksum parts of the base corpus (lineitem rows
+    * with l_orderkey % 10 != 0), a [[graft.sources.BuildOnce]] table.
+    */
+  private[graft] def checksumParts(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    graft.sources.BuildOnce("checksum_parts", dir, "lineitem").serve(s)(lineitemPartStats(
+      Tables.load(s, dir, "lineitem").where(pmod(col("l_orderkey"), lit(10L)) =!= 0)))
+
   /** INCREMENTAL table fingerprints — validate a mutated 100 TB table
     * by touching only the delta. Per-partition (part_id, n_rows,
-    * checksum) stats for the base corpus are a persisted content-keyed
-    * snapshot ([[graft.sources.Snapshots.ensureIndex]]); a new batch
+    * checksum) stats for the base corpus are a persisted build-once
+    * table ([[checksumParts]]); a new batch
     * folds in as new_chk(p) = (base_chk(p) + chk(delta rows in p)) mod
     * (2^61−1) — pure O(Δ) arithmetic, NO base rescan (a delete would
     * enter the same fold as M − h, the signed-delta convention of the
@@ -603,29 +620,13 @@ object StatsQueries {
     * the snapshot on first run); delta = the % 10 == 0 slice.
     */
   val tableChecksumIncremental: QueryDef = {
-    val (_, sparkSer, duckSer) =
-      checksumTables.find(_._1 == "lineitem").get
+    val duckSer = checksumTables.find(_._1 == "lineitem").get._3
     QueryDef(
       "q_table_checksum_incremental",
       (s, dir) => {
-        import graft.sources.Snapshots
-        val statsT = graft.Roots.scratch + "/checksum_parts/" +
-          dir.replaceAll("[^A-Za-z0-9]", "_")
-        val fp = Snapshots.fileFingerprint(s"$dir/lineitem.parquet")
-        def partStats(df: org.apache.spark.sql.DataFrame) = df
-          .groupBy(pmod(col("l_orderkey"), lit(8L)).as("part_id"))
-          .agg(count(lit(1)).as("n_rows"),
-            (sum(sparkH(sparkSer).cast("decimal(38,0)"))
-              % lit(ChecksumMod)).cast("long").as("chk"))
-        val v = Snapshots.ensureIndex(statsT, fp) { out =>
-          partStats(Tables.load(s, dir, "lineitem")
-              .where(pmod(col("l_orderkey"), lit(10L)) =!= 0))
-            .write.mode(org.apache.spark.sql.SaveMode.ErrorIfExists).parquet(out)
-        }
-        val base = s.read.parquet(Snapshots.versionDirs(statsT, v): _*)
-        val delta = partStats(Tables.load(s, dir, "lineitem")
+        val delta = lineitemPartStats(Tables.load(s, dir, "lineitem")
           .where(pmod(col("l_orderkey"), lit(10L)) === 0))
-        base.unionAll(delta).groupBy("part_id")
+        checksumParts(s, dir).unionAll(delta).groupBy("part_id")
           .agg(sum(col("n_rows")).as("n_rows"),
             // two mod-folded summands: their sum < 2·2^61 fits int64
             (sum(col("chk")) % lit(ChecksumMod)).as("checksum"))

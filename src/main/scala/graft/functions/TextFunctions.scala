@@ -946,15 +946,14 @@ object TextFunctions {
 
   /** §2.2 — keyword search served from a PERSISTED inverted index:
     * the IR-side counterpart of the persisted ANN indexes. The index
-    * is the classic postings table (term, doc_id, tf), built ONCE per
-    * corpus fingerprint through the claim-elected
-    * [[graft.sources.Snapshots.ensureIndex]] and laid out partitioned
-    * by a 16-way term-hash bucket; a conjunctive query then reads ONLY
-    * its terms' buckets (PartitionFilters on `b` — the scan is
-    * O(matched postings), not O(corpus), at any scale), broadcasts the
-    * tiny literal query table, keeps docs containing ALL the query's
-    * terms, and ranks by summed term frequency (exact integers;
-    * doc_id tie-break). The DuckDB oracle recomputes the whole thing
+    * is the classic postings table (term, doc_id, tf), a
+    * [[graft.sources.BuildOnce]] table ([[servedPostings]]) laid out
+    * partitioned by a 16-way term-hash bucket; a conjunctive query
+    * then reads ONLY its terms' buckets (PartitionFilters on `b` — the
+    * scan is O(matched postings), not O(corpus), at any scale),
+    * broadcasts the tiny literal query table, keeps docs containing
+    * ALL the query's terms, and ranks by summed term frequency (exact
+    * integers; doc_id tie-break). The DuckDB oracle recomputes the whole thing
     * from raw text — hash equality proves index serving ≡ full scan.
     */
   /** Postings (term, doc_id, tf, b) of a (doc_id, text) corpus — the
@@ -1074,20 +1073,16 @@ object TextFunctions {
         ()
       }
 
+  /** The persisted postings of `dir`'s documents, partitioned by `b`. */
+  private def servedPostings(s: org.apache.spark.sql.SparkSession, dir: String)
+      : org.apache.spark.sql.DataFrame =
+    graft.sources.BuildOnce("invidx", dir, "documents").sub("postings").serve(s, "b")(
+      termSorted(postingsOf(Tables.load(s, dir, "documents"))))
+
   val invertedSearch: QueryDef = QueryDef(
     "t_inverted_search",
-    (s, dir) => {
-      import graft.sources.Snapshots
-      val postT = graft.Roots.scratch + "/invidx/" +
-        dir.replaceAll("[^A-Za-z0-9]", "_") + "/postings"
-      val fp = Snapshots.fileFingerprint(s"$dir/documents.parquet")
-      val v = Snapshots.ensureIndex(postT, fp) { out =>
-        Snapshots.writeStaged(
-          termSorted(postingsOf(Tables.load(s, dir, "documents"))), out, "b")
-      }
-      serveConjunctive(s, s.read.parquet(Snapshots.versionDirs(postT, v): _*)
-        .where(col("b").isin(searchBuckets: _*)))
-    },
+    (s, dir) => serveConjunctive(s,
+      servedPostings(s, dir).where(col("b").isin(searchBuckets: _*))),
     Some(conjunctiveOracleSql()))
 
   /** Term-range runs per bucket: rows range-partitioned by (b, term)
@@ -1251,9 +1246,9 @@ object TextFunctions {
     * postings carry (term, doc_id, pos) and a two-word phrase is a
     * self-join on doc with pos+1 adjacency (the standard positional-
     * postings algorithm). Same serving shape as the conjunctive index:
-    * built once per corpus fingerprint (claim-elected), partitioned by
-    * term-hash bucket, the query reads ONLY its words' buckets and the
-    * tiny phrase table broadcasts. Positions are raw-split ordinals in
+    * a [[graft.sources.BuildOnce]] table partitioned by term-hash
+    * bucket, the query reads ONLY its words' buckets and the tiny
+    * phrase table broadcasts. Positions are raw-split ordinals in
     * both engines (empty tokens keep their slot and can never match a
     * word), so adjacency arithmetic is identical and the DuckDB
     * full-recompute oracle proves serving ≡ scan by hash equality.
@@ -1261,21 +1256,15 @@ object TextFunctions {
   val phraseSearch: QueryDef = QueryDef(
     "t_phrase_search",
     (s, dir) => {
-      import graft.sources.Snapshots
-      val postT = graft.Roots.scratch + "/invidx/" +
-        dir.replaceAll("[^A-Za-z0-9]", "_") + "/postings_pos"
-      val fp = Snapshots.fileFingerprint(s"$dir/documents.parquet")
-      val v = Snapshots.ensureIndex(postT, fp) { out =>
-        Snapshots.writeStaged(Tables.load(s, dir, "documents")
+      val words = PhraseTerms.flatMap(p => Seq(p._2, p._3)).distinct
+      val post = graft.sources.BuildOnce("invidx", dir, "documents").sub("postings_pos")
+        .serve(s, "b")(Tables.load(s, dir, "documents")
           .select(col("doc_id"),
             posexplode(split(lower(col("text")), " ")).as(Seq("pos", "term")))
           .where(col("term") =!= "")
           .withColumn("b", bucketExpr(col("term")))
           .repartitionByRange(64, col("b"), col("term"))
-          .sortWithinPartitions("b", "term", "doc_id", "pos"), out, "b")
-      }
-      val words = PhraseTerms.flatMap(p => Seq(p._2, p._3)).distinct
-      val post = s.read.parquet(Snapshots.versionDirs(postT, v): _*)
+          .sortWithinPartitions("b", "term", "doc_id", "pos"))
         .where(col("b").isin(bucketsOf(words): _*))
         // pushed term literals → row-group pruning inside the buckets
         .where(col("term").isin(words: _*))
@@ -1385,26 +1374,18 @@ object TextFunctions {
     */
   private def bm25Ranked(s: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {
-    import graft.sources.Snapshots
-    val root = graft.Roots.scratch + "/invidx/" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
-    val postT = root + "/postings"
-    val dlT = root + "/doclen"
-    val fp = Snapshots.fileFingerprint(s"$dir/documents.parquet")
-    val v = Snapshots.ensureIndex(postT, fp) { out =>
-      Snapshots.writeStaged(
-        termSorted(postingsOf(Tables.load(s, dir, "documents"))), out, "b")
-    }
-    val vd = Snapshots.ensureIndex(dlT, fp) { out =>
-      Snapshots.writeStaged(docLengths(Tables.load(s, dir, "documents")), out)
-    }
-    val post = s.read.parquet(Snapshots.versionDirs(postT, v): _*)
-      .where(col("b").isin(searchBuckets: _*))
-    val dl = s.read.parquet(Snapshots.versionDirs(dlT, vd): _*)
+    val post = servedPostings(s, dir).where(col("b").isin(searchBuckets: _*))
+    val dl = bm25Doclen(s, dir)
     val tot = dl.agg(count(lit(1)).cast("long").as("n"),
       sum(col("dl")).cast("long").as("total"))
     bm25Serve(s, post, dl, tot)
   }
+
+  /** The persisted BM25 doclen sidecar (doc_id, dl) of `dir`'s documents. */
+  private[graft] def bm25Doclen(s: org.apache.spark.sql.SparkSession, dir: String)
+      : org.apache.spark.sql.DataFrame =
+    graft.sources.BuildOnce("invidx", dir, "documents").sub("doclen").serve(s)(
+      docLengths(Tables.load(s, dir, "documents")))
 
   /** The BM25 serving tail over any (pruned postings, doclen sidecar,
     * 1-row corpus scalars) trio — shared by the build-once path

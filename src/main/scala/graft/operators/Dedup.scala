@@ -714,23 +714,12 @@ object Dedup {
     * production pipeline pair generation runs once per corpus snapshot
     * and every downstream consumer (clustering, canonical selection,
     * dedup analytics) reads the persisted table instead of re-running
-    * the shingle→prefix→verify pipeline. Content-keyed + claim-elected
-    * through [[graft.sources.Snapshots.ensureIndex]] (round-10 GC
-    * audit: the old presence-marker scheme was path-only keyed, so a
-    * regenerated input dir kept serving the STALE pair table — the
-    * exact staleness class the z-order layout fixed in round 7);
-    * `d_dedup_ngram_jaccard` still executes the full inline pipeline,
+    * the shingle→prefix→verify pipeline: a [[graft.sources.BuildOnce]]
+    * table. `d_dedup_ngram_jaccard` still executes the full inline pipeline,
     * so the build cost itself stays benchmarked.
     */
-  def nearDupPairsTable(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    import graft.sources.Snapshots
-    val base = graft.Roots.scratch + "/neardup/" + dir.replaceAll("[^A-Za-z0-9]", "_")
-    val fp = Snapshots.fileFingerprint(s"$dir/documents.parquet")
-    val ver = Snapshots.ensureIndex(base, fp) { out =>
-      Snapshots.writeStaged(ngramNearDupPairs(s, dir), out)
-    }
-    s.read.parquet(Snapshots.versionDirs(base, ver): _*)
-  }
+  def nearDupPairsTable(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    graft.sources.BuildOnce("neardup", dir, "documents").serve(s)(ngramNearDupPairs(s, dir))
 
   /** Incrementally maintain a component labeling as new near-dup
     * edges stream in (the production shape: nightly dedup emits new

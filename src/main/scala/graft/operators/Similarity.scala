@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.sources.BuildOnce
 
 /** Approximate-nearest-neighbor search over the embeddings table
   * (SURVEY §2.2 rows 26–27).
@@ -885,24 +886,17 @@ object Similarity {
   }
 
   /** The PERSISTED per-vector band index of an embeddings input —
-    * (vec_id, band, bucket), committed once per input fingerprint like
-    * the graph. Serving queries join their (tiny) query-side band rows
+    * (vec_id, band, bucket), a [[BuildOnce]] table like the graph.
+    * Serving queries join their (tiny) query-side band rows
     * against this scan to seed candidate pools, so query time does NO
     * corpus banding and no corpus self-join: the one remaining corpus
     * touch is the exact-rerank vector lookup.
     */
-  def knnBandsTable(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    import graft.sources.Snapshots
-    val table = graft.Roots.scratch + "/knnbands/" + dir.replaceAll("[^A-Za-z0-9]", "_")
-    val fp = Snapshots.fileFingerprint(s"$dir/embeddings.parquet")
-    val ver = Snapshots.ensureIndex(table, fp) { out =>
-      Snapshots.writeStaged(
-        bandedVectors(quantized(Tables.load(s, dir, "embeddings"))
-          .withColumn("buckets", lshBandBuckets(col("q"))))
-          .repartition(col("band"), col("bucket")), out)
-    }
-    s.read.parquet(Snapshots.versionDirs(table, ver): _*)
-  }
+  def knnBandsTable(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    BuildOnce("knnbands", dir, "embeddings").serve(s)(
+      bandedVectors(quantized(Tables.load(s, dir, "embeddings"))
+        .withColumn("buckets", lshBandBuckets(col("q"))))
+        .repartition(col("band"), col("bucket")))
 
   /** Seed pairs for a query set served from the PERSISTED band index:
     * band the (tiny) query side in-plan and join it against the index
@@ -921,28 +915,20 @@ object Similarity {
   }
 
   /** The PERSISTED kNN graph over an embeddings input
-    * ([[buildGraph]]), committed once per input fingerprint through
-    * [[graft.sources.Snapshots.ensureIndex]] (claim-elected single
-    * builder, atomic tagged commit, content-keyed so regenerated data
-    * rebuilds). Both the one-hop expansion (`s_knn_graph`) and the
-    * beam search (`s_knn_beam`) SERVE hops from this table — the graph
-    * is scanned from parquet, not rebuilt per query. Edges land
-    * repartitioned by g_src: at scale every hop is an equi-join on the
-    * edge partitioning key.
+    * ([[buildGraph]]), a [[BuildOnce]] table. Both the one-hop
+    * expansion (`s_knn_graph`) and the beam search (`s_knn_beam`) SERVE
+    * hops from this table — the graph is scanned from parquet, not
+    * rebuilt per query. Edges land repartitioned by g_src: at scale
+    * every hop is an equi-join on the edge partitioning key.
     */
   def knnGraphTable(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    import graft.sources.Snapshots
-    val table = graft.Roots.scratch + "/knngraph/" + dir.replaceAll("[^A-Za-z0-9]", "_")
-    val fp = Snapshots.fileFingerprint(s"$dir/embeddings.parquet")
+    val graph = BuildOnce("knngraph", dir, "embeddings")
     // corpus-adaptive band width (8 at every catalog sf — see
     // graphBitsFor); in the content key so a corpus crossing the
     // threshold rebuilds instead of serving the narrower space
-    val bits = graphBitsFor(embeddingsCountCached(s, dir, fp))
-    val ver = Snapshots.ensureIndex(table, s"${fp}_b$bits") { out =>
-      Snapshots.writeStaged(buildGraph(Tables.load(s, dir, "embeddings"), bits)
-        .repartition(col("g_src")), out)
-    }
-    s.read.parquet(Snapshots.versionDirs(table, ver): _*)
+    val bits = graphBitsFor(embeddingsCountCached(s, dir, graph.key))
+    graph.salted(s"_b$bits").serve(s)(
+      buildGraph(Tables.load(s, dir, "embeddings"), bits).repartition(col("g_src")))
   }
 
   /** §2.2 row 27g — GRAPH-expanded ANN (the HNSW family's core move):
@@ -1355,64 +1341,43 @@ object Similarity {
     * grow C with √N, run more Lloyd rounds offline, and persist the
     * inverted lists partitioned by cid so probes prune at the scan.
     */
-  /** Build-or-serve the persisted IVF index over `dir`'s embeddings:
-    * (broadcast centroids, lists table, lists version). The index is
-    * physical design, built AT MOST ONCE per input fingerprint and
-    * SERVED from disk: inverted lists land as parquet partitioned by
-    * centroid id, so a probe reads only its cid= directories
-    * (partition pruning at the scan — the IVF analog of the z-order
-    * secondary path). Builds go through Snapshots.ensureIndex: a
-    * claim-elected single builder, an ATOMIC tagged commit (no torn
-    * index is ever visible), and a content key that rebuilds when the
-    * input data is regenerated. Shared by [[knnIvf]], [[ivfTopK]] (the
-    * hybrid-retrieval vector side), and the IVF+PQ serving path.
+  /** The build-once root of an IVF-family index over `dir`'s
+    * embeddings, and its cluster count C. C rides in the content key
+    * next to the input fingerprint (the bloomSkipIndex convention): an
+    * index built under a different C — data regenerated at another
+    * size, or the growth law itself revised — can never be served
+    * against an oracle that derives a different C from the same data.
     */
-  private[graft] def ivfIndex(s: SparkSession, dir: String): (DataFrame, String, Int) = {
-    import graft.sources.Snapshots
-    val base = graft.Roots.scratch + "/ivf/" + dir.replaceAll("[^A-Za-z0-9]", "_")
-    val (listsT, centsT) = (s"$base/lists", s"$base/centroids")
-    // the content key carries the cluster count next to the input
-    // fingerprint (the bloomSkipIndex convention): an index built
-    // under a different C — data regenerated at another size, or the
-    // growth law itself revised — can never be served against an
-    // oracle that derives a different C from the same data
-    val fpBase = Snapshots.fileFingerprint(s"$dir/embeddings.parquet")
-    val c = cCountOf(embeddingsCountCached(s, dir, fpBase))
-    val fp = fpBase + s"-c$c"
-    val byDist = Window.partitionBy("vec_id").orderBy(col("m"), col("cid"))
-    val centsV = Snapshots.ensureIndex(centsT, fp) { out =>
-      val v = quantized(Tables.load(s, dir, "embeddings")).localCheckpoint()
-      val seeds = broadcast(v.where(col("vec_id") < c)
-        .select(col("vec_id").as("cid"), col("q").as("cq")))
-      // assignment 1: nearest seed by exact integer squared L2
-      val a1 = v.repartition(col("vec_id")).crossJoin(seeds)
-        .select(col("vec_id"), col("q"), col("nrm"), col("cid"),
-          graft.functions.Native.sqDistScaled(col("q"), col("cq"), lit(1L))
-            .cast("double").as("m"))
-        .withColumn("rn", row_number().over(byDist)).where(col("rn") === 1)
-        .select("vec_id", "q", "nrm", "cid")
-      // Lloyd update, exact integers: component sums + member count
-      val sums = a1.select(col("cid"), posexplode(col("q"))).toDF("cid", "dim", "v")
-        .groupBy("cid", "dim").agg(sum(col("v")).as("sv"))
-        .groupBy("cid").agg(transform(
-          array_sort(collect_list(struct(col("dim"), col("sv")))),
-          x => x.getField("sv")).as("cs"))
-      Snapshots.writeStaged(
-        sums.join(a1.groupBy("cid").agg(count(lit(1)).as("cn")), "cid"), out)
-    }
-    val cents = broadcast(s.read.parquet(Snapshots.versionDirs(centsT, centsV): _*))
-    val listsV = Snapshots.ensureIndex(listsT, fp) { out =>
-      // assignment 2: inverted lists under the committed centroids
-      val v = quantized(Tables.load(s, dir, "embeddings"))
-      val a2 = v.repartition(col("vec_id")).crossJoin(cents)
-        .select(col("vec_id"), col("q"), col("nrm"), col("cid"),
-          (graft.functions.Native.sqDistScaled(col("q"), col("cs"), col("cn"))
-            .cast("double") / (col("cn") * col("cn")).cast("double")).as("m"))
-        .withColumn("rn", row_number().over(byDist)).where(col("rn") === 1)
-        .select("vec_id", "q", "nrm", "cid")
-      graft.sources.Sources.writePartitioned(a2, out, "cid")
-    }
-    (cents, listsT, listsV)
+  private def ivfRoot(s: SparkSession, dir: String, family: String): (BuildOnce, Int) = {
+    val root = BuildOnce(family, dir, "embeddings")
+    val c = cCountOf(embeddingsCountCached(s, dir, root.key))
+    (root.salted(s"-c$c"), c)
+  }
+
+  /** The persisted IVF coarse quantizer over `dir`'s embeddings
+    * (broadcast): [[ivfTrain]]'s C seeds plus one Lloyd step, a
+    * [[BuildOnce]] table.
+    */
+  private[graft] def ivfCentroids(s: SparkSession, dir: String): DataFrame = {
+    val (root, c) = ivfRoot(s, dir, "ivf")
+    broadcast(root.sub("centroids").serve(s)(
+      ivfTrain(Tables.load(s, dir, "embeddings"), c, 1)))
+  }
+
+  /** Build-or-serve the persisted IVF index over `dir`'s embeddings:
+    * (broadcast centroids, inverted lists). The index is physical
+    * design, two [[BuildOnce]] tables: the inverted lists land as
+    * parquet partitioned by centroid id, so a probe's cid filter reads
+    * only its cid= directories (partition pruning at the scan — the
+    * IVF analog of the z-order secondary path). Shared by [[knnIvf]],
+    * [[ivfTopK]] (the hybrid-retrieval vector side), and the IVF+PQ
+    * serving path.
+    */
+  private[graft] def ivfIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val cents = ivfCentroids(s, dir)
+    (cents, ivfRoot(s, dir, "ivf")._1.sub("lists").serve(s, "cid")(
+      ivfAssign(quantized(Tables.load(s, dir, "embeddings")), cents)
+        .select("vec_id", "q", "nrm", "cid")))
   }
 
   /** The exact-integer centroid metric both assignment and probing
@@ -1426,8 +1391,7 @@ object Similarity {
   val knnIvf: QueryDef = QueryDef(
     "s_knn_ivf",
     (s, dir) => {
-      import graft.sources.Snapshots
-      val (cents, listsT, listsV) = ivfIndex(s, dir)
+      val (cents, listsAll) = ivfIndex(s, dir)
       val byDist = Window.partitionBy("vec_id").orderBy(col("m"), col("cid"))
       def metric: Column = ivfMetric
       // queries probe the NProbe nearest lists …
@@ -1442,8 +1406,7 @@ object Similarity {
       // by C — a legitimate driver fetch) so the list scan PRUNES to
       // exactly the probed partitions instead of reading the corpus
       val probeCids = probes.select("cid").distinct().collect().map(_.getLong(0))
-      val lists = s.read.parquet(Snapshots.versionDirs(listsT, listsV): _*)
-        .where(col("cid").isin(probeCids: _*))
+      val lists = listsAll.where(col("cid").isin(probeCids: _*))
         .select(col("vec_id").as("n_id"), col("q").as("n_q"),
           col("nrm").as("n_nrm"), col("cid").cast("long").as("cid"))
       val scored = broadcast(probes).join(lists, Seq("cid"))
@@ -1517,8 +1480,7 @@ object Similarity {
   val ivfSweep: QueryDef = QueryDef(
     "s_knn_ivf_sweep",
     (s, dir) => {
-      import graft.sources.Snapshots
-      val (cents, listsT, listsV) = ivfIndex(s, dir)
+      val (cents, listsAll) = ivfIndex(s, dir)
       val byDist = Window.partitionBy("vec_id").orderBy(col("m"), col("cid"))
       val v = quantized(Tables.load(s, dir, "embeddings")).localCheckpoint()
       val queries = v.where(col("vec_id") < 5)
@@ -1529,8 +1491,7 @@ object Similarity {
           col("nrm").as("q_nrm"), col("cid"), col("rn").cast("long").as("prn"))
         .localCheckpoint()
       val probeCids = probes.select("cid").distinct().collect().map(_.getLong(0))
-      val lists = s.read.parquet(Snapshots.versionDirs(listsT, listsV): _*)
-        .where(col("cid").isin(probeCids: _*))
+      val lists = listsAll.where(col("cid").isin(probeCids: _*))
         .select(col("vec_id").as("n_id"), col("q").as("n_q"),
           col("nrm").as("n_nrm"), col("cid").cast("long").as("cid"))
       val w5 = Window.partitionBy("q_id").orderBy(col("sim").desc, col("n_id"))
@@ -1631,8 +1592,7 @@ object Similarity {
     */
   def ivfTopK(s: SparkSession, dir: String,
       seeds: Seq[(Int, Long)], k: Int): DataFrame = {
-    import graft.sources.Snapshots
-    val (cents, listsT, listsV) = ivfIndex(s, dir)
+    val (cents, listsAll) = ivfIndex(s, dir)
     val byDist = Window.partitionBy("vec_id").orderBy(col("m"), col("cid"))
     val queries = quantized(Tables.load(s, dir, "embeddings"))
       .where(col("vec_id").isin(seeds.map(_._2): _*))
@@ -1644,8 +1604,7 @@ object Similarity {
       .select(col("query_id"), col("vec_id").as("seed_id"),
         col("q").as("q_q"), col("nrm").as("q_nrm"), col("cid"))
     val probeCids = probes.select("cid").distinct().collect().map(_.getLong(0))
-    val lists = s.read.parquet(Snapshots.versionDirs(listsT, listsV): _*)
-      .where(col("cid").isin(probeCids: _*))
+    val lists = listsAll.where(col("cid").isin(probeCids: _*))
       .select(col("vec_id").as("n_id"), col("q").as("n_q"),
         col("nrm").as("n_nrm"), col("cid").cast("long").as("cid"))
     val scored = broadcast(probes).join(lists, Seq("cid"))
@@ -1774,8 +1733,7 @@ object Similarity {
   val knnFiltered: QueryDef = QueryDef(
     "s_knn_filtered",
     (s, dir) => {
-      import graft.sources.Snapshots
-      val (cents, listsT, listsV) = ivfIndex(s, dir)
+      val (cents, listsAll) = ivfIndex(s, dir)
       val byDist = Window.partitionBy("vec_id").orderBy(col("m"), col("cid"))
       val lab = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("label"))
       val queries = quantized(Tables.load(s, dir, "embeddings"))
@@ -1787,8 +1745,7 @@ object Similarity {
         .select(col("vec_id").as("q_id"), col("q").as("q_q"),
           col("nrm").as("q_nrm"), col("cid"), col("label").as("q_label"))
       val probeCids = probes.select("cid").distinct().collect().map(_.getLong(0))
-      val lists = s.read.parquet(Snapshots.versionDirs(listsT, listsV): _*)
-        .where(col("cid").isin(probeCids: _*))
+      val lists = listsAll.where(col("cid").isin(probeCids: _*))
         .select(col("vec_id").as("n_id"), col("q").as("n_q"),
           col("nrm").as("n_nrm"), col("cid").cast("long").as("cid"))
         .join(lab.select(col("vec_id").as("n_id"), col("label").as("n_label")), "n_id")
@@ -2376,9 +2333,21 @@ object Similarity {
         .select("q_id", "n_id", "sim")
   }
 
+  /** The IVF+PQ quantizers over `dir`'s embeddings (broadcast): the
+    * coarse centroids and the PQ codebooks, [[BuildOnce]] tables keyed
+    * like the IVF index (C rides in the key — see [[ivfRoot]]).
+    */
+  private[graft] def ivfPqQuantizers(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val (root, c) = ivfRoot(s, dir, "ivfpq")
+    lazy val e = Tables.load(s, dir, "embeddings") // read only by a build
+    (broadcast(root.sub("cents").serve(s)(ivfTrain(e, c, 1))),
+      broadcast(root.sub("codebooks").serve(s)(subVectors(quantized(e))
+        .where(col("vec_id") < PqK)
+        .select(col("m").as("cb_m"), col("vec_id").as("k"), col("sq").as("cq")))))
+  }
+
   /** §2.2 row 27f, SERVED: the quantizers train OFFLINE (at most once
-    * per input fingerprint, claim-elected + atomically committed via
-    * [[graft.sources.Snapshots.ensureIndex]]) and the query serves
+    * per input fingerprint, [[BuildOnce]] tables) and the query serves
     * from the pinned versions — coarse centroids and PQ codebooks as
     * tiny broadcasts, and the corpus CODES as one parquet table
     * PARTITIONED BY cid (the inverted lists and the code table are the
@@ -2394,30 +2363,11 @@ object Similarity {
     * top-`k` — shared with the recall eval (`s_knn_ivfpq_recall`).
     */
   private def ivfPqServe(s: SparkSession, dir: String, k: Int): DataFrame = {
-      import graft.sources.Snapshots
-      val base = graft.Roots.scratch + "/ivfpq/" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      val (centsT, cbT, codesT) = (s"$base/cents", s"$base/codebooks", s"$base/codes")
       val e = Tables.load(s, dir, "embeddings")
-      // C rides in the content key (see ivfIndex) — cents and the
-      // cid-keyed codes both depend on it
-      val fpBase = Snapshots.fileFingerprint(s"$dir/embeddings.parquet")
-      val c = cCountOf(embeddingsCountCached(s, dir, fpBase))
-      val fp = fpBase + s"-c$c"
       // ---- offline: coarse quantizer, PQ codebooks, cid-keyed codes
-      val centsV = Snapshots.ensureIndex(centsT, fp) { out =>
-        val cents = ivfTrain(e, c, 1)
-        Snapshots.writeStaged(cents, out)
-      }
-      val cents = broadcast(s.read.parquet(Snapshots.versionDirs(centsT, centsV): _*))
-      val cbV = Snapshots.ensureIndex(cbT, fp) { out =>
-        Snapshots.writeStaged(subVectors(quantized(e)).where(col("vec_id") < PqK)
-          .select(col("m").as("cb_m"), col("vec_id").as("k"), col("sq").as("cq")),
-          out)
-      }
-      val cb = broadcast(s.read.parquet(Snapshots.versionDirs(cbT, cbV): _*))
-      val codesV = Snapshots.ensureIndex(codesT, fp) { out =>
-        graft.sources.Sources.writePartitioned(pqEncode(e, cents, cb), out, "cid")
-      }
+      val (cents, cb) = ivfPqQuantizers(s, dir)
+      val codesAll = ivfRoot(s, dir, "ivfpq")._1.sub("codes")
+        .serve(s, "cid")(pqEncode(e, cents, cb))
       // ---- serving: probe, prune the code scan, ADC, exact rerank
       val v = quantized(e).localCheckpoint()
       val byDist = Window.partitionBy("vec_id").orderBy(col("mm"), col("cid"))
@@ -2430,8 +2380,7 @@ object Similarity {
       // probed cids as scan literals (bounded by C): the code-table
       // scan prunes to exactly the probed partitions
       val probeCids = probes.select("cid").distinct().collect().map(_.getLong(0))
-      val codes = readPartitionedDirs(s, codesT, codesV)
-        .where(col("cid").isin(probeCids: _*))
+      val codes = codesAll.where(col("cid").isin(probeCids: _*))
         .select(col("n_id"), col("c_m"), col("code"), col("cid").cast("long").as("cid"))
       // query-side ADC tables from the persisted codebooks
       val adc = subVectors(v.where(col("vec_id") < 5)).join(cb, col("m") === col("cb_m"))
@@ -2651,18 +2600,6 @@ object Similarity {
     }
     cents
   }
-
-  /** Read a cid-partitioned index table committed as one or more
-    * partitioned dirs (the full build plus incremental appends): Spark
-    * cannot put multiple partitioned roots under one scan without a
-    * shared basePath, so each dir partition-discovers independently
-    * and the frames union — a probe's cid filter pushes into EVERY
-    * branch, so partition pruning survives appends.
-    */
-  def readPartitionedDirs(s: org.apache.spark.sql.SparkSession,
-      table: String, version: Int): DataFrame =
-    graft.sources.Snapshots.versionDirs(table, version)
-      .map(d => s.read.parquet(d)).reduce(_.unionByName(_))
 
   /** Encode vectors for IVF+PQ serving under FROZEN quantizers:
     * coarse-assign each vector to its inverted list and PQ-encode its
@@ -2965,13 +2902,32 @@ object Similarity {
     },
     Some(pqTrainedOracle))
 
+  /** The trained-PQ artifacts over `dir`'s embeddings: the broadcast
+    * Lloyd-trained codebooks and the corpus codes they induce (2^20-grid
+    * partial distances, nearest code per subspace).
+    */
+  private[graft] def pqServedIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val root = BuildOnce("pqtrained", dir, "embeddings")
+    lazy val e = Tables.load(s, dir, "embeddings") // read only by a build
+    val cb = broadcast(root.sub("codebooks").serve(s)(pqTrain(e, rounds = 1)))
+    (cb, root.sub("codes").serve(s) {
+      val v = quantized(e).localCheckpoint()
+      val byD = Window.partitionBy("vec_id", "m").orderBy(col("pd"), col("k"))
+      subVectors(v).join(cb, Seq("m"))
+        .select(col("vec_id"), col("m"), col("k"),
+          floor(pqMetric * lit(1L << 20)).cast("long").as("pd"))
+        .withColumn("rn", row_number().over(byD)).where(col("rn") === 1)
+        .select(col("vec_id").as("n_id"), col("m").as("c_m"), col("k").as("code"))
+    })
+  }
+
   /** §2.2 row 27e, TRAINED + SERVED: [[pqBuild]]'s Lloyd-trained
-    * codebooks AND the corpus codes they induce are committed at most
-    * once per input fingerprint ([[graft.sources.Snapshots.ensureIndex]])
-    * and SERVED — the query never trains or encodes. It broadcasts the
-    * persisted codebooks (M×K rows), scans the persisted code table
-    * (M bytes per vector — the resident index at 100 TB), builds the
-    * tiny query-side ADC tables, and exact-reranks the shortlist.
+    * codebooks AND the corpus codes they induce are [[BuildOnce]]
+    * tables ([[pqServedIndex]]) and SERVED — the query never trains or
+    * encodes. It broadcasts the persisted codebooks (M×K rows), scans
+    * the persisted code table (M bytes per vector — the resident index
+    * at 100 TB), builds the tiny query-side ADC tables, and
+    * exact-reranks the shortlist.
     * Training is deterministic exact-integer arithmetic, so serving is
     * bit-identical to the in-query trainer — the two queries share one
     * oracle, and equality is also asserted in PipelineSpec.
@@ -2979,27 +2935,8 @@ object Similarity {
   val knnPqServed: QueryDef = QueryDef(
     "s_knn_pq_served",
     (s, dir) => {
-      import graft.sources.Snapshots
-      val base = graft.Roots.scratch + "/pqtrained/" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      val (cbT, codesT) = (s"$base/codebooks", s"$base/codes")
-      val fp = Snapshots.fileFingerprint(s"$dir/embeddings.parquet")
       val e = Tables.load(s, dir, "embeddings")
-      val cbV = Snapshots.ensureIndex(cbT, fp) { out =>
-        val cents = pqTrain(e, rounds = 1)
-        Snapshots.writeStaged(cents, out)
-      }
-      val cb = broadcast(s.read.parquet(Snapshots.versionDirs(cbT, cbV): _*))
-      val codesV = Snapshots.ensureIndex(codesT, fp) { out =>
-        val v = quantized(e).localCheckpoint()
-        val byD = Window.partitionBy("vec_id", "m").orderBy(col("pd"), col("k"))
-        Snapshots.writeStaged(subVectors(v).join(cb, Seq("m"))
-          .select(col("vec_id"), col("m"), col("k"),
-            floor(pqMetric * lit(1L << 20)).cast("long").as("pd"))
-          .withColumn("rn", row_number().over(byD)).where(col("rn") === 1)
-          .select(col("vec_id").as("n_id"), col("m").as("c_m"), col("k").as("code")),
-          out)
-      }
-      val codes = s.read.parquet(Snapshots.versionDirs(codesT, codesV): _*)
+      val (cb, codes) = pqServedIndex(s, dir)
       val v = quantized(e).localCheckpoint()
       // query-side ADC tables under the persisted trained codebooks —
       // same 2^20-grid partial distances the codes were encoded with
@@ -3455,7 +3392,7 @@ object Similarity {
       val e = Tables.load(s, dir, "embeddings")
       val base = e.where(col("vec_id") % 10 =!= 0)
       val batch = e.where(col("vec_id") % 10 === 0)
-      // CONTENT-keyed root (the ensureIndex convention applied to this
+      // CONTENT-keyed root (the BuildOnce key applied to this
       // two-table structure): regenerated input data lands in a fresh
       // root and retrains — a path-only key would keep serving a
       // quantizer trained on the OLD corpus while the oracle retrains
@@ -4121,7 +4058,7 @@ object Similarity {
   val silhouette: QueryDef = QueryDef(
     "s_silhouette",
     (s, dir) => {
-      val (cents, _, _) = ivfIndex(s, dir)
+      val cents = ivfCentroids(s, dir)
       val byDist = Window.partitionBy("vec_id").orderBy(col("m"), col("cid"))
       val ranked = quantized(Tables.load(s, dir, "embeddings"))
         .crossJoin(cents)
@@ -4503,10 +4440,7 @@ object Similarity {
   val ivfBalance: QueryDef = QueryDef(
     "s_ivf_balance",
     (s, dir) => {
-      import graft.sources.Snapshots
-      val (_, listsT, listsV) = ivfIndex(s, dir)
-      val sizes = s.read.parquet(Snapshots.versionDirs(listsT, listsV): _*)
-        .groupBy(col("cid").cast("long").as("cid"))
+      val sizes = ivfIndex(s, dir)._2.groupBy(col("cid").cast("long").as("cid"))
         .agg(count(lit(1)).as("sz"))
       val tot = sizes.agg(count(lit(1)).as("n_lists_total"),
         sum(col("sz")).as("n_vecs_total"), max(col("sz")).as("max_sz"))
@@ -4958,7 +4892,7 @@ object Similarity {
     * cosine rerank. Codebook = the corpus per-dim (min, range) stats,
     * one broadcast row.
     *
-    * Scale shape: index build amortized (ensureIndex, content-keyed);
+    * Scale shape: index build amortized (a [[BuildOnce]] table);
     * serving reads ONLY probed partitions; the exact-vector fetch
     * joins a ≤ 5 × 40-row frame against the corpus (broadcast the
     * short side); windows partitioned by q_id.
@@ -4966,8 +4900,7 @@ object Similarity {
   val knnIvfSq: QueryDef = QueryDef(
     "s_knn_ivf_sq",
     (s, dir) => {
-      import graft.sources.Snapshots
-      val (cents, listsT, listsV) = ivfIndex(s, dir)
+      val (cents, listsAll) = ivfIndex(s, dir)
       val v = quantized(Tables.load(s, dir, "embeddings"))
       val stats = broadcast(sqStats(v))
       val enc = "transform(q, (x, d) -> ((x - element_at(mns, d+1)) * 255)" +
@@ -4980,8 +4913,7 @@ object Similarity {
         .crossJoin(stats)
         .select(col("vec_id").as("q_id"), expr(enc).as("q_code"), col("cid"))
       val probeCids = probes.select("cid").distinct().collect().map(_.getLong(0))
-      val lists = s.read.parquet(Snapshots.versionDirs(listsT, listsV): _*)
-        .where(col("cid").isin(probeCids: _*))
+      val lists = listsAll.where(col("cid").isin(probeCids: _*))
         .crossJoin(stats)
         .select(col("vec_id").as("n_id"), expr(enc).as("n_code"),
           col("cid").cast("long").as("cid"))

@@ -113,7 +113,8 @@ object MvRewrite {
 
   /** One registered JOIN view ([[graft.sources.MaterializedView
     * .joinRefresh]]): the signed denormalized L ⋈_key R, pinned at the
-    * base dirs each side's watermark version reflects. `viewRows` is
+    * base dirs each side's watermark version reflects; `mvVersion` is
+    * the pinned view version (its dirs are `mvDirs`). `viewRows` is
     * the PHYSICAL (signed, tombstone-inclusive) row count the netting
     * serve must scan; `baseRows` the summed base-side row counts the
     * join it replaces would scan — the cost statistics behind the
@@ -121,7 +122,7 @@ object MvRewrite {
     * choice, QueryPlan.executeOptimal).
     */
   final case class JoinMvDef(mvTable: String, leftDirs: Set[String],
-    rightDirs: Set[String], mvDirs: Seq[String], key: String,
+    rightDirs: Set[String], mvVersion: Int, mvDirs: Seq[String], key: String,
     viewRows: Long = 0L, baseRows: Long = Long.MaxValue)
 
   @volatile private[graft] var joinRegistry: Seq[JoinMvDef] = Nil
@@ -148,6 +149,7 @@ object MvRewrite {
       mvTable,
       lDirs.map(normalize).toSet,
       rDirs.map(normalize).toSet,
+      v,
       mvDirs,
       key,
       viewRows = Snapshots.footerRows(spark, mvDirs),
@@ -458,26 +460,23 @@ class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
       case _ => false
     }
 
-  /** Join-view rewrite: replace the L ⋈_key R node with the NETTED
-    * serve of the signed view (group by every stored column, sum(sgn)
-    * > 0, bag multiplicity restored by sequence-explode — exactly
-    * [[graft.sources.MaterializedView.serveJoin]], built over the
-    * PINNED view dirs), its output re-aliased onto the join's
-    * attribute ids (both key attributes map to the view's single key
-    * column) so every parent expression resolves unchanged. Refuses
-    * when any join output column is missing from the view.
+  /** Join-view rewrite: replace the L ⋈_key R node with the netted
+    * serve of the signed view at its PINNED version
+    * ([[graft.sources.MaterializedView.serveJoinAt]]: the join view's
+    * net, or its rows alone on a netted head, bag multiplicity restored
+    * row by row), its output re-aliased onto the join's attribute ids
+    * (both key attributes map to the view's single key column) so
+    * every parent expression resolves unchanged. Refuses when any join
+    * output column is missing from the view, or when the pinned
+    * version's manifest was vacuumed.
     */
   private def joinRewrite(
       j: org.apache.spark.sql.catalyst.plans.logical.Join,
       mv: JoinMvDef): Option[LogicalPlan] = {
-    import org.apache.spark.sql.functions.{col, explode, lit, sequence, sum}
-    val df = session.read.parquet(mv.mvDirs: _*)
-    val cols = df.columns.filter(_ != "sgn").toSeq
-    val served = df.groupBy(cols.map(col): _*).agg(sum(col("sgn")).as("net"))
-      .where(col("net") > 0)
-      .withColumn("dup", explode(sequence(lit(1L), col("net"))))
-      .select(cols.map(col): _*)
-    val rel = served.queryExecution.analyzed
+    import graft.sources.{MaterializedView, Snapshots}
+    if (!Snapshots.versionAvailable(mv.mvTable, mv.mvVersion)) return None
+    val rel = MaterializedView.serveJoinAt(session, mv.mvTable, mv.mvVersion)
+      .queryExecution.analyzed
     val byName = rel.output.map(a => a.name -> a).toMap
     val mapped = j.output.map { a =>
       byName.get(a.name).map(c => Alias(c, a.name)(exprId = a.exprId))

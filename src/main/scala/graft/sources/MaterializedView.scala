@@ -382,8 +382,12 @@ object MaterializedView {
     * identical right rows yield two identical view rows) with the
     * streaming generator, never an O(multiplicity) sequence array.
     */
-  def serveJoin(spark: SparkSession, mvTable: String): DataFrame = {
-    val df = JoinView.serve(spark, mvTable)
+  def serveJoin(spark: SparkSession, mvTable: String): DataFrame =
+    serveJoinAt(spark, mvTable, Snapshots.currentVersion(mvTable))
+
+  /** [[serveJoin]] at a pinned view `version` (the rewrite rule's pin). */
+  def serveJoinAt(spark: SparkSession, mvTable: String, version: Int): DataFrame = {
+    val df = JoinView.serveAt(spark, mvTable, version)
     Snapshots.replicateRows(df, col("sgn"), df.columns.filter(_ != "sgn").toSeq)
   }
 }

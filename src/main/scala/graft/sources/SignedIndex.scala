@@ -86,10 +86,14 @@ class SignedIndex(val prefixes: Seq[String], val keys: Seq[String], val weight: 
 
   /** The live rows of `table`'s head, `prune` applied before the net. */
   def serve(s: SparkSession, table: String,
+      prune: DataFrame => DataFrame = identity): DataFrame =
+    serveAt(s, table, Snapshots.currentVersion(table), prune)
+
+  /** [[serve]] at a pinned `version`. */
+  def serveAt(s: SparkSession, table: String, version: Int,
       prune: DataFrame => DataFrame = identity): DataFrame = {
-    val v = Snapshots.currentVersion(table)
-    val df = prune(Snapshots.readVersion(s, table, v))
-    if (Snapshots.versionTags(table, v).contains(SignedIndex.NettedTag))
+    val df = prune(Snapshots.readVersion(s, table, version))
+    if (Snapshots.versionTags(table, version).contains(SignedIndex.NettedTag))
       df.where(col(weight) > 0)
     else net(df)
   }

@@ -217,9 +217,9 @@ object Snapshots {
     }
   }
 
-  /** ErrorIfExists staging write + [[ensureParquetFooter]] — the form
-    * every `ensureIndex` staging callback should use so an empty
-    * corpus stages a readable (schema-bearing) empty index.
+  /** ErrorIfExists staging write + [[ensureParquetFooter]], so an empty
+    * corpus stages a readable (schema-bearing) empty table — the
+    * staging write of [[BuildOnce.build]] and of other staged commits.
     */
   def writeStaged(df: DataFrame, out: String, partitionCols: String*): Unit = {
     val w = df.write.mode(SaveMode.ErrorIfExists)
@@ -1264,6 +1264,16 @@ object Snapshots {
   def stageDir(table: String): String =
     Paths.get(table, "data", java.util.UUID.randomUUID.toString).toString
 
+  /** Read a version committed as one or more partitioned dirs (a full
+    * build plus incremental appends): Spark cannot put several
+    * partitioned roots under one scan without a shared basePath, so
+    * each dir partition-discovers on its own and the frames union — a
+    * filter on a partition column pushes into EVERY branch, so
+    * partition pruning survives appends.
+    */
+  def readPartitionedDirs(spark: SparkSession, table: String, version: Int): DataFrame =
+    manifestDirs(table, version).map(d => spark.read.parquet(d)).reduce(_.unionByName(_))
+
   /** Read the latest snapshot. */
   def read(spark: SparkSession, table: String): DataFrame =
     readVersion(spark, table, currentVersion(table))
@@ -1484,34 +1494,12 @@ object Snapshots {
       .sorted.lastOption
   }
 
-  /** Ensure a derived-index version keyed on `tag` (typically
-    * [[fileFingerprint]] of the index's input) exists in `table`,
-    * building AT MOST ONCE across racing callers: the builder is
-    * elected by an atomic create-exclusive claim file; losers wait for
-    * the winner's tagged commit instead of duplicating a
-    * multi-second build (the fix for the check-then-write marker race,
-    * where two queries both saw "no index" and both built). `stage`
-    * writes the index into a fresh staged data dir — partitioned
-    * layouts included — and the commit publishes it atomically with
-    * the tag. A changed input fingerprint yields a NEW tagged version
-    * (readers pinned to the old one are undisturbed). A crashed
-    * winner (claim created, commit never lands, `finally` never runs)
-    * is detected by the claim file's AGE: a LIVE winner heartbeats its
-    * claim (mtime touch every timeoutMs/4) for as long as its build
-    * runs, so a claim older than `timeoutMs` means the writer is gone
-    * — a waiter takes it over IMMEDIATELY instead of sleeping the
-    * window, and (crucially) instead of every future cold process
-    * paying the full wait against the same dead claim. The heartbeat
-    * means a legitimate build LONGER than timeoutMs keeps its claim (a
-    * pre-heartbeat version lost it at exactly timeoutMs). Takeover is
-    * identity-checked: each claim carries a unique token, the taker
-    * re-reads the token after the age check and deletes only if it
-    * still matches the stale one it observed — a claim just re-created
-    * by a racing taker (fresh token) is never hijacked, so takeovers
-    * cannot cascade. The unavoidable read/delete/create window can at
-    * worst elect two winners — the atomic tagged commit keeps that
-    * safe (a duplicate build, never a torn or stale index). Returns
-    * the version to pin.
+  /** The claim-elected build of a [[BuildOnce]] table (its scaladoc
+    * states the contract): the newest version of `table` tagged
+    * `#index <tag>`, or else one built by `stage` into a fresh staged
+    * dir and committed with the tag, at most once across racing
+    * callers. `timeoutMs` is the claim's heartbeat window. Returns the
+    * version to pin.
     */
   def ensureIndex(table: String, tag: String, timeoutMs: Long = 120000)(
       stage: String => Unit): Int = {
@@ -1628,7 +1616,7 @@ object Snapshots {
     import org.apache.spark.sql.functions.{col, input_file_name}
     val vsn = currentVersion(table)
     val idxT = s"$table/_bloomidx_$keyCol"
-    val v = ensureIndex(idxT, s"v$vsn-$numBits-$numHashes") { out =>
+    val v = new BuildOnce(idxT, s"v$vsn-$numBits-$numHashes").buildWith { out =>
       // reads go through the COMMITTED schema (readVersion semantics):
       // if keyCol was added by an evolution, files predating it lack
       // the column physically — they key as null, set no bits, and

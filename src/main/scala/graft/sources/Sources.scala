@@ -167,18 +167,10 @@ object SourceQueries {
     (s, dir) => {
       val li = Tables.load(s, dir, "lineitem")
         .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity", "l_extendedprice")
-      import graft.sources.Snapshots
-      // physical design is write-once / read-many — content-keyed +
-      // claim-elected like every other persisted index (the old
-      // presence-marker scheme served a STALE clustered copy when the
-      // input was regenerated in place, and two racing builders could
-      // interleave Overwrite writes into one path)
-      val fp = Snapshots.fileFingerprint(s"$dir/lineitem.parquet")
-      val path = graft.Roots.scratch + "/zorder/" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      val ver = Snapshots.ensureIndex(path, fp) { out =>
-        Sources.writeZOrdered(li, out, "l_partkey", "l_suppkey")
-      }
-      Snapshots.readVersion(s, path, ver)
+      // physical design is write-once / read-many: a [[BuildOnce]] table
+      val z = BuildOnce("zorder", dir, "lineitem")
+      Snapshots.readVersion(s, z.table,
+        z.buildWith(out => Sources.writeZOrdered(li, out, "l_partkey", "l_suppkey")))
         .where(col("l_suppkey").between(2, 5))
         .groupBy("l_suppkey")
         .agg(count(lit(1)).as("n"), Portable.dsum(col("l_extendedprice")).as("sum_price"))
@@ -309,22 +301,13 @@ object SourceQueries {
   val bloomPointLookup: QueryDef = QueryDef(
     "q_bloom_point_lookup",
     (s, dir) => {
-      import graft.sources.Snapshots
-      // content-keyed + claim-elected build: ONE atomic commit of a
-      // multi-file snapshot (a crashed or racing builder can never
-      // leave a partial table the way check-then-append batches
-      // could), keyed on the input fingerprint so regenerated inputs
-      // rebuild instead of serving stale data
-      val fp = Snapshots.fileFingerprint(s"$dir/lineitem.parquet")
-      val t = graft.Roots.scratch + "/bloomidx/" +
-        dir.replaceAll("[^A-Za-z0-9]", "_") + "/lineitem"
-      Snapshots.ensureIndex(t, fp) { out =>
-        Tables.load(s, dir, "lineitem")
-          .select("l_orderkey", "l_linenumber", "l_partkey", "l_quantity")
-          .repartition(4, col("l_orderkey"))
-          .write.mode(org.apache.spark.sql.SaveMode.ErrorIfExists).parquet(out)
-      }
-      Snapshots.pointLookup(s, t, "l_orderkey", 1L)
+      // a multi-file [[BuildOnce]] table: one atomic commit, never a
+      // partial table the way check-then-append batches could leave
+      val t = BuildOnce("bloomidx", dir, "lineitem").sub("lineitem")
+      t.build(Tables.load(s, dir, "lineitem")
+        .select("l_orderkey", "l_linenumber", "l_partkey", "l_quantity")
+        .repartition(4, col("l_orderkey")))
+      Snapshots.pointLookup(s, t.table, "l_orderkey", 1L)
         .select("l_orderkey", "l_linenumber", "l_partkey", "l_quantity")
     },
     Some("""SELECT l_orderkey, l_linenumber, l_partkey, l_quantity
@@ -516,9 +499,8 @@ object SourceQueries {
 
   /** CSV SINK + SOURCE round-trip — §2.1 row 25's format surface
     * served as a catalog query (previously spec-only): the nation
-    * table is written to a CSV sink (quoted headers, the content-keyed
-    * claim-elected `ensureIndex` lifecycle every persisted artifact
-    * uses), read back through the CSV source with an explicit schema,
+    * table is written to a CSV sink (quoted headers, a [[BuildOnce]]
+    * table), read back through the CSV source with an explicit schema,
     * and joined/aggregated against the parquet region table. The
     * oracle computes the same rollup from parquet alone — any
     * fidelity loss in the round-trip (quoting, typing, header
@@ -532,13 +514,10 @@ object SourceQueries {
     "q_csv_roundtrip",
     (s, dir) => {
       val n = graft.Tables.load(s, dir, "nation")
-      val fp = Snapshots.fileFingerprint(s"$dir/nation.parquet")
-      val path = graft.Roots.scratch + "/csvsink/" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      val ver = Snapshots.ensureIndex(path, fp) { out =>
-        n.write.option("header", "true").csv(out)
-      }
+      val sink = BuildOnce("csvsink", dir, "nation")
+      val ver = sink.buildWith(out => n.write.option("header", "true").csv(out))
       s.read.option("header", "true").schema(n.schema)
-        .csv(Snapshots.versionDirs(path, ver): _*)
+        .csv(Snapshots.versionDirs(sink.table, ver): _*)
         .join(graft.Tables.load(s, dir, "region"),
           col("n_regionkey") === col("r_regionkey"))
         .groupBy("r_name")
@@ -553,9 +532,9 @@ object SourceQueries {
   /** JSONL (newline-delimited JSON) sink + schema-pinned read-back —
     * row 25's second interchange format next to [[csvRoundtrip]]: the
     * format every ingestion pipeline meets first (API exports, log
-    * shippers, LLM training-data interchange). Content-keyed like the
-    * CSV sink (a regenerated corpus re-writes; a re-run serves the
-    * existing version), and the read pins the schema — JSON inference
+    * shippers, LLM training-data interchange). A [[BuildOnce]] table
+    * like the CSV sink (a regenerated corpus re-writes; a re-run serves
+    * the existing version), and the read pins the schema — JSON inference
     * is a full extra scan at 100 TB, and worse, it TYPE-DRIFTS (an
     * all-null column infers string), so pinning is correctness, not
     * just speed.
@@ -564,13 +543,10 @@ object SourceQueries {
     "q_jsonl_roundtrip",
     (s, dir) => {
       val n = graft.Tables.load(s, dir, "nation")
-      val fp = Snapshots.fileFingerprint(s"$dir/nation.parquet")
-      val path = graft.Roots.scratch + "/jsonsink/" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      val ver = Snapshots.ensureIndex(path, fp) { out =>
-        n.write.json(out)
-      }
+      val sink = BuildOnce("jsonsink", dir, "nation")
+      val ver = sink.buildWith(out => n.write.json(out))
       s.read.schema(n.schema)
-        .json(Snapshots.versionDirs(path, ver): _*)
+        .json(Snapshots.versionDirs(sink.table, ver): _*)
         .join(graft.Tables.load(s, dir, "region"),
           col("n_regionkey") === col("r_regionkey"))
         .groupBy("r_name")
@@ -588,7 +564,7 @@ object SourceQueries {
     * "partitioned layout" claim driver-gated (the z-order row prunes
     * row groups; THIS prunes whole directories, the coarsest and
     * cheapest skip tier a 100 TB table leans on first): orders land
-    * partitioned by order YEAR (content-keyed ensureIndex lifecycle),
+    * partitioned by order YEAR (a [[BuildOnce]] table),
     * the serving read filters to the latest year fetched as a LITERAL
     * (a 1-value driver fetch, the probe-cids convention) so the scan
     * reads exactly one yr= directory — PartitionFilters at the scan,
@@ -600,17 +576,12 @@ object SourceQueries {
     (s, dir) => {
       val o = graft.Tables.load(s, dir, "orders")
         .withColumn("yr", year(col("o_orderdate")).cast("int"))
-      val fp = Snapshots.fileFingerprint(s"$dir/orders.parquet")
-      val path = graft.Roots.scratch + "/partsink/" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      val ver = Snapshots.ensureIndex(path, fp) { out =>
-        Sources.writePartitioned(o, out, "yr")
-      }
+      val parts = BuildOnce("partsink", dir, "orders").serve(s, "yr")(o)
       // empty corpus: max(yr) is NULL → filter to a year that cannot
       // exist, yielding the same zero rows the oracle's NULL-compare does
       val maxYrRow = o.agg(max(col("yr"))).head()
       val maxYr = if (maxYrRow.isNullAt(0)) -1 else maxYrRow.getInt(0)
-      graft.operators.Similarity.readPartitionedDirs(s, path, ver)
-        .where(col("yr") === maxYr)
+      parts.where(col("yr") === maxYr)
         .groupBy("yr", "o_orderpriority")
         .agg(count(lit(1)).as("n_orders"),
           sum(expr("cast(floor(o_totalprice * 100 + 0.5) as bigint)"))

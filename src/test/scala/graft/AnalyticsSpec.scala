@@ -1599,13 +1599,20 @@ class AnalyticsSpec extends SparkSpec {
     assert(got.size == dims)
   }
 
+  test("the IVF index's committed centroids are ivfTrain's seeds plus one Lloyd round") {
+    val e = Tables.load(spark, sfDir, "embeddings")
+    val (cents, _) = Similarity.ivfIndex(spark, sfDir)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val trained = Similarity.ivfTrain(e, Similarity.cCountOf(e.count()), 1)
+    assert(rows(cents).nonEmpty && rows(cents) == rows(trained))
+  }
+
   test("IVF balance audit matches a brute-force rollup of the persisted lists") {
     val got = Similarity.ivfBalance.fn(spark, sfDir).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5))).toMap
-    val (_, listsT, listsV) = Similarity.ivfIndex(spark, sfDir)
-    val sizes = spark.read
-      .parquet(graft.sources.Snapshots.versionDirs(listsT, listsV): _*)
+    val (_, lists) = Similarity.ivfIndex(spark, sfDir)
+    val sizes = lists
       .groupBy("cid").agg(count(lit(1)).as("sz"))
       .collect().map(_.getLong(1))
     val nl = sizes.length.toLong; val nv = sizes.sum; val mx = sizes.max

@@ -473,7 +473,7 @@ class PipelineSpec extends SparkSpec {
       .toSet
     Similarity.ivfPqIngestBatch(oldE, cents, cb, codesT, "pq_s1", 0L)
     val v = Similarity.ivfPqIngestBatch(batchE, cents, cb, codesT, "pq_s1", 1L)
-    def codesNow() = Similarity.readPartitionedDirs(spark, codesT, v)
+    def codesNow() = Snapshots.readPartitionedDirs(spark, codesT, v)
     // two appends == one full encode of everything, under the same
     // frozen quantizers — per-vector encoding makes appends exact
     assert(codeRows(codesNow()) == codeRows(Similarity.pqEncode(e, cents, cb)),
@@ -1879,6 +1879,32 @@ class PipelineSpec extends SparkSpec {
     sq.foreach { case (q, ids) =>
       val hits = ids.intersect(ivf(q)).size
       assert(hits >= 3, s"query $q IVF+SQ recovered only $hits of the IVF top-5")
+    }
+  }
+
+  test("a served build-once table resolves in its committed schema and starts no job") {
+    import graft.functions.{StatsQueries, TextFunctions}
+    // the non-partitioned tables: a partitioned layout records no
+    // schema line, so its read still infers (SourcesSpec)
+    val served: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "kNN bands" -> (() => Similarity.knnBandsTable(spark, sfDir)),
+      "kNN graph" -> (() => Similarity.knnGraphTable(spark, sfDir)),
+      "near-dup pairs" -> (() => Dedup.nearDupPairsTable(spark, sfDir)),
+      "IVF centroids" -> (() => Similarity.ivfCentroids(spark, sfDir)),
+      "IVF+PQ centroids" -> (() => Similarity.ivfPqQuantizers(spark, sfDir)._1),
+      "IVF+PQ codebooks" -> (() => Similarity.ivfPqQuantizers(spark, sfDir)._2),
+      "PQ codebooks" -> (() => Similarity.pqServedIndex(spark, sfDir)._1),
+      "PQ codes" -> (() => Similarity.pqServedIndex(spark, sfDir)._2),
+      "BM25 doclen" -> (() => TextFunctions.bm25Doclen(spark, sfDir)),
+      "checksum parts" -> (() => StatsQueries.checksumParts(spark, sfDir)))
+    served.foreach { case (what, serve) =>
+      serve() // builds the table on a cold root
+      var df: org.apache.spark.sql.DataFrame = null
+      val jobs = jobsDuring { df = serve() }
+      assert(jobs == 0, s"$what: resolving the served frame ran $jobs jobs")
+      // the committed schema is the one inference reads off the footers
+      val inferred = spark.read.parquet(df.inputFiles: _*).schema
+      assert(df.schema == inferred, s"$what: served ${df.schema}, inferred $inferred")
     }
   }
 }
