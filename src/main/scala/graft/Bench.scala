@@ -18,6 +18,10 @@ import org.apache.spark.sql.functions._
   * itself. Exceptions during measurement are no
   * longer swallowed silently — they ship in an "errors" field (the
   * timing for a failed query is still recorded, as time-to-failure).
+  *
+  * Runs on the shipped session, [[GraftSession.create]] on
+  * `local[$SPARK_GRAFT_CPUS]` with as many shuffle partitions, so the
+  * timed plans are the optimizer-routed plans graft serves.
   */
 object Bench {
 
@@ -40,15 +44,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val timingsPath = sys.env.getOrElse("SPARK_GRAFT_TIMINGS", graft.Roots.repo + "/TIMINGS_latest.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create(s"local[$cpus]", cpus.toInt)
 
     // previous round's per-query map (for the 3x outlier tripwire) —
     // read BEFORE this run overwrites the file

@@ -77,11 +77,35 @@ object Tables {
     spark.read.parquet(s"$dir/$name.parquet")
 }
 
-/** Tuned local session factory. Mirrors what a cluster deployment would
-  * set: AQE on (runtime re-plan — the dynamic counterpart of the
-  * reference's static System R optimizer in QueryPlan.executeOptimal,
-  * reference: query/QueryPlan.java), shuffle partitions sized to the
-  * machine instead of the 200 default.
+/** The one session factory. Every entry point (Verify, Bench, the
+  * tools, perfbench, the test suites) builds its session here, so each
+  * runs the engine as it ships (`tools/check_sessions.py`). It sets:
+  *  - [[GraftExtensions]]: native SQL functions, EditDistancePruning
+  *    and the cost-gated MvRewriteRule;
+  *  - shuffle partitions sized to the machine, not the 200 default;
+  *  - AQE with coalescing and skew-join splitting: the runtime re-plan,
+  *    the dynamic counterpart of the reference's System R optimizer
+  *    (reference: query/QueryPlan.java executeOptimal);
+  *  - runtime bloom-filter joins: a selective side of a fact-fact
+  *    shuffle join filters the probe-side scan, the runtime analog of
+  *    the reference's reduction factors (reference:
+  *    query/TableStats.java computeReductionFactor). Thresholds stay
+  *    at Spark's defaults, the 100 TB regime; CboSpec lowers them;
+  *  - zone UTC: naive-timestamp epochs are zone-sensitive and the
+  *    DuckDB oracle is zone-free;
+  *  - `spark.sql.legacy.parquet.nanosAsLong`: a TIMESTAMP(NANOS) `ts`
+  *    reads only as a nanosecond Long under it. Set once here so no
+  *    query writes session conf ([[graft.operators.Events]] requires
+  *    it, and UTC);
+  *  - `spark.graft.mvrewrite.loadSkipVacuumed`: the catalog load below
+  *    quarantines (logs and skips) a view whose pinned base version
+  *    was vacuumed, so one stale registration left in a scratch root
+  *    cannot keep Verify or Bench from starting;
+  *  - a warehouse under [[Roots.scratch]], no UI.
+  * Then it loads the persisted MV-rewrite catalog
+  * ([[graft.plans.MvRewrite.loadCatalog]]), so a fresh session serves
+  * from registered views at once, not from base scans until someone
+  * re-registers by hand.
   */
 object GraftSession {
   def create(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
@@ -93,36 +117,17 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // runtime bloom-filter join filters: a selective dim-filtered side
-      // of a fact-fact shuffle join injects a bloom filter into the
-      // probe-side scan — the runtime analog of the reference's
-      // reduction factors (reference: query/TableStats.java
-      // computeReductionFactor) applied to shuffles. Size thresholds
-      // stay at Spark defaults (creation side ≤ 10 MB, probe scan
-      // ≥ 10 GB), which is exactly the 100 TB regime; CboSpec lowers
-      // them to prove injection at test scale.
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.graft.mvrewrite.loadSkipVacuumed", "true")
       .config("spark.sql.warehouse.dir", graft.Roots.scratch + "/spark-warehouse")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // restore the persisted MV-rewrite catalog (registrations +
-    // freshness pins survive the JVM — a fresh session serves
-    // dashboards from its views immediately, not from base scans
-    // until someone re-registers by hand)
     graft.plans.MvRewrite.loadCatalog(spark)
     spark
   }
-
-  /** Make graft's native SQL functions available on a session that was
-    * not built through [[create]] (e.g. the driver's own Verify/Bench
-    * sessions).
-    */
-  def registerFunctions(spark: SparkSession): Unit =
-    GraftExtensions.functions.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
 }
 
 /** SparkSessionExtensions hook registering graft's native Catalyst

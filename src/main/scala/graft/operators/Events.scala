@@ -30,16 +30,19 @@ object Events {
   def loadEvents(s: SparkSession, dir: String): DataFrame = events(s, dir)
 
   private[graft] def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // The NTZ→epoch cast below interprets naive timestamps at the
-    // SESSION zone; DuckDB's naive epoch(ts) is zone-free (UTC). The
-    // entrypoints (Bench/Verify/specs) all pin UTC — enforce it here
-    // too so a non-UTC caller fails loudly instead of silently
-    // shifting every derived epoch.
+    // SESSION zone; DuckDB's naive epoch(ts) is zone-free (UTC), and a
+    // TIMESTAMP(NANOS) `ts` reads as a Long only under the legacy
+    // flag. GraftSession.create sets both; enforce them here so a
+    // session built elsewhere fails loudly instead of silently
+    // shifting every derived epoch (or failing the nanos read).
     val zone = s.conf.get("spark.sql.session.timeZone", java.util.TimeZone.getDefault.getID)
     require(zone == "UTC",
       s"graft.Events requires spark.sql.session.timeZone=UTC (got $zone): " +
         "naive-timestamp epoch derivation is zone-sensitive")
+    require(s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") == "true",
+      "graft.Events requires spark.sql.legacy.parquet.nanosAsLong=true " +
+        "(set by GraftSession.create): TIMESTAMP(NANOS) reads as a Long only under it")
     val df = Tables.load(s, dir, "events")
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => df

@@ -37,9 +37,9 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
 object MvRewrite {
 
   /** One registered MV: the base dirs its watermark version reflects,
-    * the MV's data dirs, and the aggregate spec it stores.
+    * the pinned view version, and the aggregate spec it stores.
     */
-  final case class MvDef(mvTable: String, baseDirs: Set[String], mvDirs: Seq[String],
+  final case class MvDef(mvTable: String, baseDirs: Set[String], mvVersion: Int,
     keys: Set[String], sums: Set[String], rows: Long,
     mins: Set[String] = Set.empty, maxs: Set[String] = Set.empty)
 
@@ -57,7 +57,7 @@ object MvRewrite {
       mins: Seq[String] = Nil, maxs: Seq[String] = Nil): Unit = {
     import graft.sources.{MaterializedView, Snapshots}
     // pin ONE view version and derive BOTH the watermark and the
-    // served dirs from it: a concurrent refresh landing between two
+    // served version from it: a concurrent refresh landing between two
     // separate head reads would pair an old watermark (old base dirs)
     // with NEWER view content — newer answers served to a query
     // scanning the old pinned base, a wrong answer rather than
@@ -65,15 +65,14 @@ object MvRewrite {
     val v = Snapshots.currentVersion(mvTable)
     val through = MaterializedView.refreshedThroughAt(mvTable, v)
     require(through > 0, s"$mvTable has no refreshed version")
-    val spark = SparkSession.active
-    val mvDirs = Snapshots.versionDirs(mvTable, v)
     registry = MvDef(
       mvTable,
       Snapshots.versionDirs(baseTable, through).map(normalize).toSet,
-      mvDirs, keys.toSet, sums.toSet,
+      v, keys.toSet, sums.toSet,
       // the cost statistic for view selection: row count at register
-      // time (the analog of the reference's TableStats row counts)
-      spark.read.parquet(mvDirs: _*).count(),
+      // time off parquet footers, no Spark job (the analog of the
+      // reference's TableStats row counts)
+      Snapshots.footerRows(SparkSession.active, Snapshots.versionDirs(mvTable, v)),
       mins.toSet, maxs.toSet) +: registry.filterNot(_.mvTable == mvTable)
     persist(mvTable, Seq("agg", baseTable, keys.mkString(","),
       sums.mkString(","), mins.mkString(","), maxs.mkString(",")))
@@ -86,7 +85,7 @@ object MvRewrite {
     * exactly the base dirs the sketch watermark version reflects.
     */
   final case class SketchMvDef(mvTable: String, baseDirs: Set[String],
-    mvDirs: Seq[String], keys: Set[String], idCol: String, lgK: Int)
+    mvVersion: Int, keys: Set[String], idCol: String, lgK: Int)
 
   @volatile private[graft] var sketchRegistry: Seq[SketchMvDef] = Nil
 
@@ -97,15 +96,14 @@ object MvRewrite {
   def registerSketch(baseTable: String, mvTable: String,
       keys: Seq[String], idCol: String, lgK: Int = 12): Unit = {
     import graft.sources.{MaterializedView, Snapshots}
-    // pin ONE view version for watermark AND dirs (see [[register]])
+    // pin ONE view version for watermark AND served rows (see [[register]])
     val v = Snapshots.currentVersion(mvTable)
     val through = MaterializedView.sketchRefreshedThroughAt(mvTable, v)
     require(through > 0, s"$mvTable has no sketch-refreshed version")
-    val mvDirs = Snapshots.versionDirs(mvTable, v)
     sketchRegistry = SketchMvDef(
       mvTable,
       Snapshots.versionDirs(baseTable, through).map(normalize).toSet,
-      mvDirs, keys.toSet, idCol, lgK) +:
+      v, keys.toSet, idCol, lgK) +:
       sketchRegistry.filterNot(_.mvTable == mvTable)
     persist(mvTable, Seq("sketch", baseTable, keys.mkString(","), idCol,
       lgK.toString))
@@ -114,7 +112,7 @@ object MvRewrite {
   /** One registered JOIN view ([[graft.sources.MaterializedView
     * .joinRefresh]]): the signed denormalized L ⋈_key R, pinned at the
     * base dirs each side's watermark version reflects; `mvVersion` is
-    * the pinned view version (its dirs are `mvDirs`). `viewRows` is
+    * the pinned view version the rewrite serves. `viewRows` is
     * the PHYSICAL (signed, tombstone-inclusive) row count the netting
     * serve must scan; `baseRows` the summed base-side row counts the
     * join it replaces would scan — the cost statistics behind the
@@ -122,7 +120,7 @@ object MvRewrite {
     * choice, QueryPlan.executeOptimal).
     */
   final case class JoinMvDef(mvTable: String, leftDirs: Set[String],
-    rightDirs: Set[String], mvVersion: Int, mvDirs: Seq[String], key: String,
+    rightDirs: Set[String], mvVersion: Int, key: String,
     viewRows: Long = 0L, baseRows: Long = Long.MaxValue)
 
   @volatile private[graft] var joinRegistry: Seq[JoinMvDef] = Nil
@@ -136,7 +134,7 @@ object MvRewrite {
   def registerJoin(leftTable: String, rightTable: String,
       mvTable: String, key: String): Unit = {
     import graft.sources.{MaterializedView, Snapshots}
-    // pin ONE view version for watermarks AND dirs (see [[register]])
+    // pin ONE view version for watermarks AND served rows (see [[register]])
     val v = Snapshots.currentVersion(mvTable)
     val (lThrough, rThrough) = MaterializedView.joinRefreshedThroughAt(mvTable, v)
     require(lThrough > 0 && rThrough > 0,
@@ -144,15 +142,13 @@ object MvRewrite {
     val spark = SparkSession.active
     val lDirs = Snapshots.versionDirs(leftTable, lThrough)
     val rDirs = Snapshots.versionDirs(rightTable, rThrough)
-    val mvDirs = Snapshots.versionDirs(mvTable, v)
     joinRegistry = JoinMvDef(
       mvTable,
       lDirs.map(normalize).toSet,
       rDirs.map(normalize).toSet,
       v,
-      mvDirs,
       key,
-      viewRows = Snapshots.footerRows(spark, mvDirs),
+      viewRows = Snapshots.footerRows(spark, Snapshots.versionDirs(mvTable, v)),
       baseRows = Snapshots.footerRows(spark, lDirs) +
         Snapshots.footerRows(spark, rDirs)) +:
       joinRegistry.filterNot(_.mvTable == mvTable)
@@ -299,12 +295,13 @@ object MvRewrite {
   /** Load every persisted rewrite registration at session start —
     * views whose table (or whose base tables) were DROPPED since are
     * skipped; a view whose base exists but whose pinned manifest was
-    * vacuumed fails loud ([[restore]]) BY DEFAULT. Set the session
-    * conf `spark.graft.mvrewrite.loadSkipVacuumed=true` to instead
-    * quarantine such views — logged loudly, skipped from registration,
+    * vacuumed fails loud ([[restore]]) BY DEFAULT. Under the session
+    * conf `spark.graft.mvrewrite.loadSkipVacuumed=true` such views are
+    * instead quarantined — logged loudly, skipped from registration,
     * recorded in [[quarantinedOnLoad]] — so one stale registration
     * cannot take down session creation for workloads that never touch
-    * that view. Returns the restored tables.
+    * that view. [[graft.GraftSession.create]] sets it; a direct call on
+    * a session with it unset fails loud. Returns the restored tables.
     */
   def loadCatalog(spark: SparkSession): Seq[String] = {
     import java.nio.file.{Files, Paths}
@@ -418,7 +415,7 @@ class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
     * key-slice checks (which only read `keys`).
     */
   private def SketchKeysAdapter(mv: SketchMvDef): MvDef =
-    MvDef(mv.mvTable, mv.baseDirs, mv.mvDirs, mv.keys, Set.empty, 0L)
+    MvDef(mv.mvTable, mv.baseDirs, mv.mvVersion, mv.keys, Set.empty, 0L)
 
   /** The scan dirs under an Aggregate child that is a bare relation, a
     * column-pruning projection, or a KEY-SLICE filter over one — a
@@ -459,6 +456,15 @@ class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
       case a: AttributeReference => mv.keys.contains(a.name)
       case _ => false
     }
+
+  /** The view at its PINNED version, in the manifest's committed schema
+    * (planning starts no inference job); None, no rewrite, if vacuumed.
+    */
+  private def pinnedView(mvTable: String, version: Int): Option[LogicalPlan] = {
+    import graft.sources.Snapshots
+    Option.when(Snapshots.versionAvailable(mvTable, version))(
+      Snapshots.readVersion(session, mvTable, version).queryExecution.analyzed)
+  }
 
   /** Join-view rewrite: replace the L ⋈_key R node with the netted
     * serve of the signed view at its PINNED version
@@ -503,7 +509,7 @@ class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
       slice: Seq[Expression]): Option[LogicalPlan] = {
     import org.apache.spark.sql.catalyst.expressions.HllSketchEstimate
     import org.apache.spark.sql.catalyst.expressions.aggregate.{HllSketchAgg, HllUnionAgg}
-    val mvRel = session.read.parquet(mv.mvDirs: _*).queryExecution.analyzed
+    val mvRel = pinnedView(mv.mvTable, mv.mvVersion).getOrElse(return None)
     val byName = mvRel.output.map(a => a.name -> a).toMap
     val skCol = byName.get("sk").getOrElse(return None)
     val rel: LogicalPlan =
@@ -557,7 +563,7 @@ class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
     */
   private def rewrite(agg: Aggregate, mv: MvDef,
       slice: Seq[Expression]): Option[LogicalPlan] = {
-    val mvRel = session.read.parquet(mv.mvDirs: _*).queryExecution.analyzed
+    val mvRel = pinnedView(mv.mvTable, mv.mvVersion).getOrElse(return None)
     val byName = mvRel.output.map(a => a.name -> a).toMap
     // re-anchor the slice predicates onto the MV's key columns
     val rel: LogicalPlan =

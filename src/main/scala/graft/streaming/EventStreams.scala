@@ -33,9 +33,10 @@ object EventStreams {
     * up front, so probe the footer once with a batch read (metadata
     * only, no data scan) and normalize `ts` to the nanosecond-Long
     * contract the downstream typed operators ([[Ev]]) are written to.
+    * A TIMESTAMP(NANOS) footer reads as Long under the legacy parquet
+    * flag [[graft.GraftSession.create]] sets.
     */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val physical = spark.read
       .option("pathGlobFilter", "events.parquet").parquet(dir)
       .schema("ts").dataType

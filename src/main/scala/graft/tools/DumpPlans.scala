@@ -1,21 +1,17 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Dev tool: dump every catalog query's formatted physical plan to
   * PLANS.md — the pushdown / broadcast / partial-agg evidence backing
-  * SURVEY §5.
+  * SURVEY §5 — on the shipped session ([[graft.GraftSession.create]]),
+  * so the plans are the optimizer-routed plans graft serves.
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.create("local[8]", 8)
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# Physical plans (generated by graft.tools.DumpPlans at ")

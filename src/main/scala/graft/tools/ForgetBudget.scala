@@ -67,15 +67,7 @@ object ForgetBudget {
   def main(args: Array[String]): Unit = {
     val outJson = args(0)
     val sfDirs = args.drop(1).toSeq
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .appName("graft-forget-budget")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create("local[16]", 16)
 
     // erasure requests, smallest to largest (disjoint-ish slices so
     // each round erases fresh docs from what remains)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Per-query JOB/STAGE COUNT probe (r16 tail program): at sf0.1 most
@@ -18,14 +17,8 @@ object JobCountProbe {
     val names =
       if (args.length > 1) args(1).split(",").toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.create("local[32]", 32)
     spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftSession.registerFunctions(spark)
     val jobs = new java.util.concurrent.atomic.AtomicLong()
     val stages = new java.util.concurrent.atomic.AtomicLong()
     val tasks = new java.util.concurrent.atomic.AtomicLong()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
@@ -25,27 +24,20 @@ object SpillProbe {
     val sfDir = args(0)
     val queries = args(1).split(",").toSeq
     val spilled = new java.util.concurrent.atomic.AtomicLong()
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-spill-probe")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", graft.Roots.scratch + "/spark-warehouse-spill")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.windowExec.buffer.in.memory.threshold", "1024")
-      .config("spark.sql.windowExec.buffer.spill.threshold", "1024")
-      .config("spark.sql.sortMergeJoinExec.buffer.in.memory.threshold", "1024")
-      .config("spark.sql.sortMergeJoinExec.buffer.spill.threshold", "1024")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "8")
-      // 25k (round-14, was 100k): the winnow rewrite removed its ×4
-      // window-membership fanout, dropping the heaviest shuffle below
-      // the old per-task force threshold — the probe's forcing config
-      // tightens with the engine so the spill PATHS stay exercised
-      .config("spark.shuffle.spill.numElementsForceSpillThreshold", "25000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // 25k (round-14, was 100k): the winnow rewrite removed its ×4
+    // window-membership fanout, dropping the heaviest shuffle below
+    // the old per-task force threshold — the probe's forcing config
+    // tightens with the engine so the spill PATHS stay exercised. A
+    // core (not SQL) setting: SparkConf reads it at context start, so
+    // it goes in as a system property before the session exists.
+    System.setProperty("spark.shuffle.spill.numElementsForceSpillThreshold", "25000")
+    val spark = graft.GraftSession.create("local[4]", 4)
+    Seq("spark.sql.windowExec.buffer.in.memory.threshold" -> "1024",
+      "spark.sql.windowExec.buffer.spill.threshold" -> "1024",
+      "spark.sql.sortMergeJoinExec.buffer.in.memory.threshold" -> "1024",
+      "spark.sql.sortMergeJoinExec.buffer.spill.threshold" -> "1024",
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "8")
+      .foreach { case (k, v) => spark.conf.set(k, v) }
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
         val m = t.taskMetrics

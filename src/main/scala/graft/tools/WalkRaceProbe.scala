@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sources.IndexRegistry
 
@@ -24,18 +23,7 @@ object WalkRaceProbe {
   def main(args: Array[String]): Unit = {
     val mode = args(0)
     val baseT = args(1)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName(s"graft-walkrace-$mode")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        graft.Roots.scratch + s"/spark-warehouse-walkrace-$mode")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create("local[4]", 4)
     graft.operators.Forget.registerBuiltins()
     mode match {
       case "forget" =>

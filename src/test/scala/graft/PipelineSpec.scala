@@ -344,7 +344,6 @@ class PipelineSpec extends SparkSpec {
     val rows = df.collect().map(r =>
       r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     assert(rows.values.map(_._2).sum > 0, "no conversions found at all")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val byUser = spark.read.parquet(s"$dir/events.parquet")
       .where(col("event_type") === "purchase")
       .groupBy("user_id").count()
@@ -996,7 +995,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("native functions registered for SQL via extensions") {
-    GraftSession.registerFunctions(spark)
     val r = spark.sql(
       "SELECT graft_simhash60('a b c') AS h, graft_cosine_f32(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)), array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c, " +
       "graft_dot_long(array(2L, 3L), array(4L, 5L)) AS d, " +

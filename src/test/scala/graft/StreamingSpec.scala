@@ -10,6 +10,24 @@ import graft.streaming.EventStreams
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
+  test("events loaders read under the session contract and write no session conf") {
+    // a fresh session of the shipped factory: the loaders must find the
+    // legacy nanos flag and the UTC zone already set, and leave every
+    // conf as they found it (a query writing session conf changes the
+    // engine under every other query sharing the session)
+    val s = spark.newSession()
+    val before = s.conf.getAll
+    val batch = graft.operators.Events.loadEvents(s, sfDir)
+    assert(batch.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+    assert(batch.count() > 0L)
+    val stream = EventStreams.readEvents(s, sfDir)
+    assert(stream.isStreaming && stream.schema("ts").dataType ==
+      org.apache.spark.sql.types.LongType)
+    val after = s.conf.getAll
+    val changed = (after.toSet diff before.toSet) ++ (before.toSet diff after.toSet)
+    assert(changed.isEmpty, s"events loaders changed session conf: $changed")
+  }
+
   test("streaming 1h window agg matches batch q_events_window") {
     val streamed = EventStreams.runToMemory(
       EventStreams.window1h(EventStreams.readEvents(spark, sfDir)),
@@ -80,7 +98,6 @@ class StreamingSpec extends SparkSpec {
     val streamed = EventStreams.runToMemory(
       EventStreams.dedupEvents(doubled).select("event_id"),
       "dedup", OutputMode.Append())
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val expected = graft.operators.Events.loadEvents(spark, sfDir)
       .select("event_id").distinct().count()
     assert(streamed.count() == expected)
@@ -91,7 +108,6 @@ class StreamingSpec extends SparkSpec {
       EventStreams.purchaseSignupJoin(EventStreams.readEvents(spark, sfDir)),
       "ssjoin", OutputMode.Append())
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val e = graft.operators.Events.loadEvents(spark, sfDir)
       .withColumn("us", expr("ts div 1000")) // microseconds, matching the stream
     val p = e.where(col("event_type") === "purchase")
@@ -262,7 +278,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("transformWithState sessionization matches batch q_events_sessionize") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     // the processor API requires the RocksDB state store
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
@@ -326,7 +341,6 @@ class StreamingSpec extends SparkSpec {
     // checkpoint: state (with its TTL clocks) persists in RocksDB
     // between runs, and expiry is evaluated when run 2 READS the state
     // — no cleanup batch needed.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -724,7 +738,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stateful streaming sessionization matches batch q_events_sessionize") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val events = EventStreams.readEvents(spark, sfDir)
       .select("event_id", "ts", "user_id").as[EventStreams.EventRow]
     val streamed = EventStreams.runToMemory(

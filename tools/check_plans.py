@@ -11,6 +11,11 @@ pair/score group counts) and over LIMIT results are the sanctioned
 shapes (the t_eval_auc / q_abc_pareto / s_graph_link_predict
 precedents) and pass.
 
+It also asserts the ROUTED plan of every rewrite-arm catalog query
+(ROUTED below): PLANS.md is dumped on the shipped session
+(GraftSession.create), so MvRewriteRule must have replaced the base-table
+join or sketch aggregate with a read of the registered view.
+
 Usage: python3 tools/check_plans.py [PLANS.md]
 Exit 0 = gate green; exit 1 = at least one offender (listed).
 """
@@ -30,6 +35,42 @@ AGG = re.compile(
 # cells: the t_eval_auc / q_abc_pareto sanctioned frames)
 IDKEY = re.compile(r'(_id|key)\s*#', re.I)
 SCAN = re.compile(r'\bFileScan\b')
+
+JOIN = r'\b(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct)\b'
+# a scan of the sketch view reads its stored-register column `sk`
+SKETCH_VIEW_SCAN = r'\bFileScan parquet \[[^\]]*\bsk#'
+# (query, must-match?, regex, what it proves)
+ROUTED = [
+    ('q_mv_join_rewrite', False, JOIN,
+     'the join view serves the query: no join of the two base scans runs'),
+    ('q_mv_join_rewrite', True, r'\bFileScan parquet \[[^\]]*\bsgn#',
+     'the signed join view is scanned'),
+    ('q_mv_join_rewrite', True, r'\breplicaterows\(sgn#',
+     "the view is served through its net (bag multiplicity restored)"),
+    # the per-day arm only: the all-days row's `-1 AS day` literal is folded
+    # into its aggregate, which MvRewriteRule does not map, so it still scans
+    ('q_mv_sketch_rewrite', False, r'Aggregate\(keys=\[day#\w+\], functions=\[(partial_)?hll_sketch_agg\(',
+     'no per-day hll_sketch_agg runs over the base scan'),
+    ('q_mv_sketch_rewrite', True, SKETCH_VIEW_SCAN,
+     'the sketch view is scanned'),
+    ('q_mv_sketch_slice', False, r'\bhll_sketch_agg\(',
+     'no hll_sketch_agg runs over the base scan'),
+    ('q_mv_sketch_slice', True, SKETCH_VIEW_SCAN,
+     'the sketch view is scanned'),
+]
+
+
+def routed_offenders(secs):
+    """(query, what) for every ROUTED assertion the dumped plan breaks."""
+    out = []
+    for name, must, pattern, what in ROUTED:
+        if name not in secs:
+            out.append((name, 'no plan section in PLANS.md'))
+            continue
+        found = any(re.search(pattern, line) for line in secs[name])
+        if found != must:
+            out.append((name, f'not routed: expected {what}'))
+    return out
 
 
 def is_blocker(line):
@@ -122,23 +163,31 @@ def scan_reachable(lines, start, wdepth):
 
 def main():
     path = sys.argv[1] if len(sys.argv) > 1 else 'PLANS.md'
+    secs = sections(path)
     offenders = []
-    for name, lines in sections(path).items():
+    for name, lines in secs.items():
         for i, line in enumerate(lines):
             if unpartitioned_window(line):
                 d = depth(line)
                 if d is not None and scan_reachable(lines, i, d):
                     offenders.append((name, line.strip()[:100]))
                     break
+    unrouted = routed_offenders(secs)
     if offenders:
         print(f'PLAN GATE RED: {len(offenders)} quer'
               f'{"y" if len(offenders) == 1 else "ies"} run an '
               f'unpartitioned Window over a corpus-reachable frame:')
         for name, frag in offenders:
             print(f'  {name}: {frag}')
+    if unrouted:
+        print(f'PLAN GATE RED: {len(unrouted)} rewrite-arm plan assertion'
+              f'{"" if len(unrouted) == 1 else "s"} failed:')
+        for name, what in unrouted:
+            print(f'  {name}: {what}')
+    if offenders or unrouted:
         sys.exit(1)
     print('PLAN GATE GREEN: no unpartitioned Window sorts a '
-          'corpus-sized frame')
+          'corpus-sized frame; every rewrite-arm query reads its view')
 
 
 if __name__ == '__main__':

@@ -15,7 +15,7 @@ Scans src/main/scala outside src/main/scala/graft/sources/ and fails on
     (`val mvDirs = Snapshots.versionDirs(...)`, read as `mvDirs` or
     `mv.mvDirs`).
 Scaladoc and line comments are skipped. EXCEPTIONS lists the reads that
-stay, each with its reason.
+stay, each with its reason (none today).
 
 Exit 0 iff every hit is an exception.
 """
@@ -27,17 +27,7 @@ SCAN = pathlib.Path("src/main/scala")
 OWNER = SCAN / "graft" / "sources"
 
 # (file, enclosing member, reason)
-EXCEPTIONS = [
-    ("src/main/scala/graft/plans/MvRewrite.scala", "register",
-     "the aggregate view's row count at registration; moving MvRewrite's "
-     "view reads onto the committed schema is still open (ROADMAP direction 6)"),
-    ("src/main/scala/graft/plans/MvRewrite.scala", "sketchRewrite",
-     "the sketch view read inside the optimizer rule; still open "
-     "(ROADMAP direction 6)"),
-    ("src/main/scala/graft/plans/MvRewrite.scala", "rewrite",
-     "the aggregate view read inside the optimizer rule; still open "
-     "(ROADMAP direction 6)"),
-]
+EXCEPTIONS = []
 
 ENSURE = re.compile(r"\bensureIndex\s*\(")
 BOUND = re.compile(r"\bval\s+(\w+)\s*=.*\bversionDirs\(")
