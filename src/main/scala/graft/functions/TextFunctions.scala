@@ -1104,7 +1104,7 @@ object TextFunctions {
     * the postings live in a CLUSTERED snapshot table (range-sorted by
     * bucket `b`, the same layout path the IVF lists use). A new doc
     * batch's postings land cheaply as an unclustered delta
-    * ([[graft.sources.Snapshots.appendDelta]]); minor compaction
+    * ([[graft.sources.Snapshots.commitAppend]]); minor compaction
     * re-clusters ONLY the delta (O(batch), never O(index)); serving
     * reads the table with the bucket filter answered by per-file
     * min/max after compaction. The table is rebuilt per run — the
@@ -1125,7 +1125,7 @@ object TextFunctions {
       Snapshots.commitClustered(
         postingsOf(d.where(pmod(col("doc_id"), lit(10)) =!= 0)), root, Seq("b"), files = 8)
       // the new batch appends unclustered, then compacts (delta only)
-      Snapshots.appendDelta(
+      Snapshots.commitAppend(
         postingsOf(d.where(pmod(col("doc_id"), lit(10)) === 0)), root)
       Snapshots.compact(s, root, Seq("b"), files = 4)
       serveConjunctive(s,
@@ -1498,7 +1498,7 @@ object TextFunctions {
       graft.Par.run(
         () => {
           Snapshots.commitClustered(postingsOf(base), postT, Seq("b"), files = 8)
-          Snapshots.appendDelta(postingsOf(batch), postT)
+          Snapshots.commitAppend(postingsOf(batch), postT)
           Snapshots.compact(s, postT, Seq("b"), files = 4)
         },
         () => {

@@ -781,13 +781,13 @@ object TpcH {
           Snapshots.commitOverwrite(o, ordersT)
           Snapshots.commitAppend(o.where(col("o_orderkey") % 50 === 7)
             .withColumn("o_orderkey", col("o_orderkey") + lit(3000000000L)), ordersT)
-          Snapshots.deleteWhereSelective(s, ordersT, col("o_orderkey") % 50 === 13)
+          Snapshots.deleteWhere(s, ordersT, col("o_orderkey") % 50 === 13)
         },
         () => {
           Snapshots.commitOverwrite(l, lineT)
           Snapshots.commitAppend(l.where(col("l_orderkey") % 50 === 7)
             .withColumn("l_orderkey", col("l_orderkey") + lit(3000000000L)), lineT)
-          Snapshots.deleteWhereSelective(s, lineT, col("l_orderkey") % 50 === 13)
+          Snapshots.deleteWhere(s, lineT, col("l_orderkey") % 50 === 13)
         })
       Snapshots.read(s, lineT)
         .join(Snapshots.read(s, ordersT), col("l_orderkey") === col("o_orderkey"))

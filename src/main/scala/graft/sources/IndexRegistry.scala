@@ -252,25 +252,20 @@ object IndexRegistry {
     */
   def forgetWhere(s: SparkSession, baseTable: String,
       cond: org.apache.spark.sql.Column): (Int, Seq[String]) = {
-    // file-selective DML first (rewrites only dirs with matches — the
-    // 100 TB shape); a conflict abort (racing writer replaced a touched
-    // dir) falls back to the whole-snapshot semantic contract
-    val v = Snapshots.deleteWhereSelective(s, baseTable, cond)
-      .getOrElse(Snapshots.deleteWhere(s, baseTable, cond))
+    val v = Snapshots.deleteWhere(s, baseTable, cond)
     (v, maintainAll(s, baseTable))
   }
 
   /** The UPDATE composition — [[forgetWhere]]'s edit twin: rewrite
     * `column` to `value` where `cond` holds (one new base version;
-    * file-selective first) and fold the change feed — which carries an
+    * file-selective) and fold the change feed — which carries an
     * update as delete-of-old + insert-of-new — through every attached
     * family in one registry walk.
     */
   def updateWhere(s: SparkSession, baseTable: String,
       cond: org.apache.spark.sql.Column, column: String,
       value: org.apache.spark.sql.Column): (Int, Seq[String]) = {
-    val v = Snapshots.updateWhereSelective(s, baseTable, cond, column, value)
-      .getOrElse(Snapshots.updateWhere(s, baseTable, cond, column, value))
+    val v = Snapshots.updateWhere(s, baseTable, cond, column, value)
     (v, maintainAll(s, baseTable))
   }
 

@@ -62,6 +62,26 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * ([[foldThrough]]) add a per-table admission gate in front of the
   * loop. No writer ever blocks another.
   *
+  * Row-level DML (delete, update, merge; the reference's
+  * updateRecord/deleteRecord, Database.java) is ONE step, [[dml]],
+  * run per attempt — Delta's copy-on-write DML on this format:
+  *  - touched set: a one-dir head is its own; more dirs run one
+  *    existence-probe job ([[probeTouched]]) that answers
+  *    non-matching files from parquet min/max stats;
+  *  - split: the touched dirs' kept and removed rows are staged by one
+  *    [[writeSplit]] (kept → one data dir, removed → the CDC sidecar);
+  *    untouched dirs carry by reference, and an update's replacement
+  *    rows or a merge's source land as one more dir;
+  *  - no-match rule: a removed side with no rows (its footer count,
+  *    no job) drops the split, and a verb with nothing to insert
+  *    resolves to the head without a commit (a batch delete commits
+  *    its tag alone, so a replay still no-ops);
+  *  - coercion rule: an update whose value changes the column's type
+  *    rewrites the whole head as one dir in the new type, never a mix
+  *    of per-dir types.
+  * The claim is the CAS, so a racing commit makes the step re-probe
+  * the new head: no DML verb aborts.
+  *
   * Scale notes: a manifest lists directories, not files, so it stays
   * tiny; commits are O(new data) with no rewrite of prior versions;
   * `vacuum` drops directories unreachable from any retained manifest.
@@ -354,122 +374,203 @@ object Snapshots {
       .select(cols.map(col): _*)
   }
 
-  /** DML split write: stage the surviving rows as a fresh data dir and
-    * the removed/replaced rows as a fresh CDC sidecar dir, as TWO
-    * PARALLEL filtered writes over the same source (§2.6 — measured
-    * wall-equal to the single pre-sidecar filtered write, see
-    * OPTIMIZATION_r16.md; a one-pass partitionBy(hit) write cost ~+30% from
-    * dynamic-partition sorting and was rejected). Both dirs stay
-    * readable when a side is empty ([[ensureParquetFooter]]). Returns
-    * (dataDir, cdcDir).
+  /** DML split write: stage the kept rows as a fresh data dir and the
+    * removed rows as a fresh CDC sidecar dir, as TWO PARALLEL filtered
+    * writes over the same source (§2.6 — measured wall-equal to the
+    * single pre-sidecar filtered write, see OPTIMIZATION_r16.md; a
+    * one-pass partitionBy(hit) write cost ~+30% from dynamic-partition
+    * sorting and was rejected). Both dirs stay readable when a side is
+    * empty ([[ensureParquetFooter]]). Returns (dataDir, cdcDir).
     */
-  private def writeSplit(kept: DataFrame, hits: DataFrame,
+  private def writeSplit(kept: DataFrame, removed: DataFrame,
       table: String): (String, String) = {
     val dataDir = stageDir(table)
     val cdcDir = Paths.get(table, "cdc",
       java.util.UUID.randomUUID.toString).toString
     graft.Par.run(
       () => { kept.write.mode(SaveMode.ErrorIfExists).parquet(dataDir); () },
-      () => { hits.write.mode(SaveMode.ErrorIfExists).parquet(cdcDir); () })
+      () => { removed.write.mode(SaveMode.ErrorIfExists).parquet(cdcDir); () })
     ensureParquetFooter(kept, dataDir)
-    ensureParquetFooter(hits, cdcDir)
+    ensureParquetFooter(removed, cdcDir)
     (dataDir, cdcDir)
   }
 
-  /** Versioned DML — the reference's updateRecord/deleteRecord
-    * (reference: Database.java) on immutable storage: the snapshot is
-    * rewritten with the predicate applied and committed as a NEW
-    * version, so concurrent readers keep their version and time
-    * travel reaches the pre-DML state. The rewrite reads the current
-    * dirs and stages into a fresh dir — never in place. At 100 TB
-    * selective DML would rewrite only affected files (the dir-level
-    * analog is [[commitTransform]]); these whole-table forms are the
-    * semantics contract. Both forms commit a CDC sidecar (the deleted
-    * — for updates, also the replacement — rows) so downstream change
-    * feeds read O(changed rows), never the rewritten table twice.
-    * Both commit through [[headCas]], so a racing append is re-read
-    * and filtered, never dropped.
+  /** The rows a row-level DML removes from a frame, and the rows it
+    * keeps — complementary filters; `removed` doubles as the probe.
     */
-  def deleteWhere(spark: SparkSession, table: String,
-      cond: org.apache.spark.sql.Column): Int = {
-    // SQL DELETE semantics: rows where cond is NULL are KEPT (a bare
-    // where(!cond) would drop them — NOT NULL is NULL, filtered out).
-    // Schema-PRESERVING commit: a DML rewrite keeps the table's
-    // committed schema, so re-carry the head's schema tags.
-    // ONE split write stages kept rows (the new data dir) and deleted
-    // rows (the CDC sidecar) together — same job as the pre-sidecar
-    // rewrite.
-    val hit = org.apache.spark.sql.functions.coalesce(
-      cond, org.apache.spark.sql.functions.lit(false))
-    headCas(table, "deleteWhere") { cur =>
-      val df = readVersion(spark, table, cur)
-      val (dataDir, delDir) = writeSplit(df.where(!hit), df.where(hit), table)
-      Claim(Seq(dataDir), schemaMetaTags(table, cur) :+ (CdcDelTag + delDir),
-        inheritSchema = false, staged = Seq(dataDir, delDir))
-    }
+  private final class Rows(val removed: DataFrame => DataFrame,
+      val kept: DataFrame => DataFrame)
+
+  /** The `cond`-TRUE rows leave; NULL-cond rows are KEPT (SQL DELETE
+    * semantics — a bare where(!cond) would drop them, NOT NULL being
+    * NULL), so a row's fate never depends on which dir it shares with
+    * a real match.
+    */
+  private def rowsWhere(cond: org.apache.spark.sql.Column): Rows = {
+    import org.apache.spark.sql.functions.{coalesce, lit}
+    val hit = coalesce(cond, lit(false))
+    new Rows(_.where(cond), _.where(!hit))
   }
 
-  /** See [[deleteWhere]]: conditional column replacement as a new
-    * version. An update is delete-of-old + insert-of-new for exactly
-    * the cond-TRUE rows (when()'s semantics — NULL cond keeps the old
-    * value): the split write stages untouched rows + the old hit rows
-    * (the CDC delete side), and one O(changed) second job applies the
-    * replacement to the hit rows — that dir is BOTH the second data
-    * dir and the CDC insert side. When the replacement would change
-    * the column's TYPE (mixed per-dir schemas would corrupt reads),
-    * fall back to the legacy whole-table rewrite.
+  /** The rows whose `key` appears in `keys` leave, matched as a key
+    * SEMI-JOIN (and kept as the ANTI-JOIN) — never a driver-collected
+    * IN list, so the key set may be data-sized. Join strategy is left
+    * to AQE on purpose: a point-keyed batch broadcasts, a bulk one
+    * shuffles. The distinct keys are checkpointed once, on first use,
+    * so every attempt matches the same set.
+    */
+  private def rowsKeyed(keys: DataFrame, key: String): Rows = {
+    lazy val k = keys.select(org.apache.spark.sql.functions.col(key))
+      .distinct().localCheckpoint()
+    new Rows(_.join(k, Seq(key), "left_semi"), _.join(k, Seq(key), "left_anti"))
+  }
+
+  /** THE row-level DML step (the object scaladoc states its rules):
+    * every delete, update and merge runs it once per [[headCas]]
+    * attempt against the pinned head. A replayed `batch` resolves to
+    * its own version. Otherwise the step finds the touched dirs (a
+    * one-dir head is its own touched set; more dirs run ONE
+    * [[probeTouched]] job), stages their kept and removed rows as one
+    * [[writeSplit]], writes the verb's insert side — `replace` of the
+    * removed rows (an update) or `land` (a merge source) — and claims
+    * the untouched dirs plus the staged ones with their
+    * `cdcdel`/`cdcins` tags and the batch tag. A removed side with no
+    * rows (a footer count, no job) drops the split; with nothing to
+    * insert either the step resolves to the head without a commit,
+    * except that a batch commits its tag alone so a replay still
+    * no-ops. A `replace` that changes a column's type rewrites the
+    * whole head as one dir in the new type instead. A lost claim
+    * re-probes the new head, so no verb ever aborts.
+    */
+  private def dml(spark: SparkSession, table: String, what: String, rows: Rows,
+      batch: Option[(String, Long)] = None,
+      replace: Option[DataFrame => DataFrame] = None,
+      land: Option[DataFrame] = None): Int =
+    headCas(table, what) { cur =>
+      batch.flatMap { case (id, b) => replayedVersion(table, id, b) } match {
+        case Some(v) => Resolved(v)
+        case None =>
+          require(cur > 0 || land.isDefined, s"$what: no committed version at $table")
+          val tags = batch.map { case (id, b) => ingestTag(id, b) }.toSeq
+          val dirs = headDirs(table, cur)
+          lazy val head = readVersion(spark, table, cur)
+          replace.map(_(head))
+            .filter(_.schema.map(_.dataType) != head.schema.map(_.dataType)) match {
+            case Some(coerced) =>
+              // every row's column changes type: the whole head is the
+              // delta, and mixed per-dir types would corrupt reads — one
+              // dir whose footer defines the schema, tombstones carried
+              replaceClaim(coerced, table, tags ++ droppedMetaTags(table, cur))
+            case None =>
+              val touched =
+                if (dirs.size <= 1) dirs
+                else probeTouched(committedReader(spark, table, cur), dirs, rows.removed)
+              val split =
+                if (touched.isEmpty) None
+                else {
+                  val src = readDirs(spark, table, cur, touched)
+                  Some(writeSplit(rows.kept(src), rows.removed(src), table))
+                }
+              val hit = split.filter { case (_, del) => footerRows(spark, Seq(del)) > 0 }
+              if (hit.isEmpty) split.foreach { case (k, d) => deleteDataDir(k); deleteDataDir(d) }
+              val ins = hit.toSeq.flatMap { case (_, del) =>
+                replace.map(f => writeData(f(readDirs(spark, table, cur, Seq(del))), table))
+              } ++ land.map(writeData(_, table))
+              if (hit.isEmpty && ins.isEmpty)
+                if (batch.isEmpty) Resolved(cur) else Claim(dirs, tags)
+              else {
+                val (kept, dels) = hit.toSeq.unzip
+                val gone = if (hit.isDefined) touched.toSet else Set.empty[String]
+                Claim(dirs.filterNot(gone) ++ kept ++ ins,
+                  tags ++ dels.map(CdcDelTag + _) ++ ins.map(CdcInsTag + _),
+                  staged = kept ++ dels ++ ins)
+              }
+          }
+      }
+    }
+
+  /** Versioned DELETE — the reference's deleteRecord (reference:
+    * Database.java) on immutable storage: the rows where `cond` holds
+    * leave in a NEW version (NULL-cond rows kept), so concurrent
+    * readers keep theirs and time travel reaches the pre-DML state.
+    * Runs the [[dml]] step: only the touched dirs are rewritten, the
+    * deleted rows land as the CDC sidecar, and a racing append is
+    * re-probed, never dropped. Returns the version serving the delete
+    * (the head, unchanged, when no row matches).
+    */
+  def deleteWhere(spark: SparkSession, table: String,
+      cond: org.apache.spark.sql.Column): Int =
+    dml(spark, table, "deleteWhere", rowsWhere(cond))
+
+  /** Versioned UPDATE — [[deleteWhere]]'s twin: `column` becomes
+    * `value` in the rows where `cond` holds (when()'s semantics, NULL
+    * cond keeps the old value). The removed rows are the CDC delete
+    * side, and their replacement — one O(changed) job over that
+    * sidecar — is both a data dir and the CDC insert side. A `value`
+    * that changes the column's type rewrites the whole table as one
+    * dir in the new type.
     */
   def updateWhere(spark: SparkSession, table: String,
       cond: org.apache.spark.sql.Column, column: String,
       value: org.apache.spark.sql.Column): Int = {
-    import org.apache.spark.sql.functions.{coalesce, lit, when}
-    def upd(frame: DataFrame) =
-      frame.withColumn(column, when(cond, value).otherwise(frame(column)))
-    val hit = coalesce(cond, lit(false))
-    headCas(table, "updateWhere") { cur =>
-      val df = readVersion(spark, table, cur)
-      if (upd(df).schema.map(_.dataType) != df.schema.map(_.dataType))
-        // type-coercing update: every row's column changes type — the
-        // whole table is the delta, one rewrite, sidecars add nothing;
-        // the new type is read off the rewrite, the tombstones carry
-        replaceClaim(upd(df), table, droppedMetaTags(table, cur))
-      else {
-        val (keptDir, delDir) = writeSplit(df.where(!hit), df.where(hit), table)
-        val insDir = writeData(upd(readDirs(spark, table, cur, Seq(delDir))), table)
-        Claim(Seq(keptDir, insDir), schemaMetaTags(table, cur) ++
-          Seq(CdcDelTag + delDir, CdcInsTag + insDir), inheritSchema = false,
-          staged = Seq(keptDir, delDir, insDir))
-      }
-    }
+    import org.apache.spark.sql.functions.when
+    dml(spark, table, "updateWhere", rowsWhere(cond),
+      replace = Some(df => df.withColumn(column, when(cond, value).otherwise(df(column)))))
   }
 
-  /** FILE-LEVEL selective DML: rewrite ONLY the data directories that
-    * can contain predicate matches — a pushed-down existence probe per
-    * dir (parquet row-group min/max stats make non-matching dirs a
-    * metadata read) — and carry every untouched dir over BY REFERENCE
-    * into the new manifest. The commit is conflict-checked
-    * ([[commitTransformIf]]): if a racing writer replaced any touched
-    * dir, the DML aborts (None) instead of resurrecting stale data.
-    * This is the production shape of DML at 100 TB: a point delete
-    * rewrites a handful of files, not the table; the whole-snapshot
-    * [[deleteWhere]]/[[updateWhere]] forms remain the semantic
-    * contract. The existence probe is ONE Spark job regardless of dir
-    * count; only the rewrite itself is per-touched-dir.
-    */
+  @deprecated("deleteWhere is file-selective and never aborts", "0.1.0")
   def deleteWhereSelective(spark: SparkSession, table: String,
-      cond: org.apache.spark.sql.Column): Option[Int] =
-    // same NULL-keeping DELETE semantics as [[deleteWhere]] — and the
-    // probe only marks TRUE-matching dirs, so without the coalesce a
-    // NULL-cond row's fate would depend on which dir it shares with a
-    // real match (physical layout leaking into delete semantics)
-    rewriteTouched(spark, table, cond, update = None)
+      cond: org.apache.spark.sql.Column): Option[Int] = Some(deleteWhere(spark, table, cond))
 
-  /** See [[deleteWhereSelective]]: conditional column replacement that
-    * rewrites only the dirs the predicate can touch. */
+  @deprecated("updateWhere is file-selective and never aborts", "0.1.0")
   def updateWhereSelective(spark: SparkSession, table: String,
       cond: org.apache.spark.sql.Column, column: String,
       value: org.apache.spark.sql.Column): Option[Int] =
-    rewriteTouched(spark, table, cond, update = Some((column, value)))
+    Some(updateWhere(spark, table, cond, column, value))
+
+  /** Keyed DELETE driven by a KEYS DATAFRAME — the join-expressible
+    * (firehose) form of a cascading child erasure: every row whose
+    * `key` appears in `keys` is deleted ([[rowsKeyed]]), so the
+    * matched-key set can be DATA-SIZED (a court order covering
+    * millions of subjects) without ever leaving the cluster. Returns
+    * the version serving the delete (unchanged when no row matches).
+    * `keys` must be stable across retries — pass a localCheckpoint()ed
+    * frame, not a live query over the table being deleted from.
+    */
+  def deleteMatching(spark: SparkSession, table: String, key: String,
+      keys: DataFrame): Int =
+    dml(spark, table, "deleteMatching", rowsKeyed(keys, key))
+
+  /** Keyed MERGE (upsert) — the CDC-apply / dimension-maintenance
+    * write path (Delta MERGE INTO, Iceberg MERGE, re-expressed on the
+    * snapshot format): every `source` row REPLACES the table row with
+    * the same `key` (and inserts, for new keys), committed as ONE
+    * atomic version: the [[dml]] step removes the matched rows from
+    * the touched dirs and lands the source as one new dir, which
+    * doubles as the CDC insert side. The claim is the CAS: the probe
+    * is only valid against the exact snapshot it ran on, so any commit
+    * since (even a pure append, which can carry matched keys the probe
+    * never saw) re-probes — the serializable-conflict semantic
+    * Delta/Iceberg MERGE enforces. `source` must be keyed (≤ 1 row per
+    * key — a multi-row key makes "the" replacement ambiguous) and
+    * stable across retries. Returns the committed version.
+    */
+  def merge(spark: SparkSession, table: String, source: DataFrame,
+      key: String): Int =
+    dml(spark, table, "merge", rowsKeyed(source, key), land = Some(source))
+
+  /** EXACTLY-ONCE streaming merge — the CDC-apply loop: each
+    * micro-batch of keyed changes upserts via [[merge]], the
+    * (streamId, batchId) tag commits atomically with the version, and
+    * a replayed batch resolves to its own version (an upsert replayed
+    * against its own result would also be a no-op by value, but the
+    * tag spares the rewrite entirely and anchors [[committedVersion]]
+    * time travel).
+    */
+  def mergeBatch(df: DataFrame, table: String, key: String,
+      streamId: String, batchId: Long): Int =
+    dml(df.sparkSession, table, s"merge ($streamId, $batchId)", rowsKeyed(df, key),
+      batch = Some((streamId, batchId)), land = Some(df))
 
   /** Time-travel DIFF between two committed versions, computed from
     * the MANIFESTS: a data directory shared by both manifests carries
@@ -477,11 +578,11 @@ object Snapshots {
     * committed), so shared dirs cancel EXACTLY and only the symmetric
     * difference of the two dir sets is ever scanned — an append-mostly
     * history diffs in O(changed data), never O(table). The multiset
-    * subtraction (exceptAll) then nets out rewrite churn: a selective
-    * DML that rewrote a dir contributes only the rows that actually
-    * changed, not the carried survivors. Rows are expressed in the TO
-    * version's committed schema — the CDC consumer's view: evolved-in
-    * columns read null for old rows, dropped columns are pruned.
+    * subtraction (exceptAll) then nets out rewrite churn: a DML that
+    * rewrote a dir contributes only the rows that actually changed,
+    * not the carried survivors. Rows are expressed in the TO version's
+    * committed schema — the CDC consumer's view: evolved-in columns
+    * read null for old rows, dropped columns are pruned.
     */
   def diff(spark: SparkSession, table: String,
       vFrom: Int, vTo: Int): DataFrame = {
@@ -513,16 +614,6 @@ object Snapshots {
     branch(col(net), "insert").unionByName(branch(-col(net), "delete"))
   }
 
-  /** ONE existence-probe job over candidate dirs — not a serial
-    * per-dir isEmpty loop, which at 100 TB (thousands of dirs per
-    * manifest) would launch thousands of driver-serialized jobs.
-    * `probe` (a pushed-down predicate or key semi-join) filters a scan
-    * of ALL dirs at once — parquet footer min/max stats still answer
-    * non-matching files from metadata inside the single scan — and
-    * survivors reduce to their DISTINCT parent data directories
-    * (bounded by dir count, tiny) via input_file_name. Job count is
-    * O(1) in the number of dirs (asserted in SourcesSpec).
-    */
   /** Reads of a committed version for WRITE paths (probe/rewrite):
     * apply the committed schema when one exists — a raw parquet read
     * would sample an arbitrary footer on an evolved table (a predicate
@@ -541,6 +632,16 @@ object Snapshots {
       dirs: Seq[String]): DataFrame =
     committedReader(spark, table, version).parquet(dirs: _*)
 
+  /** ONE existence-probe job over candidate dirs — not a serial
+    * per-dir isEmpty loop, which at 100 TB (thousands of dirs per
+    * manifest) would launch thousands of driver-serialized jobs.
+    * `probe` (a pushed-down predicate or key semi-join) filters a scan
+    * of ALL dirs at once — parquet footer min/max stats still answer
+    * non-matching files from metadata inside the single scan — and
+    * survivors reduce to their DISTINCT parent data directories
+    * (bounded by dir count, tiny) via input_file_name. Job count is
+    * O(1) in the number of dirs (asserted in SourcesSpec).
+    */
   private def probeTouched(reader: org.apache.spark.sql.DataFrameReader,
       dirs: Seq[String], probe: DataFrame => DataFrame): Seq[String] = {
     import org.apache.spark.sql.functions.{col, input_file_name, regexp_replace}
@@ -563,215 +664,6 @@ object Snapshots {
     }
   }
 
-  private def rewriteTouched(spark: SparkSession, table: String,
-      cond: org.apache.spark.sql.Column,
-      update: Option[(String, org.apache.spark.sql.Column)]): Option[Int] = {
-    import org.apache.spark.sql.functions.{coalesce, lit, when}
-    val cur = currentVersion(table)
-    require(cur > 0, s"no committed version at $table")
-    val dirs = manifestDirs(table, cur)
-    val reader = committedReader(spark, table, cur)
-    val touched = probeTouched(reader, dirs, _.where(cond))
-    if (touched.isEmpty) return Some(cur)
-    def upd(frame: DataFrame) = update match {
-      case Some((column, value)) =>
-        frame.withColumn(column, when(cond, value).otherwise(frame(column)))
-      case None => frame
-    }
-    // a type-COERCING update changes every row of every touched dir —
-    // rewrite the touched dirs whole (no split: mixed per-dir column
-    // types would corrupt reads), and skip the sidecar (the delta IS
-    // the touched dirs; the feed's manifest-diff fallback handles it)
-    val coercing = update.isDefined && {
-      val probe = reader.parquet(touched.head)
-      upd(probe).schema.map(_.dataType) != probe.schema.map(_.dataType)
-    }
-    val hit = coalesce(cond, lit(false))
-    // the per-dir rewrites are independent writes — overlap their jobs
-    // from a driver pool (guide §2.6); result order matches `touched`.
-    // Each SPLIT write stages the dir's kept rows (the replacement data
-    // dir) and its hit rows (the CDC delete sidecar) in ONE job — the
-    // same job the pre-sidecar rewrite cost. Each thunk builds its OWN
-    // DataFrameReader (committedReader per call) — DataFrameReader is
-    // mutable and not thread-safe.
-    val splits: Seq[(String, String)] = graft.Par.run(touched.map(d => () => {
-      val src = committedReader(spark, table, cur).parquet(d)
-      if (coercing) {
-        val out = stageDir(table)
-        upd(src).write.mode(SaveMode.ErrorIfExists).parquet(out)
-        (out, "")
-      } else writeSplit(src.where(!hit), src.where(hit), table)
-    }): _*)
-    val kept = splits.map(_._1)
-    val dels = if (coercing) Seq.empty else splits.map(_._2)
-    // update: ONE O(changed) second job applies the replacement to the
-    // hit rows; the result dir is both a data dir and the CDC insert
-    // side (delete-of-old + insert-of-new, the update CDC convention)
-    val insDirs =
-      if (update.isEmpty || coercing) Seq.empty[String]
-      else Seq(writeData(
-        upd(committedReader(spark, table, cur).parquet(dels: _*)), table))
-    // a coercing rewrite reads its schema off the files (the pre-update
-    // one would mis-type the rewritten dirs); tombstones carry either way
-    val tags =
-      if (coercing) droppedMetaTags(table, cur)
-      else dels.map(CdcDelTag + _) ++ insDirs.map(CdcInsTag + _)
-    val out = commitTransformIf(table, requires = touched, tags = tags,
-      inheritSchema = !coercing)(
-      prev => prev.filterNot(touched.toSet) ++ kept ++ insDirs)
-    // conflict abort: clean the staged rewrites (the mergeTagged /
-    // compact convention) so retry loops don't accrete orphan dirs
-    if (out.isEmpty) (kept ++ dels ++ insDirs).foreach(deleteDataDir)
-    out
-  }
-
-  /** Keyed MERGE (upsert) — the CDC-apply / dimension-maintenance
-    * write path (Delta MERGE INTO, Iceberg MERGE, re-expressed on the
-    * snapshot format): every `source` row REPLACES the table row with
-    * the same `key` (and inserts, for new keys), committed as ONE
-    * atomic version. File-level: one existence-probe job (pushed-down
-    * key semi-join) finds the dirs holding matched keys; ONLY those
-    * are rewritten (anti-join against the source keys), untouched dirs
-    * carry by reference, and the source lands as one new dir. The
-    * commit is conflict-checked as a HEAD compare-and-swap: ANY
-    * concurrent commit makes the merge re-probe against the new head
-    * and retry — dir-presence alone would not do, because a racing
-    * appender (or a racing merge of the same key into a fresh dir) can
-    * introduce matched keys the probe never saw, and blindly appending
-    * the source would then duplicate them. This is the
-    * serializable-conflict semantic Delta/Iceberg MERGE enforces.
-    * Returns the committed version (always defined). `source` must be
-    * keyed (≤ 1 row per key — a multi-row key makes "the" replacement
-    * ambiguous) and stable across retries.
-    *
-    * At 100 TB: the probe is one scan whose non-matching files are
-    * answered from parquet footers; the rewrite is O(matched dirs) —
-    * a clustered layout ([[commitClustered]]) keeps that small for
-    * point-keyed CDC batches; the commit is O(1) manifest work.
-    */
-  def merge(spark: SparkSession, table: String, source: DataFrame,
-      key: String): Option[Int] =
-    Some(mergeTagged(table, source, key, batch = None))
-
-  /** Keyed DELETE driven by a KEYS DATAFRAME — the join-expressible
-    * (firehose) form of a cascading child erasure: every row whose
-    * `key` appears in `keys` is deleted, the match expressed as a
-    * pushed key SEMI-JOIN (existence probe) + ANTI-JOIN (rewrite of
-    * only the touched dirs) instead of a driver-collected IN list —
-    * so the matched-key set can be DATA-SIZED (a court order covering
-    * millions of subjects) without ever leaving the cluster. Join
-    * strategy is left to AQE, the [[merge]] convention: a human-scale
-    * key set broadcasts, a firehose one shuffles. The commit is a
-    * head CAS like merge's (any concurrent commit re-probes — even a
-    * pure append can carry newly-matched keys the probe never saw),
-    * so racing DML serializes. Returns the version serving the delete
-    * (unchanged when no row matches). `keys` must be stable across
-    * retries — pass a localCheckpoint()ed frame, not a live query over
-    * the table being deleted from.
-    */
-  def deleteMatching(spark: SparkSession, table: String, key: String,
-      keys: DataFrame): Int = {
-    import org.apache.spark.sql.functions.col
-    val srcKeys = keys.select(col(key)).distinct().localCheckpoint()
-    headCas(table, "deleteMatching") { cur =>
-      require(cur > 0, s"no committed version at $table")
-      val dirs = manifestDirs(table, cur)
-      val touched = probeTouched(committedReader(spark, table, cur), dirs,
-        _.join(srcKeys, Seq(key), "left_semi"))
-      if (touched.isEmpty) Resolved(cur)
-      else {
-        val (staged, dels) = splitByKeys(spark, table, cur, touched, srcKeys, key)().unzip
-        Claim(dirs.filterNot(touched.toSet) ++ staged, dels.map(CdcDelTag + _),
-          staged = staged ++ dels)
-      }
-    }
-  }
-
-  /** Rewrite each `touched` dir of version `cur` as a SPLIT write —
-    * the rows whose `key` is not in `srcKeys` (the replacement data
-    * dir) and the matched rows (the CDC delete sidecar) in ONE job —
-    * overlapping the per-dir rewrites and any `extra` writes on a
-    * thread pool ([[graft.Par]]). Returns (dataDir, cdcDir) per touched
-    * dir, then the extra writes' results. Per-thunk readers:
-    * DataFrameReader is mutable and not thread-safe.
-    */
-  private def splitByKeys(spark: SparkSession, table: String, cur: Int,
-      touched: Seq[String], srcKeys: DataFrame, key: String)(
-      extra: (() => (String, String))*): Seq[(String, String)] =
-    graft.Par.run(touched.map(d => () => {
-      val src = committedReader(spark, table, cur).parquet(d)
-      writeSplit(src.join(srcKeys, Seq(key), "left_anti"),
-        src.join(srcKeys, Seq(key), "left_semi"), table)
-    }) ++ extra: _*)
-
-  /** The keyed upsert behind [[merge]] and [[mergeBatch]]: per
-    * attempt, probe the pinned head for dirs holding matched keys,
-    * rewrite only those, land the source as one new dir (doubling as
-    * the CDC insert side), and claim head + 1. The claim is the CAS:
-    * the probe is only valid against the exact snapshot it ran on, so
-    * any commit since (even a pure append) re-probes. A `batch` tag
-    * commits atomically with the version and is re-checked per
-    * attempt, so a replayed batch resolves to its own version.
-    */
-  private def mergeTagged(table: String, source: DataFrame, key: String,
-      batch: Option[(String, Long)]): Int = {
-    import org.apache.spark.sql.functions.col
-    val spark = source.sparkSession
-    // join strategy is LEFT TO AQE on purpose: a point-keyed CDC batch
-    // broadcasts (the normal case), but a bulk backfill's key set is
-    // data-sized and must be allowed to shuffle — pinning a broadcast
-    // here would OOM exactly when merge is asked to do the most work
-    lazy val srcKeys = source.select(col(key)).distinct().localCheckpoint()
-    headCas(table, "merge") { cur =>
-      batch.flatMap { case (id, b) => replayedVersion(table, id, b) } match {
-        case Some(v) => Resolved(v)
-        case None =>
-          // cur == 0: first batch bootstraps the table — nothing to probe
-          val dirs = headDirs(table, cur)
-          val touched =
-            if (dirs.isEmpty) Seq.empty[String]
-            else probeTouched(committedReader(spark, table, cur), dirs,
-              _.join(srcKeys, Seq(key), "left_semi"))
-          // the source-batch landing write overlaps the per-dir split
-          // rewrites — it depends on none of them; the source dir
-          // doubles as the CDC insert side, so the feed needs no extra
-          // copy of the batch
-          val all = splitByKeys(spark, table, cur, touched, srcKeys, key)(
-            () => (writeData(source, table), ""))
-          val (staged, delDirs) = all.init.unzip
-          val srcDir = all.last._1
-          Claim(dirs.filterNot(touched.toSet) ++ staged :+ srcDir,
-            batch.map { case (id, b) => ingestTag(id, b) }.toSeq ++
-              ((CdcInsTag + srcDir) +: delDirs.map(CdcDelTag + _)),
-            staged = staged ++ delDirs :+ srcDir)
-      }
-    }
-  }
-
-  /** EXACTLY-ONCE streaming merge — the CDC-apply loop: each
-    * micro-batch of keyed changes upserts via [[merge]], the
-    * (streamId, batchId) tag commits atomically with the version, and
-    * a replayed batch no-ops (an upsert replayed against its own
-    * result would also be a no-op by value, but the tag spares the
-    * rewrite entirely and anchors [[committedVersion]] time travel).
-    * A version-race loser recomputes against the winner's snapshot.
-    */
-  def mergeBatch(df: DataFrame, table: String, key: String,
-      streamId: String, batchId: Long): Int =
-    mergeTagged(table, df, key, Some((streamId, batchId)))
-
-  /** Continuous CDC apply: run a stream of keyed changes into the
-    * versioned table — one upserted snapshot version per micro-batch,
-    * exactly-once under replays via [[mergeBatch]].
-    */
-  def mergeStream(stream: DataFrame, table: String, key: String, streamId: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(batch, table, key, streamId, batchId)
-        ()
-      }
-
   /** CHANGE DATA FEED between two committed versions — the read half
     * of the CDC story ([[merge]]/[[mergeBatch]] being the apply half,
     * the Delta CDF analog): returns (inserted rows, deleted rows; an
@@ -788,13 +680,12 @@ object Snapshots {
     // FAST PATH (r16): walk the span version by version and assemble
     // the feed from each step's own change record — the appended dirs
     // for a pure append, the CDC sidecar for a DML commit ([[CdcInsTag]]
-    // /[[CdcDelTag]]). The feed then reads O(changed rows): a selective
-    // delete contributes its deleted rows, never the touched dirs'
-    // carried survivors, and a whole-table deleteWhere contributes its
-    // deleted rows, never old+new copies of the table. Any step without
-    // a change record (bootstrap overwrite, compaction transform,
-    // vacuumed intermediate manifest) falls back to the manifest-diff
-    // netting below, whose result is identical by construction
+    // /[[CdcDelTag]]). The feed then reads O(changed rows): a delete
+    // contributes its deleted rows, never the touched dirs' carried
+    // survivors. Any step without a change record (bootstrap
+    // overwrite, compaction transform, vacuumed intermediate manifest)
+    // falls back to the manifest-diff netting below, whose result is
+    // identical by construction
     // (equivalence asserted in RandomizedSpec against exceptAll on
     // random DML histories, both paths).
     val sidecar: Option[(Seq[String], Seq[String])] =
@@ -1226,32 +1117,6 @@ object Snapshots {
   def commitTransform(table: String)(f: Seq[String] => Seq[String]): Int =
     headCas(table, "transform")(prev => Claim(f(headDirs(table, prev))))
 
-  /** Conflict-checked transform: aborts (returns None) when any dir in
-    * `requires` is no longer part of the predecessor's manifest. Two
-    * racing compactors each stage a compacted dir over the same deltas;
-    * without this check the loser's filterNot+append keeps the winner's
-    * compacted dir AND adds its own — the delta rows land twice. Same
-    * hazard against a racing commitOverwrite, whose fresh content must
-    * not have stale compacted data grafted back on top.
-    */
-  def commitTransformIf(table: String, requires: Seq[String],
-      tags: Seq[String] = Nil, inheritSchema: Boolean = true)(
-      f: Seq[String] => Seq[String]): Option[Int] = {
-    // per attempt: validate `requires` against the pinned head's
-    // manifest and derive the claim from that same manifest — a racer
-    // landing between validation and claim fails the claim instead of
-    // letting stale staged content graft onto its manifest. A benign
-    // race (requires still present in the new head) retries; a
-    // conflicting one (an input dir left the manifest) aborts with None.
-    var conflict = false
-    val v = headCas(table, "conditional transform") { cur =>
-      val dirs = headDirs(table, cur)
-      conflict = !requires.forall(dirs.toSet.contains)
-      if (conflict) Resolved(cur) else Claim(f(dirs), tags, inheritSchema)
-    }
-    if (conflict) None else Some(v)
-  }
-
   /** The data directories making up a committed version (read-only
     * view for compaction planners).
     */
@@ -1395,35 +1260,17 @@ object Snapshots {
     }
 
   /** EXACTLY-ONCE batched DELETE — the erasure-request stream's commit
-    * unit (the DML twin of [[ingestBatch]]): rewrite the snapshot with
-    * `cond` rows removed (NULL-cond rows kept, [[deleteWhere]]'s SQL
-    * DELETE semantics) and commit it tagged (streamId, batchId), CAS'd
-    * on the head version the content was derived from. A replayed
-    * batch sees its tag and no-ops — critical for deletes, where a
-    * blind replay would OVERWRITE with content missing every batch
-    * that committed since. A head-race loser re-reads and re-filters
-    * against the winner's snapshot.
+    * unit (the DML twin of [[ingestBatch]]): [[deleteWhere]] committed
+    * tagged (streamId, batchId). A replayed batch sees its tag and
+    * no-ops — critical for deletes, where a blind replay would remove
+    * rows that batches committed since re-inserted. A batch matching
+    * no row still commits its tag, so its replay no-ops too.
     */
   def deleteBatch(spark: SparkSession, table: String,
       cond: org.apache.spark.sql.Column, streamId: String,
-      batchId: Long): Int = {
-    val hit = org.apache.spark.sql.functions.coalesce(
-      cond, org.apache.spark.sql.functions.lit(false))
-    headCas(table, s"deleteBatch ($streamId, $batchId)") { head =>
-      replayedVersion(table, streamId, batchId) match {
-        case Some(v) => Resolved(v)
-        case None =>
-          val df = readVersion(spark, table, head)
-          // the split write stages the kept rows (the new data dir) and
-          // the deleted rows (the CDC sidecar) — schema-preserving like
-          // [[deleteWhere]]
-          val (dataDir, delDir) = writeSplit(df.where(!hit), df.where(hit), table)
-          Claim(Seq(dataDir), Seq(ingestTag(streamId, batchId), CdcDelTag + delDir) ++
-            schemaMetaTags(table, head), inheritSchema = false,
-            staged = Seq(dataDir, delDir))
-      }
-    }
-  }
+      batchId: Long): Int =
+    dml(spark, table, s"deleteBatch ($streamId, $batchId)", rowsWhere(cond),
+      batch = Some((streamId, batchId)))
 
   /** [[ingestBatch]]'s OVERWRITE flavor — exactly-once per
     * (streamId, batchId), but the batch's content REPLACES the table
@@ -1713,11 +1560,6 @@ object Snapshots {
     val dir = zOrderedRun(df, table, zCols, files)
     headCas(table, "clustered overwrite")(_ => Claim(Seq(dir), inheritSchema = false))
   }
-
-  /** Append rows WITHOUT clustering them — cheap ingest; the delta
-    * dir is unclustered until the next [[compact]].
-    */
-  def appendDelta(df: DataFrame, table: String): Int = commitAppend(df, table)
 
   /** Re-cluster the accumulated (unclustered) delta dirs into ONE new
     * Z-ordered dir and commit base + compacted delta as a new version.

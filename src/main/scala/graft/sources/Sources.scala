@@ -264,7 +264,6 @@ object SourceQueries {
         .withColumn("o_orderkey", col("o_orderkey") + lit(1000000000L))
         .withColumn("o_orderstatus", lit("N"))
       val v = Snapshots.merge(s, table, updates.unionByName(inserts), "o_orderkey")
-        .getOrElse(sys.error("merge aborted without a concurrent writer"))
       Snapshots.readVersion(s, table, v)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
@@ -333,8 +332,7 @@ object SourceQueries {
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
       val v1 = Snapshots.commitOverwrite(o.where(col("o_orderkey") % 4 =!= 3), t)
       Snapshots.commitAppend(o.where(col("o_orderkey") % 4 === 3), t)
-      val head = Snapshots.deleteWhereSelective(s, t, col("o_orderkey") % 5 === 0)
-        .getOrElse(sys.error("selective delete aborted without a concurrent writer"))
+      val head = Snapshots.deleteWhere(s, t, col("o_orderkey") % 5 === 0)
       Snapshots.diff(s, t, v1, head)
     },
     Some("""WITH a AS (SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
@@ -760,37 +758,4 @@ object SourceQueries {
       snapshotDiff, mvJoinIncremental, csvRoundtrip, jsonlRoundtrip,
       partitionPrune, mvSketchIncremental, mvSketchRollup, mvSketchRewrite,
       mvSketchSlice, mvJoinRewrite)
-}
-
-/** Copy-on-write mutations — the reference's record insert/update/
-  * delete path (reference: Database.java Transaction addRecord /
-  * updateRecord / deleteRecord on mutable heap files) re-expressed for
-  * immutable columnar storage: a mutation is a rewritten snapshot,
-  * committed atomically by the job commit protocol. Readers always see
-  * a complete snapshot (the P3 isolation story without a lock manager).
-  */
-object Mutations {
-  import org.apache.spark.sql.{Column, SparkSession}
-
-  /** Append rows (schema-aligned by name). */
-  def insertInto(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Append).parquet(path)
-
-  /** Delete = rewrite without matching rows; returns rows remaining.
-    * SQL DELETE semantics: NULL-cond rows are kept. */
-  def deleteWhere(spark: SparkSession, path: String, cond: Column, outPath: String): Long = {
-    import org.apache.spark.sql.functions.{coalesce, lit}
-    val remaining = spark.read.parquet(path).where(!coalesce(cond, lit(false)))
-    remaining.write.mode(SaveMode.Overwrite).parquet(outPath)
-    spark.read.parquet(outPath).count()
-  }
-
-  /** Update = rewrite with the column conditionally replaced. */
-  def updateWhere(spark: SparkSession, path: String, cond: Column,
-      column: String, value: Column, outPath: String): Unit = {
-    import org.apache.spark.sql.functions.when
-    val df = spark.read.parquet(path)
-    df.withColumn(column, when(cond, value).otherwise(df(column)))
-      .write.mode(SaveMode.Overwrite).parquet(outPath)
-  }
 }

@@ -89,8 +89,7 @@ object ForgetBudget {
       rounds.foreach { case (label, cond) =>
         val erased = Snapshots.read(spark, baseT).where(cond).count()
         val t0 = System.nanoTime()
-        val v = Snapshots.deleteWhereSelective(spark, baseT, cond)
-          .getOrElse(Snapshots.deleteWhere(spark, baseT, cond))
+        val v = Snapshots.deleteWhere(spark, baseT, cond)
         val deleteMs = (System.nanoTime() - t0) / 1000000L
         // PARALLEL walk (the production default): per-family times are
         // measured inside each future, so sum(fold_ms) is the

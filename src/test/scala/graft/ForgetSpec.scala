@@ -207,22 +207,20 @@ class ForgetSpec extends SparkSpec {
   test("two racing erasure deletes serialize; one walk then serves the intersection") {
     // the composed DML race the snapshot layer guarantees TODAY: two
     // concurrent file-selective deletes on the same base — each probes
-    // its own touched dirs and commits via the conflict-checked
-    // transform; disjoint-dir racers both land, a same-dir loser
-    // aborts and falls back to the whole-snapshot delete against the
-    // winner's head. Either interleaving must converge to BOTH
-    // predicates applied. (The composed-race tests BELOW drive the
-    // registry walks themselves concurrently — the per-family folds
-    // are head-CAS cycles since round 13; this test keeps the
-    // base-layer race isolated, walking once after both deletes.)
+    // its own touched dirs and claims head + 1; the loser of the claim
+    // re-probes the winner's head and deletes there. Either
+    // interleaving must converge to BOTH predicates applied. (The
+    // composed-race tests BELOW drive the registry walks themselves
+    // concurrently — the per-family folds are head-CAS cycles since
+    // round 13; this test keeps the base-layer race isolated, walking
+    // once after both deletes.)
     val (baseT, root) = Forget.bootstrap(spark, sfDir, tag = "_race")
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
     def del(m: Int) = Future {
-      Snapshots.deleteWhereSelective(spark, baseT, pmod(col("doc_id"), lit(m)) === 0)
-        .getOrElse(Snapshots.deleteWhere(spark, baseT, pmod(col("doc_id"), lit(m)) === 0))
+      Snapshots.deleteWhere(spark, baseT, pmod(col("doc_id"), lit(m)) === 0)
     }
     val (f7, f11) = (del(7), del(11))
     Await.result(f7, Duration.Inf); Await.result(f11, Duration.Inf)

@@ -364,7 +364,7 @@ class RandomizedSpec extends SparkSpec {
     // r16: DML commits record their own row delta (CDC sidecar), and
     // changesBetween assembles multi-step feeds from the sidecars in
     // O(changed rows). Equivalence contract: for ANY random history of
-    // appends / whole-table + selective deletes / updates / keyed
+    // appends / predicate and point deletes / updates / keyed
     // merges / keyed deletes, the feed between any two surviving
     // versions equals exceptAll of the endpoint snapshots — the same
     // ground truth the manifest-diff fallback satisfies.
@@ -386,7 +386,7 @@ class RandomizedSpec extends SparkSpec {
           col("k") % (2 + rnd.nextInt(3)) === 0)
         case 2 => Snapshots.updateWhere(spark, t,
           col("v") > rnd.nextInt(4), "v", col("v") + 10L)
-        case 3 => Snapshots.deleteWhereSelective(spark, t,
+        case 3 => Snapshots.deleteWhere(spark, t,
           col("k") === rnd.nextInt(12).toLong)
         case 4 => Snapshots.merge(spark, t,
           rows(6).groupBy("k").agg(max(col("v")).as("v")), "k")

@@ -97,26 +97,6 @@ class SourcesSpec extends SparkSpec {
     assert(got == exp, s"dynamic overwrite clobbered partitions: $got vs $exp")
   }
 
-  test("copy-on-write insert/delete/update round-trip (reference write path)") {
-    import graft.sources.Mutations
-    val base = s"$tmp/mut_orders"
-    val orig = Tables.load(spark, sfDir, "orders")
-    orig.write.mode("overwrite").parquet(base)
-    // insert: append the first 10 orders again
-    Mutations.insertInto(orig.where(col("o_orderkey") < 10), base)
-    assert(spark.read.parquet(base).count() == orig.count() + 10)
-    // delete: remove every appended duplicate's key entirely
-    val afterDelete = Mutations.deleteWhere(
-      spark, base, col("o_orderkey") < 10, s"$tmp/mut_orders_d")
-    assert(afterDelete == orig.where(col("o_orderkey") >= 10).count())
-    // update: zero out totalprice for one status
-    Mutations.updateWhere(spark, s"$tmp/mut_orders_d",
-      col("o_orderstatus") === "F", "o_totalprice", lit(0.0), s"$tmp/mut_orders_u")
-    val updated = spark.read.parquet(s"$tmp/mut_orders_u")
-    assert(updated.where(col("o_orderstatus") === "F" && col("o_totalprice") =!= 0.0).count() == 0)
-    assert(updated.where(col("o_orderstatus") =!= "F" && col("o_totalprice") === 0.0).count() == 0)
-  }
-
   test("z-ordered layout prunes row groups on BOTH clustered columns") {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.execution.FileSourceScanExec
@@ -274,9 +254,8 @@ class SourcesSpec extends SparkSpec {
     val dirsBefore = Snapshots.versionDirs(table, Snapshots.currentVersion(table))
 
     // point delete inside the middle dir's range only
-    val v = Snapshots.deleteWhereSelective(spark, table, col("l_orderkey") === 750)
-    assert(v.isDefined)
-    val dirsAfter = Snapshots.versionDirs(table, v.get)
+    val v = Snapshots.deleteWhere(spark, table, col("l_orderkey") === 750)
+    val dirsAfter = Snapshots.versionDirs(table, v)
     val kept = dirsBefore.toSet & dirsAfter.toSet
     assert(kept.size == 2,
       s"exactly the two untouched dirs must carry by reference: $kept")
@@ -285,15 +264,14 @@ class SourcesSpec extends SparkSpec {
     assert(got.count() == li.where(col("l_orderkey") =!= 750).count())
 
     // predicate matching nothing: no new version at all
-    val v2 = Snapshots.deleteWhereSelective(spark, table, col("l_orderkey") === -1)
-    assert(v2.contains(v.get), "no-match DML must not commit")
+    val v2 = Snapshots.deleteWhere(spark, table, col("l_orderkey") === -1)
+    assert(v2 == v, "no-match DML must not commit")
 
     // selective update, same file-level behavior
-    val dirsB2 = Snapshots.versionDirs(table, v.get)
-    val v3 = Snapshots.updateWhereSelective(spark, table,
+    val dirsB2 = Snapshots.versionDirs(table, v)
+    val v3 = Snapshots.updateWhere(spark, table,
       col("l_orderkey") === 1200, "l_returnflag", lit("X"))
-    assert(v3.isDefined)
-    assert((dirsB2.toSet & Snapshots.versionDirs(table, v3.get).toSet).size == 2)
+    assert((dirsB2.toSet & Snapshots.versionDirs(table, v3).toSet).size == 2)
     assert(Snapshots.read(spark, table)
       .where(col("l_returnflag") === "X").count() ==
       li.where(col("l_orderkey") === 1200).count())
@@ -323,8 +301,7 @@ class SourcesSpec extends SparkSpec {
       s"shared dir must cancel without a read:\n$plan")
     // a rewrite step (selective point delete) nets out the carried
     // survivors: the diff is exactly the deleted rows
-    val v3 = Snapshots.deleteWhereSelective(spark, t, col("l_orderkey") === 750)
-      .getOrElse(fail("selective delete aborted"))
+    val v3 = Snapshots.deleteWhere(spark, t, col("l_orderkey") === 750)
     val d23 = Snapshots.diff(spark, t, v2, v3).collect()
     assert(d23.nonEmpty && d23.forall(_.getString(3) == "delete"))
     assert(d23.length == li.where(col("l_orderkey") === 750).count())
@@ -340,23 +317,37 @@ class SourcesSpec extends SparkSpec {
     val li = Tables.load(spark, sfDir, "lineitem").select("l_orderkey", "l_quantity")
 
     // build a table of `nDirs` disjoint-range dirs, run a 1-dir point
-    // delete, return the Spark job count the DML needed
+    // delete, return the Spark job count the DML needed; then a delete
+    // matching no row, which must commit nothing and leave no staged dir
     def jobsForDirCount(nDirs: Int): Int = {
       val table = s"${Roots.scratch}/sources-spec/seldml_jobs_$nDirs"
       rm(new java.io.File(table))
       Snapshots.commitOverwrite(li.where(col("l_orderkey") % nDirs === 0), table)
       (1 until nDirs).foreach(i =>
         Snapshots.commitAppend(li.where(col("l_orderkey") % nDirs === i), table))
-      assert(Snapshots.versionDirs(table, Snapshots.currentVersion(table)).size == nDirs)
-      var v = Option.empty[Int]
+      val head = Snapshots.currentVersion(table)
+      assert(Snapshots.versionDirs(table, head).size == nDirs)
+      var v = 0
       val jobs = jobsDuring {
-        v = Snapshots.deleteWhereSelective(spark, table, col("l_orderkey") === 17)
+        v = Snapshots.deleteWhere(spark, table, col("l_orderkey") === 17)
       }
-      assert(v.isDefined)
+      assert(v == head + 1)
       assert(Snapshots.read(spark, table).where(col("l_orderkey") === 17).count() == 0)
+      def staged() = Seq("data", "cdc").map(d =>
+        Option(new java.io.File(s"$table/$d").list()).map(_.length).getOrElse(0))
+      val before = staged()
+      assert(Snapshots.deleteWhere(spark, table, col("l_orderkey") === -1L) == v)
+      assert(Snapshots.currentVersion(table) == v, s"$nDirs dirs: a no-match delete committed")
+      assert(staged() == before, s"$nDirs dirs: a no-match delete left staged dirs")
       jobs
     }
 
+    // a one-dir head is its own touched set: one split write, no probe
+    val jobs1 = jobsForDirCount(1)
+    assert(jobs1 <= 2, s"a delete on a one-dir head ran $jobs1 jobs")
+    // more dirs: one probe, then one split write of the touched dir
+    val jobs3 = jobsForDirCount(3)
+    assert(jobs3 <= 4, s"a point delete on a three-dir head ran $jobs3 jobs")
     // the O(1) claim itself: doubling the dir count must not grow the
     // job count (pre-fix, the serial per-dir probe made this linear —
     // 8 vs 16 probe jobs; thousands at a 100 TB manifest)
@@ -413,7 +404,7 @@ class SourcesSpec extends SparkSpec {
       "rewrite under the watermark must fold to the exact recompute")
 
     // selective DML under the watermark: same fold, still exact
-    Snapshots.deleteWhereSelective(spark, base, col("l_orderkey") % 100 === 0)
+    Snapshots.deleteWhere(spark, base, col("l_orderkey") % 100 === 0)
     MaterializedView.refresh(spark, base, mv, keys, sums)
     assert(MaterializedView.lastRefreshModeOf(mv) == "cdc-fold")
     assert(mvRows() == recompute(
@@ -439,15 +430,16 @@ class SourcesSpec extends SparkSpec {
       .select("o_orderkey", "o_custkey")
       .withColumn("p", col("o_orderkey") % 4)
     // a manifest dir with k=v partition subdirs — the layout
-    // ingestBatchStaged/ensureIndex stage for served indexes; the
-    // probe's file→dir mapping must resolve THROUGH the partition
-    // level back to the manifest dir
+    // ingestBatchStaged/ensureIndex stage for served indexes; a one-dir
+    // head is its own touched set, and the split must read it THROUGH
+    // the partition level (Spark cannot scan several partitioned roots
+    // at once, so a multi-dir head of this layout is not probed)
     val dir = Snapshots.stageDir(table)
     Sources.writePartitioned(o, dir, "p")
     Snapshots.commitTransform(table)(_ => Seq(dir))
     val before = Snapshots.read(spark, table).count()
-    val v = Snapshots.deleteWhereSelective(spark, table, col("o_orderkey") === 42)
-    assert(v.isDefined && v.get > 1, "the delete must fire, not silently no-op")
+    val v = Snapshots.deleteWhere(spark, table, col("o_orderkey") === 42)
+    assert(v > 1, "the delete must fire, not silently no-op")
     assert(Snapshots.read(spark, table).where(col("o_orderkey") === 42).count() == 0)
     assert(Snapshots.read(spark, table).count() ==
       before - o.where(col("o_orderkey") === 42).count())
@@ -476,10 +468,9 @@ class SourcesSpec extends SparkSpec {
       .withColumn("o_orderkey", lit(999999999L))
     val changes = updates.unionByName(insert).localCheckpoint()
     val v = Snapshots.merge(spark, table, changes, "o_orderkey")
-    assert(v.isDefined)
 
     // file-level: exactly the two key-disjoint dirs carry by reference
-    val after = Snapshots.versionDirs(table, v.get)
+    val after = Snapshots.versionDirs(table, v)
     assert((before.toSet & after.toSet).size == 2,
       "merge must rewrite only the dirs holding matched keys")
 
@@ -512,13 +503,13 @@ class SourcesSpec extends SparkSpec {
     // CHANGE FEED of the merge batch: inserts are exactly the source
     // rows, deletes are exactly the replaced old versions — and a
     // rewritten dir's re-carried unchanged rows cancel out
-    val (ins, del) = Snapshots.changesBetween(spark, table, v.get, vb)
+    val (ins, del) = Snapshots.changesBetween(spark, table, v, vb)
     def keyed(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getDouble(2))).toSet
     assert(keyed(ins) == keyed(batch2),
       "change-feed inserts must be the merge source rows")
     assert(keyed(del) == keyed(
-      Snapshots.readVersion(spark, table, v.get)
+      Snapshots.readVersion(spark, table, v)
         .where(col("o_orderkey").between(100, 200))),
       "change-feed deletes must be the replaced old rows")
     // version-adjacent no-op: identical manifests yield an empty feed
@@ -578,24 +569,13 @@ class SourcesSpec extends SparkSpec {
     val li = Tables.load(spark, sfDir, "lineitem")
       .select("l_orderkey", "l_partkey", "l_quantity")
     val zc = Seq("l_orderkey", "l_partkey")
-    Snapshots.commitClustered(li.where(col("l_orderkey") % 4 === 0), table, zc, files = 2)
-    (1 to 3).foreach(k =>
-      Snapshots.appendDelta(li.where(col("l_orderkey") % 4 === k), table))
     val expected = li.count()
 
-    // deterministic conflict: a transform whose required dirs were
-    // replaced under it must abort, not graft stale content back
-    val deltas = Snapshots.versionDirs(table, Snapshots.currentVersion(table))
-    Snapshots.commitOverwrite(li.where(col("l_orderkey") % 4 === 0), table)
-    assert(Snapshots.commitTransformIf(table, deltas)(dirs => dirs).isEmpty,
-      "conflicting transform must abort")
-
-    // rebuild, then two compactors race for real: whatever interleaving
-    // occurs, the snapshot must hold every row exactly once
-    rm(root)
+    // two compactors race for real: whatever interleaving occurs, the
+    // snapshot must hold every row exactly once
     Snapshots.commitClustered(li.where(col("l_orderkey") % 4 === 0), table, zc, files = 2)
     (1 to 3).foreach(k =>
-      Snapshots.appendDelta(li.where(col("l_orderkey") % 4 === k), table))
+      Snapshots.commitAppend(li.where(col("l_orderkey") % 4 === k), table))
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     val barrier = new java.util.concurrent.CyclicBarrier(2)
@@ -667,8 +647,8 @@ class SourcesSpec extends SparkSpec {
       pmod(col("l_orderkey"), lit(2)) === 1)
 
     assert(Snapshots.commitClustered(base, table, zc) == 1)
-    assert(Snapshots.appendDelta(d1, table) == 2)
-    assert(Snapshots.appendDelta(d2, table) == 3)
+    assert(Snapshots.commitAppend(d1, table) == 2)
+    assert(Snapshots.commitAppend(d2, table) == 3)
     // appends are visible immediately (merge-on-read, unclustered)
     assert(Snapshots.read(spark, table).count() == li.count())
 
@@ -705,7 +685,7 @@ class SourcesSpec extends SparkSpec {
 
     // major compaction: more deltas accumulate, then EVERYTHING merges
     // into one globally clustered run
-    assert(Snapshots.appendDelta(d1.limit(100), table) == 5)
+    assert(Snapshots.commitAppend(d1.limit(100), table) == 5)
     assert(Snapshots.compactFull(spark, table, zc) == 6)
     assert(Snapshots.read(spark, table).count() == li.count() + 100)
     assert(new java.io.File(s"$table/data").listFiles().count(d =>
@@ -926,8 +906,7 @@ class SourcesSpec extends SparkSpec {
     // predating the evolution lack it physically — the probe and the
     // per-dir rewrite must resolve it through the committed schema
     // (raw footer-sampled reads would crash or skip nondeterministically)
-    val v6 = Snapshots.deleteWhereSelective(spark, t, col("score") > 55.0)
-    assert(v6.isDefined)
+    Snapshots.deleteWhere(spark, t, col("score") > 55.0)
     val r6 = Snapshots.read(spark, t)
     assert(r6.schema.fieldNames.toSeq == Seq("id", "score"),
       "DML commit keeps the committed schema")
@@ -1012,22 +991,42 @@ class SourcesSpec extends SparkSpec {
   test("DELETE keeps NULL-predicate rows (SQL semantics), both whole-table and selective") {
     import graft.sources.Snapshots
     import spark.implicits._
-    for ((name, selective) <- Seq(("del_null_w", false), ("del_null_s", true))) {
+    // one dir (its own touched set) and three dirs (probed): a NULL-cond
+    // row shares its dir with a real match either way
+    for ((name, nDirs) <- Seq(("del_null_w", 1), ("del_null_s", 3))) {
       val table = s"$tmp/$name"
       Snapshots.deleteRecursively(table)
       val df = Seq((1L, Some(10L)), (2L, None), (3L, Some(3L)), (4L, None))
         .toDF("k", "x")
-      Snapshots.commitOverwrite(df, table)
-      if (selective)
-        Snapshots.deleteWhereSelective(spark, table, col("x") > 5L)
-          .getOrElse(fail("selective delete aborted"))
-      else Snapshots.deleteWhere(spark, table, col("x") > 5L)
+      Snapshots.commitOverwrite(df.where(col("k") % nDirs === 0), table)
+      (1 until nDirs).foreach(i =>
+        Snapshots.commitAppend(df.where(col("k") % nDirs === i), table))
+      assert(Snapshots.versionDirs(table, Snapshots.currentVersion(table)).size == nDirs)
+      Snapshots.deleteWhere(spark, table, col("x") > 5L)
       val kept = Snapshots.read(spark, table).select("k").collect()
         .map(_.getLong(0)).toSet
       // row 1 (x=10) deleted; rows 2 and 4 (x IS NULL) KEPT — the SQL
       // DELETE contract; a bare where(!cond) would drop them too
       assert(kept == Set(2L, 3L, 4L), s"$name kept $kept")
     }
+  }
+
+  test("a widening update leaves every dir of the new version in the committed type") {
+    import graft.sources.{IndexRegistry, Snapshots}
+    import org.apache.spark.sql.types.LongType
+    import spark.implicits._
+    val t = s"$tmp/widen_update"
+    Snapshots.deleteRecursively(t)
+    Snapshots.commitOverwrite(Seq((1L, 1), (2L, 2)).toDF("k", "x"), t)
+    Snapshots.commitAppend(Seq((3L, 3), (4L, 4)).toDF("k", "x"), t)
+    // the match lives in the second dir only, but the int column turns
+    // bigint in every row: no dir may keep the old type
+    val (v, _) = IndexRegistry.updateWhere(spark, t, col("k") === 3L, "x", lit(10000000000L))
+    assert(Snapshots.schemaOf(t, v).map(_("x").dataType).contains(LongType))
+    val dirTypes = Snapshots.versionDirs(t, v).map(d => spark.read.parquet(d).schema("x").dataType)
+    assert(dirTypes.forall(_ == LongType), s"dirs typed $dirTypes under a bigint schema")
+    assert(Snapshots.read(spark, t).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 1L, 2L -> 2L, 3L -> 10000000000L, 4L -> 4L))
   }
 
   test("changesBetween on a schema-evolved history reads both sides in the committed schema") {
@@ -1253,11 +1252,10 @@ class SourcesSpec extends SparkSpec {
     check("commitOverwrite", t, want)
     Snapshots.commitAppend(o.where(col("o_custkey") % 2 === 1), t)
     check("commitAppend", t, want)
-    assert(Snapshots.deleteWhereSelective(spark, t, col("o_orderkey") === 1L).isDefined)
-    check("deleteWhereSelective", t, want)
-    assert(Snapshots.updateWhereSelective(spark, t,
-      col("o_orderkey") === 2L, "o_orderstatus", lit("X")).isDefined)
-    check("updateWhereSelective", t, want)
+    Snapshots.deleteWhere(spark, t, col("o_orderkey") === 1L)
+    check("deleteWhere", t, want)
+    Snapshots.updateWhere(spark, t, col("o_orderkey") === 2L, "o_orderstatus", lit("X"))
+    check("updateWhere", t, want)
     val z = s"$root/zbase"
     Snapshots.commitClustered(o, z, Seq("o_orderkey", "o_custkey"), files = 4)
     check("commitClustered", z, want)
@@ -1341,8 +1339,7 @@ class SourcesSpec extends SparkSpec {
     val erased = 7L
     Snapshots.commitOverwrite(o.where(col("o_orderkey") % 2 === 0), t)
     Snapshots.commitAppend(o.where(col("o_orderkey") % 2 === 1), t)
-    val vDel = Snapshots.deleteWhereSelective(spark, t, col("o_custkey") === erased)
-      .getOrElse(fail("selective delete aborted"))
+    val vDel = Snapshots.deleteWhere(spark, t, col("o_custkey") === erased)
     def feed() = {
       val (ins, del) = Snapshots.changesBetween(spark, t, vDel - 1, vDel)
       (ins.collect().map(_.toSeq).toSet, del.collect().map(_.toSeq).toSet)
@@ -1377,17 +1374,25 @@ class SourcesSpec extends SparkSpec {
       Snapshots.commitOverwrite(
         (1L to 200L).map(k => (k, k % 10, "a")).toDF("k", "g", "s"), t)
       val added = (1000L * round until 1000L * round + 50).map(k => (k, 1L, "a"))
-      // neither DML predicate matches an appended row
+      // no DML matches an appended row; the merge replaces k = 4 and
+      // inserts k = 900, both as "b", so any order ends the same
       graft.Par.run(
         () => Snapshots.commitAppend(added.toDF("k", "g", "s"), t),
         () => Snapshots.deleteWhere(spark, t, col("g") === 0L && col("k") < 1000L),
-        () => Snapshots.updateWhere(spark, t, col("k") < 1000L, "s", lit("b")))
+        () => Snapshots.updateWhere(spark, t, col("k") < 1000L, "s", lit("b")),
+        () => Snapshots.deleteBatch(spark, t, col("g") === 1L && col("k") < 1000L,
+          "dml_race", round.toLong),
+        () => Snapshots.deleteMatching(spark, t, "k", Seq(2L, 3L).toDF("k")),
+        () => Snapshots.merge(spark, t, Seq((4L, 4L, "b"), (900L, 5L, "b"))
+          .toDF("k", "g", "s"), "k"))
       val got = Snapshots.read(spark, t).select("k", "s").collect()
         .map(r => r.getLong(0) -> r.getString(1)).toMap
       assert(added.forall { case (k, _, s) => got.get(k).contains(s) },
         s"round $round: a racing DML dropped appended rows")
-      assert(got.size == 200 - 20 + 50, s"round $round: ${got.size} rows")
-      assert(got.count(_._2 == "b") == 180, s"round $round: the update was lost")
+      assert(got.size == 200 - 20 - 20 - 2 + 1 + 50, s"round $round: ${got.size} rows")
+      assert(got.count(_._2 == "b") == 159, s"round $round: the update or the merge was lost")
+      assert(Seq(2L, 3L, 10L, 11L).forall(k => !got.contains(k)) && got.contains(900L),
+        s"round $round: a delete or the merge was lost")
     }
   }
 }
